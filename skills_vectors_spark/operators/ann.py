@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skills_vectors_spark import sources
+from skills_vectors_spark import cache, sources
 from skills_vectors_spark.functions.vector import cosine_sim
 from skills_vectors_spark.operators.knn import K, N_QUERIES
 from skills_vectors_spark.registry import register
@@ -133,7 +133,6 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, then exact cosine re-rank of candidates only. Bucket join
     replaces the knn_exact cross join — candidate count is ~corpus /
     2^bits per table, independent of total corpus size."""
-    from skills_vectors_spark.cache import cached_df
 
     emb = sources.load(spark, sf_dir, "embeddings")
     # the query side is tiny (N_QUERIES rows): bucket it in its own
@@ -147,7 +146,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_sp = sources.load_spread(
         spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
     )
-    buckets_c = cached_df(
+    buckets_c = cache.cached_df(
         "lsh_buckets_c", spark, sf_dir, lambda: hyperplane_buckets(emb_sp, spread=False)
     ).withColumnRenamed("vec_id", "c_id")
     q = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -312,8 +311,9 @@ MAX_TRAIN = 16384  # coarse-quantizer training sample cap
 
 # The coarse quantizer is an INDEX — the reference builds it once at
 # load time (load_skill_vectors_pg.py:48-59) and searches many times.
-# Cache the fitted centroids per corpus so repeated searches skip the
-# fit, mirroring that build/search split.
+# The fitted centroids (and the PQ codebooks below) are result
+# entries of the session store (cache.py), keyed by corpus, so
+# repeated searches skip the fit and cache.clear() retrains.
 #
 # Training runs driver-side on a bounded uniform sample (numpy
 # Lloyd's): this is the standard IVF recipe — FAISS trains coarse
@@ -321,7 +321,39 @@ MAX_TRAIN = 16384  # coarse-quantizer training sample cap
 # set is MAX_TRAIN rows, a constant. The full corpus is never
 # collected; only assignment (below) touches it, and that is a
 # per-row codegen expression with no shuffle.
-_IVF_CENTROIDS: dict[str, list[list[float]]] = {}
+
+
+def _train_sample(emb: DataFrame) -> np.ndarray | None:
+    """(n, DIM) float64 driver-side training sample of at most
+    MAX_TRAIN rows; None on an empty corpus."""
+    rows = emb.select("embedding").limit(MAX_TRAIN).toPandas()["embedding"].to_numpy()
+    return np.stack(rows).astype(np.float64) if len(rows) else None
+
+
+def corpus_sample(spark: SparkSession, sf_dir: str) -> np.ndarray | None:
+    """Training sample of every corpus quantizer (IVF, PQ, PCA). Always
+    the full-width spread frame: the limit(MAX_TRAIN) sample rides
+    partition order, so the training frame's partitioning fixes the
+    seeded k-means init and with it every IVF/PQ result (verified by
+    bit-diff, r14). One frame for every trainer keeps the quantizers
+    independent of which query trained first."""
+    return _train_sample(sources.load_spread(spark, sf_dir, "embeddings"))
+
+
+def _kmeans(sample: np.ndarray, k: int, rng: np.random.Generator) -> np.ndarray:
+    """(k, d) centroids: 10 Lloyd rounds from a seeded random init."""
+    # replace only when the sample is smaller than k (degenerate tiny
+    # corpus); normal tiers keep replace=False
+    cent = sample[rng.choice(len(sample), k, replace=len(sample) < k)].copy()
+    for _ in range(10):
+        # argmin_c ||x - c||^2 = argmin_c (||c||^2 - 2 x.c)
+        d = (cent**2).sum(axis=1)[None, :] - 2.0 * (sample @ cent.T)
+        assign = d.argmin(axis=1)
+        for c in range(k):
+            members = sample[assign == c]
+            if len(members):
+                cent[c] = members.mean(axis=0)
+    return cent
 
 
 def train_ivf_centroids(
@@ -329,55 +361,37 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Lloyd's k-means on a bounded driver-side sample — the coarse-
     quantizer training step (corpus-size-independent: MAX_TRAIN rows)."""
-    rows = emb.select("embedding").limit(MAX_TRAIN).toPandas()["embedding"].to_numpy()
-    if not len(rows):
+    sample = _train_sample(emb)
+    if sample is None:
         # empty corpus (an empty daily increment is routine at scale):
         # no centroids — consumers degrade to empty results, not a
         # np.stack crash
         return []
-    sample = np.stack(rows).astype(np.float64)
-    rng = np.random.default_rng(seed)
-    # replace only when the sample is smaller than the cell count
-    # (degenerate tiny corpus); normal tiers keep replace=False
-    cent = sample[
-        rng.choice(len(sample), n_cells, replace=len(sample) < n_cells)
-    ].copy()
-    for _ in range(10):
-        # argmin_c ||x - c||^2 = argmin_c (||c||^2 - 2 x.c)
-        d = (cent**2).sum(axis=1)[None, :] - 2.0 * (sample @ cent.T)
-        assign = d.argmin(axis=1)
-        for c in range(n_cells):
-            members = sample[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
+    cent = _kmeans(sample, n_cells, np.random.default_rng(seed))
     return [[float(x) for x in c] for c in cent]
 
 
-def ivf_centroids(spark: SparkSession, sf_dir: str, emb: DataFrame) -> list[list[float]]:
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = train_ivf_centroids(emb)
-    return _IVF_CENTROIDS[sf_dir]
+def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    return cache.memo(
+        spark,
+        ("ivf_centroids", sf_dir),
+        # the same full-width frame as corpus_sample — see there
+        lambda: train_ivf_centroids(sources.load_spread(spark, sf_dir, "embeddings")),
+    )
 
 
-# Per-(application, sf_dir) memo of the query-vector slice: ann_pq
-# and ann_ivf_pq each pulled the N_QUERIES rows to the driver with
-# their own filter+toPandas job (r13 verdict item 7 — shared probe
-# subtrees). Bounded at N_QUERIES rows, in-run only (keyed by
-# applicationId like _NULL_BAL_PROBE), cold per driver run.
-_QUERY_ROWS: dict = {}
-
-
-def _query_rows(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _QUERY_ROWS.get(key)
-    if df is None:
-        df = _QUERY_ROWS[key] = (
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "embedding")
-            .toPandas()
-            .sort_values("vec_id")
-        )
-    return df
+def _query_rows(spark: SparkSession, sf_dir: str):
+    """The N_QUERIES query vectors on the driver, shared by ann_pq and
+    ann_ivf_pq (one filter+toPandas job per session, not one each)."""
+    return cache.memo(
+        spark,
+        ("query_rows", sf_dir),
+        lambda: sources.load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .toPandas()
+        .sort_values("vec_id"),
+    )
 
 
 def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
@@ -429,17 +443,14 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_PROBE nearest centroids -> exact re-rank within probed cells.
     Corpus scan per query drops to nprobe/ncells of the data; at
     100 TB the cell assignment is the partitioning key."""
-    # centroid TRAINING keeps the full-width spread frame: the
-    # limit(MAX_TRAIN) sample rides partition order, so changing the
-    # training frame's partitioning changes the seeded KMeans init
-    # and with it every IVF/PQ result (verified by bit-diff, r14).
-    # Only the per-row Arrow passes below read the byte-budgeted
-    # frame — identical rows, bounded task fan-out.
+    # centroid training reads its own full-width frame (see
+    # corpus_sample); the per-row Arrow passes below read the
+    # byte-budgeted frame — identical rows, bounded task fan-out
     emb = sources.load_spread(spark, sf_dir, "embeddings")
     emb_sp = sources.load_spread(
         spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
     )
-    cents = ivf_centroids(spark, sf_dir, emb)
+    cents = ivf_centroids(spark, sf_dir)
     if not cents:  # empty corpus: nothing to index or search
         return spark.createDataFrame(
             [], "q_id long, rnk long, c_id long, cos_sim double"
@@ -454,9 +465,8 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # naive corpus x centroids explode + window, which shuffles
     # N_CELLS x corpus rows). Persisted per session: the assignment
     # IS the IVF index and every search probes the same table.
-    from skills_vectors_spark.cache import cached_df
 
-    assigned = cached_df(
+    assigned = cache.cached_df(
         "ivf_assigned", spark, sf_dir, lambda: assign_cells(emb_sp, cents)
     )
     # queries don't need their own cell — pull them straight from the
@@ -536,7 +546,6 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from skills_vectors_spark.functions.vector import cosine_sim as _cos
     from skills_vectors_spark.operators.knn import K, N_QUERIES, ranked_knn
 
-    from skills_vectors_spark.cache import cached_df
 
     gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
 
@@ -559,7 +568,7 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced twice below (recall semi-join + similarity join);
     # without a persist each reference re-runs ALL THREE backend
     # pipelines — at scale that doubles three corpus-wide passes
-    allr = cached_df("eval_backend_allr", spark, sf_dir, build_allr)
+    allr = cache.cached_df("eval_backend_allr", spark, sf_dir, build_allr)
 
     emb = sources.load(spark, sf_dir, "embeddings")
     qv = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
@@ -662,37 +671,27 @@ PQ_K = 16  # centroids per subspace -> 4 bits; code = 8 bytes/vector
 # not change any stage's asymptotic shape.
 PQ_OVERSHOOT = 32
 
-_PQ_CODEBOOKS: dict[str, np.ndarray] = {}
+def _fit_pq(sample: np.ndarray | None, seed: int) -> np.ndarray:
+    """(M, K, d/M) codebooks: one k-means per subspace, all drawing
+    their inits from one rng in subspace order."""
+    if sample is None:
+        # empty corpus: zero-width codebooks; the search path returns
+        # empty before they are ever applied
+        return np.zeros((PQ_M, PQ_K, 0))
+    d_sub = sample.shape[1] // PQ_M
+    rng = np.random.default_rng(seed)
+    return np.stack(
+        [_kmeans(sample[:, m * d_sub : (m + 1) * d_sub], PQ_K, rng) for m in range(PQ_M)]
+    )
 
 
-def pq_codebooks(spark: SparkSession, sf_dir: str, emb: DataFrame) -> np.ndarray:
+def pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """(M, K, DIM/M) product-quantization codebooks, trained
     driver-side on a bounded sample exactly like the IVF coarse
     quantizer (per-subspace Lloyd's) — the index-build step."""
-    if sf_dir not in _PQ_CODEBOOKS:
-        rows = emb.select("embedding").limit(MAX_TRAIN).toPandas()["embedding"].to_numpy()
-        if not len(rows):
-            # empty corpus: zero-width codebooks; the search path
-            # returns empty before they are ever applied
-            _PQ_CODEBOOKS[sf_dir] = np.zeros((PQ_M, PQ_K, 0))
-            return _PQ_CODEBOOKS[sf_dir]
-        sample = np.stack(rows).astype(np.float64)
-        d_sub = sample.shape[1] // PQ_M
-        rng = np.random.default_rng(SEED)
-        books = np.empty((PQ_M, PQ_K, d_sub))
-        for m in range(PQ_M):
-            sub = sample[:, m * d_sub : (m + 1) * d_sub]
-            cent = sub[rng.choice(len(sub), PQ_K, replace=len(sub) < PQ_K)].copy()
-            for _ in range(10):
-                d = (cent**2).sum(axis=1)[None, :] - 2.0 * (sub @ cent.T)
-                assign = d.argmin(axis=1)
-                for c in range(PQ_K):
-                    members = sub[assign == c]
-                    if len(members):
-                        cent[c] = members.mean(axis=0)
-            books[m] = cent
-        _PQ_CODEBOOKS[sf_dir] = books
-    return _PQ_CODEBOOKS[sf_dir]
+    return cache.memo(
+        spark, ("pq_codebooks", sf_dir), lambda: _fit_pq(corpus_sample(spark, sf_dir), SEED)
+    )
 
 
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,10 +704,9 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     gathers; top candidates get an exact cosine re-rank (the same
     overshoot-then-verify shape as the reference's gold query,
     skills_for_jobs.py:363,371-379)."""
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    books = pq_codebooks(spark, sf_dir, emb)  # (M, K, d_sub)
+    books = pq_codebooks(spark, sf_dir)  # (M, K, d_sub)
     d_sub = books.shape[2]
-    q_rows = _query_rows(spark, sf_dir, emb)
+    q_rows = _query_rows(spark, sf_dir)
     if not len(q_rows):  # empty corpus / no query slice: empty result
         return spark.createDataFrame(
             [], "q_id long, rnk long, c_id long, cos_sim double"
@@ -762,7 +760,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # byte-budgeted scan for the ADC scoring pass (results are
     # partition-independent: each partition emits its local top
     # n_cand, a superset of the global top n_cand); the codebook
-    # TRAINING above keeps the full-width frame — see ann_ivf
+    # training keeps the full-width frame — see corpus_sample
     emb_sp = sources.load_spread(
         spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
     )
@@ -794,41 +792,21 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------- IVF + PQ
 
-_PQRES_CODEBOOKS: dict[str, np.ndarray] = {}
-
-
-def pq_residual_codebooks(spark: SparkSession, sf_dir: str, emb: DataFrame) -> np.ndarray:
+def pq_residual_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """PQ codebooks trained on RESIDUALS (x - nearest centroid) — the
     FAISS IVFADC formulation: the coarse quantizer removes the
     between-cell variance, so the 4-bit-per-subspace budget is spent
     on the (much smaller) within-cell displacement."""
-    if sf_dir not in _PQRES_CODEBOOKS:
-        rows = (
-            emb.select("embedding").limit(MAX_TRAIN).toPandas()["embedding"].to_numpy()
-        )
-        if not len(rows):
-            _PQRES_CODEBOOKS[sf_dir] = np.zeros((PQ_M, PQ_K, 0))
-            return _PQRES_CODEBOOKS[sf_dir]
-        sample = np.stack(rows).astype(np.float64)
-        C = np.array(ivf_centroids(spark, sf_dir, emb), dtype=np.float64)
-        cell = ((C**2).sum(axis=1)[None, :] - 2.0 * (sample @ C.T)).argmin(axis=1)
-        resid = sample - C[cell]
-        d_sub = resid.shape[1] // PQ_M
-        rng = np.random.default_rng(SEED + 1)
-        books = np.empty((PQ_M, PQ_K, d_sub))
-        for m in range(PQ_M):
-            sub = resid[:, m * d_sub : (m + 1) * d_sub]
-            cent = sub[rng.choice(len(sub), PQ_K, replace=len(sub) < PQ_K)].copy()
-            for _ in range(10):
-                d = (cent**2).sum(axis=1)[None, :] - 2.0 * (sub @ cent.T)
-                assign = d.argmin(axis=1)
-                for c in range(PQ_K):
-                    members = sub[assign == c]
-                    if len(members):
-                        cent[c] = members.mean(axis=0)
-            books[m] = cent
-        _PQRES_CODEBOOKS[sf_dir] = books
-    return _PQRES_CODEBOOKS[sf_dir]
+
+    def fit() -> np.ndarray:
+        sample = corpus_sample(spark, sf_dir)
+        if sample is not None:
+            C = np.array(ivf_centroids(spark, sf_dir), dtype=np.float64)
+            cell = ((C**2).sum(axis=1)[None, :] - 2.0 * (sample @ C.T)).argmin(axis=1)
+            sample = sample - C[cell]
+        return _fit_pq(sample, SEED + 1)
+
+    return cache.memo(spark, ("pq_residual_codebooks", sf_dir), fit)
 
 
 def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,13 +823,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     The candidate join carries only (q_id, cell, c_id, code) — at
     100 TB no embedding ever crosses the wire until the final
     re-rank join fetches the few shortlisted vectors."""
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir, emb)
+    cents = ivf_centroids(spark, sf_dir)
     if not cents:  # empty corpus: nothing to index or search
         return spark.createDataFrame(
             [], "q_id long, rnk long, c_id long, cos_sim double"
         )
-    books = pq_residual_codebooks(spark, sf_dir, emb)
+    books = pq_residual_codebooks(spark, sf_dir)
     C = np.array(cents, dtype=np.float64)
     c_sq = (C**2).sum(axis=1)  # query-side probe ranking below
     d_sub = books.shape[2]
@@ -883,7 +860,6 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"vec_id": pdf["vec_id"], "cell": cell.astype("int32"), "code": code}
             )
 
-    from skills_vectors_spark.cache import cached_df
 
     # same byte-budgeted frame as ann_ivf's assignment build (the
     # shared cache key must build identically from either consumer);
@@ -891,12 +867,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_sp = sources.load_spread(
         spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
     )
-    assigned = cached_df(
+    assigned = cache.cached_df(
         "ivf_assigned", spark, sf_dir, lambda: assign_cells(emb_sp, cents)
     )
     # the (vec_id, cell, code) table IS the IVFADC index — persist per
     # session so repeated searches skip the encode pass entirely
-    index = cached_df(
+    index = cache.cached_df(
         "ivfpq_index",
         spark,
         sf_dir,
@@ -914,7 +890,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- query side: probe lists + per-(query, cell) ADC tables,
     # all driver-side over N_QUERIES rows (constant work)
-    q_rows = _query_rows(spark, sf_dir, emb)
+    q_rows = _query_rows(spark, sf_dir)
     Q = np.stack(q_rows["embedding"].to_numpy()).astype(np.float64)
     q_ids = q_rows["vec_id"].to_numpy()
     qc_d2 = c_sq[None, :] - 2.0 * (Q @ C.T)  # (nq, ncells) L2 rank
@@ -1020,7 +996,7 @@ def ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from skills_vectors_spark.scratch import scratch as _scratch
 
     emb = sources.load_spread(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir, emb)
+    cents = ivf_centroids(spark, sf_dir)
     path = _scratch(sf_dir, "ivf_index")
     idx = assign_cells(emb, cents)
     idx.write.mode("overwrite").partitionBy("cell").parquet(path)
@@ -1079,8 +1055,7 @@ def stream_ann_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrains only on drift). Bounded input -> final counts equal the
     batch assignment, asserted in tests and in the registered
     summary's matches_batch gate."""
-    emb_batch = sources.load(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir, emb_batch)
+    cents = ivf_centroids(spark, sf_dir)
     schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
@@ -1122,7 +1097,7 @@ def stream_ann_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     present on only one side fails the gate)."""
     sc = stream_ann_assign_counts(spark, sf_dir)
     emb = sources.load(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir, emb)
+    cents = ivf_centroids(spark, sf_dir)
     bc = assign_cells(emb, cents).groupBy("cell").agg(F.count("*").alias("nb"))
     j = sc.join(bc, "cell", "full_outer")
     # coalesce both aggregates for the zero-cell (empty-corpus) case:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from skills_vectors_spark import sources
+from skills_vectors_spark import cache, sources
 from skills_vectors_spark.registry import register
 from skills_vectors_spark.scratch import scratch as _scratch
 
@@ -260,11 +260,6 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# join_cross_topk's NULL-balance probe results, one entry per
-# (applicationId, sf_dir) — bounded like sources._SPREAD_DECISION
-_NULL_BAL_PROBE: dict[tuple[str, str], tuple[bool, bool]] = {}
-
-
 @register(
     "join_cross_topk",
     """
@@ -335,16 +330,12 @@ def join_cross_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # NULL-balance existence probes (see docstring): bounded 1-row
     # actions whose isNull filters push to parquet null-count stats,
-    # so a NULL-free corpus answers from row-group metadata. Memoized
-    # per (application, sf_dir) like sources._SPREAD_DECISION — the
-    # corpus under one sf_dir is immutable for a session, so repeat
-    # invocations (warm bench runs, loops) skip both probe jobs.
-    probe_key = (spark.sparkContext.applicationId, sf_dir)
-    probed = _NULL_BAL_PROBE.get(probe_key)
-    if probed is None:
-        # ONE probe job, not two: both existence checks ride one union
-        # (each arm limit-1, still answered from parquet null-count
-        # row-group stats on a NULL-free corpus)
+    # so a NULL-free corpus answers from row-group metadata. A result
+    # entry of the session store (cache.py) — the corpus under one
+    # sf_dir is immutable for a session, so repeat invocations (warm
+    # bench runs, loops) skip the probe job. ONE probe job, not two:
+    # both existence checks ride one union (each arm limit-1).
+    def probe() -> tuple[bool, bool]:
         tags = {
             r.t
             for r in (
@@ -359,8 +350,9 @@ def join_cross_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         }
-        probed = _NULL_BAL_PROBE[probe_key] = ("c" in tags, "s" in tags)
-    has_null_cust, has_null_sup = probed
+        return "c" in tags, "s" in tags
+
+    has_null_cust, has_null_sup = cache.memo(spark, ("null_bal_probe", sf_dir), probe)
     if has_null_sup:
         s = s.filter(F.col("s_acctbal").isNotNull())
 
@@ -477,16 +469,16 @@ def join_cross_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         out["s_suppkey"] = pd.array(rows["s_suppkey"], dtype="Int64")
         yield out
 
-    scanned = merged.mapInPandas(scan, out_schema)
-    # Session-lifetime cache entry, deliberate: the plan references
-    # the scanned subtree three times (kind-0 candidates, kind-1 edge
-    # suppliers, kind-2 broadcast boundary) and the r11 suite-shaped
-    # A/B measured persist 7.57 s cold / 2.65 warm vs 9.04 / 3.80
-    # without — recomputing the mapInPandas pass twice costs more
-    # than the one cache write even on a single cold action. Spark's
-    # CacheManager dedups identical plans, so repeated calls hold ONE
-    # entry per sf_dir (bounded), not one per invocation.
-    scanned = scanned.persist()
+    # Persisted, deliberate: the plan references the scanned subtree
+    # three times (kind-0 candidates, kind-1 edge suppliers, kind-2
+    # broadcast boundary) and the r11 suite-shaped A/B measured persist
+    # 7.57 s cold / 2.65 warm vs 9.04 / 3.80 without — recomputing the
+    # mapInPandas pass twice costs more than the one cache write even
+    # on a single cold action. One cached_df entry per sf_dir, dropped
+    # by cache.clear().
+    scanned = cache.cached_df(
+        "cross_topk_scanned", spark, sf_dir, lambda: merged.mapInPandas(scan, out_schema)
+    )
     cand = scanned.filter(F.col("kind") == 0).select("s_suppkey", "s_bal", "bal", "cks")
     edge_sup = scanned.filter(F.col("kind") == 1).select("s_suppkey", "s_bal")
     # global boundary rows: <= 2K per range partition, broadcast-safe.

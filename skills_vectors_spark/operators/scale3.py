@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from skills_vectors_spark import sources
+from skills_vectors_spark import cache, sources
 from skills_vectors_spark.operators.textstats import D_TOKENS
 from skills_vectors_spark.registry import register
 
@@ -590,8 +590,6 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical in both engines, so the entire sketch — not just a
     gate — is exact-oracle-checked.
     """
-    from skills_vectors_spark.cache import cached_df
-
     def build_counts() -> DataFrame:
         d = sources.load(spark, sf_dir, "documents")
         norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
@@ -602,7 +600,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # references the counts 4x, and routing through cached_df means
     # session teardown / bench cache-clear releases the blocks (the
     # r4 leak the advisor flagged)
-    cnts = cached_df("cms_token_counts", spark, sf_dir, build_counts)
+    cnts = cache.cached_df("cms_token_counts", spark, sf_dir, build_counts)
     total = cnts.agg(F.sum("cnt").alias("tot"))
     seeds = F.explode(F.array(*[F.lit(s) for s in CMS_SEEDS])).alias("seed")
     cms = (
@@ -726,10 +724,13 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filtered projection is already unique — the dedup exchange the
     # old shape paid bought nothing (oracle's DISTINCT is likewise a
     # no-op on unique keys, values unchanged)
-    build = (
-        o.filter(F.col("o_totalprice") > HIGH_VALUE)
-        .select(F.col("o_orderkey").alias("k"))
-        .cache()
+    build = cache.cached_df(
+        "bloom_build",
+        spark,
+        sf_dir,
+        lambda: o.filter(F.col("o_totalprice") > HIGH_VALUE).select(
+            F.col("o_orderkey").alias("k")
+        ),
     )
     build_n = build.count()  # scalar: sizes the filter (one driver int)
     m = max(1, BLOOM_FACTOR * build_n)
@@ -742,11 +743,13 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange is what probe_keys.distinct() cost before, the count
     # rides along for free). Cached: the Bloom probe and the audit
     # sums both read it.
-    key_counts = (
-        li.groupBy("l_orderkey")
+    key_counts = cache.cached_df(
+        "bloom_key_counts",
+        spark,
+        sf_dir,
+        lambda: li.groupBy("l_orderkey")
         .agg(F.count("*").alias("c"))
-        .withColumnRenamed("l_orderkey", "k")
-        .cache()
+        .withColumnRenamed("l_orderkey", "k"),
     )
     # the md5 bucket computation is the CPU hot spot of this pass
     # (|probe keys| x k hashes); spread() re-parallelizes the
@@ -785,9 +788,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_n = int(r["cand"] or 0)
     true_n = int(r["truth"] or 0)
     # every action that reads the cached sides has run; free their
-    # blocks rather than holding them until session teardown
-    build.unpersist()
-    key_counts.unpersist()
+    # blocks now rather than at the next cache.clear()
+    cache.evict(spark, ("df", sf_dir, "bloom_build"), ("df", sf_dir, "bloom_key_counts"))
     fp = cand_n - true_n
     # gate: no false negatives, and fp <= ceil(5% of non-member rows)
     # (integer form: 20*fp <= nonmember + 19 — engine-identical)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skills_vectors_spark import sources
+from skills_vectors_spark import cache, sources
 from skills_vectors_spark.registry import register
 
 TOPK_K = 5
@@ -230,23 +230,23 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PCA_DIM = 16  # target dimensionality (from 64)
-_PCA_BASIS: dict[str, np.ndarray] = {}
 
 
-def pca_basis(spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = PCA_DIM) -> np.ndarray:
-    """(DIM, k) principal-component basis from a bounded driver-side
-    sample: covariance + eigh, deterministic sign convention (largest-
-    magnitude coordinate positive). The train step is corpus-size-
-    independent, exactly like the IVF/PQ quantizer training."""
-    key = f"{sf_dir}:{k}"
-    if key not in _PCA_BASIS:
-        rows = emb.select("embedding").limit(16384).toPandas()["embedding"].to_numpy()
-        if not len(rows):
+def pca_basis(spark: SparkSession, sf_dir: str, k: int = PCA_DIM) -> tuple[np.ndarray, np.ndarray]:
+    """(mean, (DIM, k) principal-component basis) from the bounded
+    driver-side quantizer sample (ann.corpus_sample): covariance +
+    eigh, deterministic sign convention (largest-magnitude coordinate
+    positive). The train step is corpus-size-independent, exactly
+    like the IVF/PQ quantizer training; a session-store result entry
+    (cache.py)."""
+    from skills_vectors_spark.operators.ann import corpus_sample
+
+    def fit() -> tuple[np.ndarray, np.ndarray]:
+        sample = corpus_sample(spark, sf_dir)
+        if sample is None:
             # empty corpus: degenerate basis; the projection pass
             # never sees a batch, so the shapes only need to construct
-            _PCA_BASIS[key] = (np.zeros(0), np.zeros((0, k)))
-            return _PCA_BASIS[key]
-        sample = np.stack(rows).astype(np.float64)
+            return np.zeros(0), np.zeros((0, k))
         mu = sample.mean(axis=0)
         cov = np.cov((sample - mu).T)
         vals, vecs = np.linalg.eigh(cov)
@@ -255,8 +255,9 @@ def pca_basis(spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = PCA_DIM
             i = np.abs(basis[:, j]).argmax()
             if basis[i, j] < 0:
                 basis[:, j] = -basis[:, j]
-        _PCA_BASIS[key] = (mu, basis)
-    return _PCA_BASIS[key]
+        return mu, basis
+
+    return cache.memo(spark, ("pca_basis", sf_dir, k), fit)
 
 
 def project_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,7 +277,7 @@ def project_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conditional spread (see dedup_embed_cosine_blas): parallelize
     # the projection GEMM locally, no-op on a multi-split cluster read
     emb = sources.load_spread(spark, sf_dir, "embeddings")
-    mu, basis = pca_basis(spark, sf_dir, emb)
+    mu, basis = pca_basis(spark, sf_dir)
 
     def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -9,10 +9,11 @@ live as an `array<float>` column keyed by `vec_id` (never positional).
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from skills_vectors_spark import cache
 
 TABLES = (
     "region",
@@ -133,42 +134,17 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-# Per-SparkSession memo of loaded corpus tables: each
-# spark.read.parquet(path) pays a py4j round-trip, a file listing
-# (InMemoryFileIndex) and a footer schema read — measured 0.15-0.4 s
-# per call on the bench host, called 1-3x by nearly every query, the
-# single largest slice of the ~0.3-0.5 s per-query fixed cost (r13
-# verdict item 5). A DataFrame is an immutable plan, so the same
-# object serves every consumer. Contract: the corpus under one
-# sf_dir path is immutable for a session's lifetime — the same
-# assumption _SPREAD_DECISION and the operators' probe memos already
-# encode; a caller that rewrites a table in place must evict_loads().
-# Keyed by the session OBJECT (WeakKeyDictionary, like _VIEW_MEMO)
-# so sibling sessions get their own memo and entries die with the
-# session.
-_LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def evict_loads(spark: SparkSession, *paths: str) -> None:
-    """Forget this session's load memo for `paths` (all when empty) —
-    the seam for any caller that mutates a corpus table in place."""
-    memo = _LOAD_MEMO.get(spark)
-    if not memo:
-        return
-    if not paths:
-        memo.clear()
-        return
-    for p in paths:
-        memo.pop(p, None)
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one corpus table (memoized per session+path — see
-    _LOAD_MEMO). Plain parquet scan — Catalyst handles
+    """Scan one corpus table. Plain parquet scan — Catalyst handles
     predicate pushdown / column pruning from whatever the caller
     selects downstream.
+
+    Memoized as a session-lifetime plan entry (cache.py): each
+    spark.read.parquet(path) pays a py4j round-trip, a file listing
+    and a footer schema read — measured 0.15-0.4 s per call on the
+    bench host, called 1-3x by nearly every query. A DataFrame is an
+    immutable plan, so the same object serves every consumer; every
+    execution still scans parquet.
 
     events.ts ships as parquet timestamp[us] (isAdjustedToUTC=false),
     which Spark reads natively as TIMESTAMP_NTZ — same naive-wall-clock
@@ -181,13 +157,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     engine's µs — the same truncation DuckDB applies.
     """
     path = f"{sf_dir}/{name}.parquet"
-    memo = _LOAD_MEMO.get(spark)
-    if memo is None:
-        memo = _LOAD_MEMO[spark] = {}
-    df = memo.get(path)
-    if df is None:
-        df = memo[path] = _load_uncached(spark, path, name)
-    return df
+    return cache.memo(spark, ("load", sf_dir, name), lambda: _load_uncached(spark, path, name))
 
 
 def _load_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -216,62 +186,26 @@ def _load_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
         spark.conf.set(conf_key, prev)
 
 
-# Per-SparkSession memo of the sf_dir a temp view is bound to:
+# Temp-view bindings are session-lifetime plan entries (cache.py),
+# key ("view", name) -> the sf_dir the view is bound to:
 # createOrReplaceTempView is a ~100 ms catalog round-trip per table,
 # so re-registering the same six views on every SQL-API invocation
 # cost more than the query's own execution at bench tiers (measured
-# round-9: 0.6 s of a 0.94 s cold row). Re-registers only when the
-# requested sf_dir differs from the bound one.
-#
-# Keyed by the SESSION OBJECT (WeakKeyDictionary), not by
-# applicationId: temp views live in a session's own catalog, so a
-# sibling spark.newSession() under the same application must get its
-# own empty memo, and the memo must die with the session (advisor
-# r9). Catalog-mutating callers that bypass register_views/bind_view
-# (a raw createOrReplaceTempView / dropTempView) must call
-# evict_views so the next consumer re-binds lazily.
-_VIEW_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _view_memo(spark: SparkSession) -> dict[str, str]:
-    memo = _VIEW_MEMO.get(spark)
-    if memo is None:
-        memo = _VIEW_MEMO[spark] = {}
-    return memo
-
-
-def evict_views(spark: SparkSession, *names: str) -> None:
-    """Forget this session's binding memo for `names` (every binding
-    when called with no names) so the next register_views/bind_view
-    re-binds. The public eviction seam for tests and for any caller
-    that mutates the temp-view catalog directly."""
-    memo = _VIEW_MEMO.get(spark)
-    if not memo:
-        return
-    if not names:
-        memo.clear()
-        return
-    for n in names:
-        memo.pop(n, None)
-
-
-def view_bindings(spark: SparkSession) -> dict[str, str]:
-    """Read-only snapshot of this session's view -> sf_dir bindings
-    (observability for tests; mutate only via evict_views)."""
-    return dict(_VIEW_MEMO.get(spark) or {})
+# round-9: 0.6 s of a 0.94 s cold row). A view re-binds only when the
+# requested sf_dir differs from the bound one. Temp views live in a
+# session's own catalog, and so does the store: a sibling
+# spark.newSession() starts with no bindings. Catalog-mutating
+# callers that bypass register_views/bind_view (a raw
+# createOrReplaceTempView / dropTempView) must
+# cache.evict(spark, ("view", name)) so the next consumer re-binds.
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register every corpus table as a temp view for the SQL API
     (idempotent and memoized per SparkSession; a view re-binds
     only when pointed at a different sf_dir)."""
-    memo = _view_memo(spark)
     for n in names:
-        if memo.get(n) != sf_dir:
-            load(spark, sf_dir, n).createOrReplaceTempView(n)
-            memo[n] = sf_dir
+        bind_view(spark, n, sf_dir, lambda n=n: load(spark, sf_dir, n))
 
 
 def bind_view(spark: SparkSession, name: str, sf_dir: str, frame_fn) -> None:
@@ -280,19 +214,15 @@ def bind_view(spark: SparkSession, name: str, sf_dir: str, frame_fn) -> None:
     that expose a derived frame (e.g. a load_spread scan) to a
     spark.sql statement without paying the catalog round-trip on
     every invocation."""
-    memo = _view_memo(spark)
-    if memo.get(name) != sf_dir:
+
+    def bind() -> str:
         frame_fn().createOrReplaceTempView(name)
-        memo[name] = sf_dir
+        return sf_dir
 
-
-# Per-(application, table path) memo of the spread decision: the
-# probe runs once per table per session, not once per operator call
-# (advisor r8: the old df.rdd probe compiled a physical plan — and
-# listed the table's files — on every invocation).
-# (appId, path, budget) -> target partition count (0 = no spread),
-# or (appId, "sem", hash) -> bool for the frame-level spread()
-_SPREAD_DECISION: dict[tuple, int | bool] = {}
+    key = ("view", name)
+    if cache.memo(spark, key, bind) != sf_dir:
+        cache.evict(spark, key)
+        cache.memo(spark, key, bind)
 
 
 def _parse_bytes(s: str, default: int) -> int:
@@ -429,7 +359,7 @@ def load_spread(
 
     The probe is a driver-local stat of the table's file sizes fed
     through Spark's split-packing math (see _local_scan_splits),
-    memoized per (application, path, budget): non-local paths are
+    memoized per (session, path, budget): non-local paths are
     never probed (no plan compile, no second file listing at cluster
     scale), and repeated load_spread calls reuse the decision.
 
@@ -447,32 +377,28 @@ def load_spread(
     target, so no shuffle is ever added."""
     df = load(spark, sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path, budget_bytes)
-    # memoized target partition count; 0 = don't spread
-    tgt = _SPREAD_DECISION.get(key)
-    if tgt is None:
-        parallelism = spark.sparkContext.defaultParallelism
-        try:
-            sizes = _local_file_sizes(path)
-        except FileNotFoundError:
-            # the load() above resolved a schema, so the table exists
-            # under some layout this probe doesn't see (e.g. a path
-            # alias); don't spread — and don't memoize 'never spread'
-            # for a path that wasn't probe-able (advisor r9)
-            return df
+
+    def decide() -> int:
+        """Target partition count; 0 = don't spread."""
+        # raises FileNotFoundError before anything is memoized: the
+        # load() above resolved a schema, so the table exists under
+        # some layout this probe doesn't see (e.g. a path alias);
+        # don't spread, and don't memoize 'never spread' for a path
+        # that wasn't probe-able (advisor r9)
+        sizes = _local_file_sizes(path)
         est = _local_scan_splits(spark, path)
         if est is None:
-            tgt = 0
-        else:
-            target = parallelism
-            if budget_bytes is not None and sizes is not None:
-                total = sum(sizes)
-                target = max(1, min(parallelism, -(-total // budget_bytes)))
-            tgt = target if est < target else 0
-        _SPREAD_DECISION[key] = tgt
-    if tgt:
-        df = df.repartition(tgt)
-    return df
+            return 0
+        target = spark.sparkContext.defaultParallelism
+        if budget_bytes is not None and sizes is not None:
+            target = max(1, min(target, -(-sum(sizes) // budget_bytes)))
+        return target if est < target else 0
+
+    try:
+        tgt = cache.memo(spark, ("spread", sf_dir, name, budget_bytes), decide)
+    except FileNotFoundError:
+        return df
+    return df.repartition(tgt) if tgt else df
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -492,7 +418,7 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     missed-parallelism on small inputs, never an added shuffle.
 
     Under local[*] the compile is milliseconds against page-cached
-    files, and memoized per (application, semanticHash) so loop-hot
+    files, and memoized per (session, semanticHash) so loop-hot
     call sites (ranked_knn, embed paths) compile the probe plan once
     per distinct plan rather than per invocation (advisor r11). A
     32-bit semanticHash collision could at worst replay the other
@@ -502,10 +428,7 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     if not spark.sparkContext.master.startswith("local"):
         return df
     target = spark.sparkContext.defaultParallelism
-    key = (spark.sparkContext.applicationId, "sem", df.semanticHash())
-    dec = _SPREAD_DECISION.get(key)
-    if dec is None:
-        dec = _SPREAD_DECISION[key] = df.rdd.getNumPartitions() < target
-    if dec:
-        df = df.repartition(target)
-    return df
+    dec = cache.memo(
+        spark, ("spread", df.semanticHash()), lambda: df.rdd.getNumPartitions() < target
+    )
+    return df.repartition(target) if dec else df

@@ -132,7 +132,7 @@ def test_stream_ann_assign_matches_batch_assignment(spark, sf_dir):
         r.cell: r.n_vectors for r in ann.stream_ann_assign_counts(spark, sf_dir).collect()
     }
     emb = sources.load(spark, sf_dir, "embeddings")
-    cents = ann.ivf_centroids(spark, sf_dir, emb)
+    cents = ann.ivf_centroids(spark, sf_dir)
     batch = {
         r.cell: r.n
         for r in ann.assign_cells(emb, cents)
@@ -141,6 +141,22 @@ def test_stream_ann_assign_matches_batch_assignment(spark, sf_dir):
         .collect()
     }
     assert streamed == batch
+
+
+def test_centroids_do_not_depend_on_first_consumer(spark, sf_dir):
+    """Every IVF consumer trains from the same full-width frame, so the
+    centroids a streaming ingest trains first equal the ones the
+    ann_ivf path trains fresh (the training frame's partitioning fixes
+    the seeded k-means init)."""
+    from skills_vectors_spark import cache
+    from skills_vectors_spark.operators import ann
+
+    cache.clear(spark)
+    ann.stream_ann_assign_counts(spark, sf_dir).collect()
+    after_stream = ann.ivf_centroids(spark, sf_dir)
+    cache.clear(spark)
+    ann.ann_ivf(spark, sf_dir)
+    assert ann.ivf_centroids(spark, sf_dir) == after_stream
 
 
 def test_index_maintenance_summary_gates(spark, sf_dir):

@@ -204,11 +204,13 @@ def test_cross_topk_one_aggregate_no_window(spark, sf_dir):
 
 def test_load_memo_returns_same_plan_and_evicts(spark, sf_dir):
     """r14 fixed-cost shave: sources.load memoizes the (immutable)
-    DataFrame plan per (session, path); evict_loads drops it."""
+    DataFrame plan per (session, path); cache.evict drops it."""
+    from skills_vectors_spark import cache
+
     a = sources.load(spark, sf_dir, "customer")
     b = sources.load(spark, sf_dir, "customer")
     assert a is b, "same session+path must reuse the loaded plan"
-    sources.evict_loads(spark, f"{sf_dir}/customer.parquet")
+    cache.evict(spark, ("load", sf_dir, "customer"))
     c = sources.load(spark, sf_dir, "customer")
-    assert c is not a, "evict_loads must force a fresh read"
+    assert c is not a, "cache.evict must force a fresh read"
     assert c.schema == a.schema

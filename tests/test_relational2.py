@@ -474,10 +474,10 @@ def test_agg_moments_limb_sums_exact_adversarial(spark):
         # purge the bind_view memo so a later agg_moments call in this
         # session re-binds instead of trusting the entry this direct
         # createOrReplaceTempView bypassed
-        from skills_vectors_spark import sources
+        from skills_vectors_spark import cache
 
         spark.catalog.dropTempView("svs_moments_lineitem")
-        sources.evict_views(spark, "svs_moments_lineitem")
+        cache.evict(spark, ("view", "svs_moments_lineitem"))
 
     def expect(uvals):
         n = len(uvals)

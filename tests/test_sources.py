@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import types as T
 
-from skills_vectors_spark import sources
+from skills_vectors_spark import cache, sources
 
 CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -78,6 +78,11 @@ def test_spread_is_a_noop_when_already_parallel(spark, sf_dir):
     assert "RoundRobinPartitioning(" + str(target) not in out._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _view_bindings(spark):
+    """This session's view name -> bound sf_dir entries."""
+    return {k[1]: v for k, v in cache.entries(spark).items() if k[0] == "view"}
+
+
 @pytest.fixture()
 def _clean_view_memo(spark):
     """Drop and evict every view binding this test touched (created OR
@@ -85,9 +90,9 @@ def _clean_view_memo(spark):
     memo. Saved entries may be bind_view DERIVED frames (not corpus
     tables), so teardown never tries to recreate a view — eviction is
     the only safe restore."""
-    saved = sources.view_bindings(spark)
+    saved = _view_bindings(spark)
     yield
-    now = sources.view_bindings(spark)
+    now = _view_bindings(spark)
     touched = {
         name
         for name in set(now) | set(saved)
@@ -95,7 +100,7 @@ def _clean_view_memo(spark):
     }
     for name in touched:
         spark.catalog.dropTempView(name)
-    sources.evict_views(spark, *touched)
+    cache.evict(spark, *(("view", name) for name in touched))
 
 
 def test_register_views_memo_skips_rebind_same_sf(spark, sf_dir, _clean_view_memo, monkeypatch):
@@ -161,23 +166,23 @@ def test_view_memo_is_per_session(spark, sf_dir, _clean_view_memo):
     sources.register_views(spark, sf_dir, names=("region",))
     sibling = spark.newSession()
     try:
-        assert sources.view_bindings(sibling) == {}, "fresh session, fresh memo"
+        assert _view_bindings(sibling) == {}, "fresh session, fresh memo"
         # without a rebind this would raise TABLE_OR_VIEW_NOT_FOUND
         sources.register_views(sibling, sf_dir, names=("region",))
         assert sibling.sql("SELECT count(*) AS c FROM region").collect()[0].c > 0
-        assert sources.view_bindings(sibling) == {"region": sf_dir}
+        assert _view_bindings(sibling) == {"region": sf_dir}
     finally:
         sibling.catalog.dropTempView("region")
-        sources.evict_views(sibling)
+        cache.evict(sibling)
 
 
 def test_evict_views_forces_rebind(spark, sf_dir, _clean_view_memo):
-    """evict_views is the public seam for catalog-mutating callers: a
+    """cache.evict is the public seam for catalog-mutating callers: a
     direct dropTempView desyncs the memo, and eviction must make the
     next register_views re-bind instead of silently skipping."""
     sources.register_views(spark, sf_dir, names=("nation",))
     spark.catalog.dropTempView("nation")
-    sources.evict_views(spark, "nation")
+    cache.evict(spark, ("view", "nation"))
     sources.register_views(spark, sf_dir, names=("nation",))
     assert spark.sql("SELECT count(*) AS c FROM nation").collect()[0].c > 0
 
@@ -205,15 +210,18 @@ def test_scan_splits_missing_path_raises_and_never_memoizes(spark, sf_dir):
     lifetime (advisor r10)."""
     with pytest.raises(FileNotFoundError):
         sources._local_scan_splits(spark, "/nonexistent/svs_gone")
-    before = dict(sources._SPREAD_DECISION)
+    before = cache.entries(spark)
     # end-to-end: a table that vanishes between load() and the probe
     # cannot happen through the public API (load() resolves eagerly),
     # so pin the contract at the probe layer: no new memo entries for
     # paths that were never stat-able.
-    # (len==2 keys are the (appId, path) probe entries; spread() also
-    # memoizes (appId, "sem", semanticHash) keys that carry no path)
+    # (("spread", sf_dir, name, budget) keys are the per-table probe
+    # entries; spread() also memoizes ("spread", semanticHash) keys
+    # that carry no path)
     assert all(
-        os.path.exists(k[1].removeprefix("file://")) for k in before if len(k) == 2
+        os.path.exists(f"{k[1]}/{k[2]}.parquet".removeprefix("file://"))
+        for k in before
+        if k[0] == "spread" and len(k) == 4
     )
 
 
