@@ -229,17 +229,10 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summarizes, so at scale one fact pass + a rollup cache wins; on
     # a locally-tiny fact the materialization barrier costs more than
     # the second scan saves (measured +0.3 s at sf0.1), so the cache
-    # engages only above the byte gate — and always on non-local
-    # (cluster) paths, where the fact is never trivial.
-    # probe failure (missing/renamed path) falls through to the
-    # uncached branch so the scan itself raises Spark's own
-    # AnalysisException, matching the _vocab_bcast pattern
-    # (advisor r13)
-    try:
-        sizes = sources._local_file_sizes(f"{sf_dir}/events.parquet")
-    except FileNotFoundError:
-        sizes = [0]
-    if sizes is not None and sum(sizes) < TS_CACHE_MIN_FACT_BYTES:
+    # engages only above the byte gate — and always off a local
+    # master (a cluster), where the fact is never trivial.
+    size = sources.plan_bytes(spark, sources.load(spark, sf_dir, "events"))
+    if size is not None and size < TS_CACHE_MIN_FACT_BYTES:
         hourly = _hourly()
     else:
         hourly = cached_df("ts_hourly", spark, sf_dir, _hourly)

@@ -54,22 +54,6 @@ N_PLANES = 5  # bits per table
 N_TABLES = 40  # independent hash tables (union of candidates)
 SEED = 42
 
-# Byte budget per task for the embeddings-table Arrow passes
-# (signatures, cell assignment, PQ encode/score): one numpy matmul
-# per batch is cheap per byte, so 32 near-empty partitions cost more
-# in Python-worker round trips than the matmul saves — the r13
-# minhash lesson, applied here after ann_lsh showed the same 8-core
-# inversion (r14: 4.67 s at 32 cores vs 1.75 at 8). ~256 KiB/task
-# lands sf0.1 (780 KB) on 3-4 partitions and the 10x tier (5.9 MB)
-# on ~24; a bigger tier hits the defaultParallelism clamp, and a
-# cluster path is never probed (load_spread policy) — no shuffle is
-# ever added at scale. Results are partition-independent: signatures
-# and cell assignment are per-row, and the PQ scorer emits each
-# partition's local top n_cand, a superset of the global top n_cand
-# under any partitioning.
-EMB_SPREAD_BUDGET = 256 << 10
-
-
 def _plane_matrix(dim: int = DIM) -> np.ndarray:
     """Seeded hyperplane normals for `dim`-dimensional vectors —
     deterministic per dimension, so corpus and query sides always
@@ -87,18 +71,15 @@ _SIG_SCHEMA = T.StructType(
 )
 
 
-def hyperplane_buckets(
-    df: DataFrame, id_col: str = "vec_id", spread: bool = True
-) -> DataFrame:
+def hyperplane_buckets(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """(id, table, bucket) — sign-of-dot-product bit buckets, one row
     per hash table. One numpy matmul per Arrow batch: the index-build
     hot loop stays vectorized, output is long-format for equi-joins.
 
-    ``spread=False`` skips the local repartition-for-parallelism for
-    frames bounded at a few rows by construction (the N_QUERIES query
-    side): fanning 20 rows across 32 tasks costs an exchange plus 31
-    extra Python worker round trips and buys nothing at any scale
-    (on a cluster spread() is a no-op regardless)."""
+    Runs at `df`'s own width: a corpus caller spreads its input
+    (sources.spread), while a query side bounded at a few rows is left
+    alone, since fanning 20 rows across 32 tasks costs an exchange
+    plus 31 extra Python worker round trips and buys nothing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = None
@@ -121,10 +102,7 @@ def hyperplane_buckets(
                 }
             )
 
-    proj = df.select(F.col(id_col).alias("vec_id"), "embedding")
-    if spread:
-        proj = sources.spread(df.sparkSession, proj)
-    return proj.mapInPandas(run, _SIG_SCHEMA)
+    return df.select(F.col(id_col).alias("vec_id"), "embedding").mapInPandas(run, _SIG_SCHEMA)
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,19 +118,12 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would force the full-corpus Arrow pass to execute twice. The
     # corpus bucket table is the LSH INDEX — persisted per session,
     # exactly the build-once/search-many split of a real vector store.
-    # The signature pass reads a byte-budgeted spread (r14,
-    # EMB_SPREAD_BUDGET) instead of hyperplane_buckets' own
-    # full-width spread — same rows, bounded task fan-out.
-    emb_sp = sources.load_spread(
-        spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
-    )
+    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
     buckets_c = cache.cached_df(
-        "lsh_buckets_c", spark, sf_dir, lambda: hyperplane_buckets(emb_sp, spread=False)
+        "lsh_buckets_c", spark, sf_dir, lambda: hyperplane_buckets(emb_sp)
     ).withColumnRenamed("vec_id", "c_id")
     q = emb.filter(F.col("vec_id") < N_QUERIES)
-    buckets_q = hyperplane_buckets(q, spread=False).withColumnRenamed(
-        "vec_id", "q_id"
-    )
+    buckets_q = hyperplane_buckets(q).withColumnRenamed("vec_id", "q_id")
     cand = (
         # the query bucket table is bounded at N_QUERIES*N_TABLES rows
         # — broadcast it so the corpus index side never shuffles for
@@ -444,12 +415,10 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus scan per query drops to nprobe/ncells of the data; at
     100 TB the cell assignment is the partitioning key."""
     # centroid training reads its own full-width frame (see
-    # corpus_sample); the per-row Arrow passes below read the
-    # byte-budgeted frame — identical rows, bounded task fan-out
+    # corpus_sample); the per-row Arrow passes below read the sized
+    # frame — identical rows, bounded task fan-out
     emb = sources.load_spread(spark, sf_dir, "embeddings")
-    emb_sp = sources.load_spread(
-        spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
-    )
+    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
     cents = ivf_centroids(spark, sf_dir)
     if not cents:  # empty corpus: nothing to index or search
         return spark.createDataFrame(
@@ -757,13 +726,11 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition candidates: each partition returns its local ADC
     # top keep; the global window below merges them (candidates per
     # query = keep x n_partitions upper bound, still << corpus)
-    # byte-budgeted scan for the ADC scoring pass (results are
+    # sized scan for the ADC scoring pass (results are
     # partition-independent: each partition emits its local top
     # n_cand, a superset of the global top n_cand); the codebook
     # training keeps the full-width frame — see corpus_sample
-    emb_sp = sources.load_spread(
-        spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
-    )
+    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
     cand = emb_sp.select("vec_id", "embedding").mapInPandas(score, cand_schema)
     w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), F.col("c_id"))
     shortlist = (
@@ -861,12 +828,10 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
 
-    # same byte-budgeted frame as ann_ivf's assignment build (the
-    # shared cache key must build identically from either consumer);
+    # same sized frame as ann_ivf's assignment build (the shared
+    # cache key must build identically from either consumer);
     # training frames above stay full-width — see ann_ivf
-    emb_sp = sources.load_spread(
-        spark, sf_dir, "embeddings", budget_bytes=EMB_SPREAD_BUDGET
-    )
+    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
     assigned = cache.cached_df(
         "ivf_assigned", spark, sf_dir, lambda: assign_cells(emb_sp, cents)
     )

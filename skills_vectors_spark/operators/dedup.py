@@ -340,16 +340,10 @@ def shingle_sigs(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     int64 never overflows."""
     import pandas as pd
 
-    # r14: byte-budgeted spread (the load_spread budget mechanism,
-    # measured on _term_freqs in r13). 64 KiB/task lands sf0.1 on ~10
-    # partitions instead of 32 — the signature pass is CPU-heavy per
-    # byte (128 modmul permutations per shingle) so it still wants
-    # real fan-out, but 32 near-empty tasks cost more scheduling than
-    # they buy, and every downstream consumer of the persisted base
-    # then scans 32 cached partitions per stage. A bigger tier hits
-    # the defaultParallelism clamp and keeps full width, so nothing
-    # changes at scale.
-    d = sources.load_spread(spark, sf_dir, "documents", budget_bytes=64 * 1024)
+    # sized spread: every downstream consumer of the persisted base
+    # also scans its cached partitions once per stage, so near-empty
+    # ones cost twice
+    d = sources.load_spread(spark, sf_dir, "documents", sized=True)
     toks = F.split(normalize_text("text"), " ")
     # hash tokens JVM-side: the transform runs in codegen, and the
     # Arrow batch then carries int64s, not strings. Cross-engine
@@ -1434,11 +1428,9 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     so rows-per-fp IS distinct-docs-per-fp, and the per-doc report is
     one final groupBy — two shuffles of fixed-width keys total, linear
     in corpus size, no pairwise comparison anywhere. The fingerprint
-    pass spreads under a 128 KiB/task byte budget (r13 A/B: 0.97 ->
-    0.63 s at sf0.1, 1.25 -> 1.11 s at 10x vs the full 32-way fan-out
-    — window md5s are cheap enough that near-empty tasks cost more
-    than they parallelize; no-op at cluster scale)."""
-    d = sources.load_spread(spark, sf_dir, "documents", budget_bytes=128 << 10)
+    pass reads a sized spread (r13 A/B: 0.97 -> 0.63 s at sf0.1, 1.25
+    -> 1.11 s at 10x vs the full 32-way fan-out)."""
+    d = sources.load_spread(spark, sf_dir, "documents", sized=True)
     t = d.select("doc_id", tokens_col("text").alias("toks")).withColumn(
         "n", F.size("toks")
     )

@@ -404,22 +404,11 @@ def join_cross_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_acctbal").alias("s_bal"),
         F.lit(None).cast(cks_t).alias("cks"),
     )
-    # Byte-budgeted range partition count (r14, guide §2.2/§6): the
-    # range exchange at defaultParallelism put 32 near-empty partitions
-    # under the mapInPandas scan at bench tiers — 32 Python worker
-    # round-trips, 32x the boundary rows, and a range-sampling pass
-    # sized to 32 targets, while the 8-core run was FASTER (the r13
-    # scaling inversion, ratio 0.47). Size partitions to the CUSTOMER
-    # table bytes (the dominant side) at ~128 KiB per partition,
-    # clamped to [1, defaultParallelism]: a big tier reaches full
-    # width, a cluster path (no local probe) keeps defaultParallelism.
-    n_range = spark.sparkContext.defaultParallelism
-    try:
-        _csz = sources._local_file_sizes(f"{sf_dir}/customer.parquet")
-    except FileNotFoundError:
-        _csz = None
-    if _csz is not None:
-        n_range = max(1, min(n_range, -(-sum(_csz) // (128 << 10))))
+    # range partitions sized to the CUSTOMER table (the dominant side)
+    # by the spread rule's task count: at defaultParallelism the
+    # mapInPandas scan below ran 32 near-empty partitions at bench
+    # tiers (the r13 scaling inversion, ratio 0.47)
+    n_range = sources.tasks_for(spark, sources.load(spark, sf_dir, "customer"))
     merged = v_tag.unionByName(s_tag).repartitionByRange(n_range, "bal")
 
     out_schema = (

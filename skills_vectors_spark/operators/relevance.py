@@ -35,21 +35,11 @@ from skills_vectors_spark.registry import register
 D_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 D_TOKS = f"string_split({D_NORM}, ' ')"
 
-# tokenize-pass spread budget: ~128 KiB of compressed corpus per
-# task. The r13 sweep (one process, min-of-3 per point) measured the
-# tokenize pass fastest at 4-8 partitions on sf0.1 (0.48 s vs 0.62 s
-# at full 32-way fan-out — 32 near-empty tasks cost more scheduling +
-# Python-worker fan-out than they save) while the 10x tier still
-# wants full width (monotone down to 0.73 s at 32). ceil(bytes/128Ki)
-# lands both tiers on their measured best; at cluster scale the
-# conditional spread is a no-op either way.
-TF_SPREAD_BUDGET = 128 << 10
-
 # vocab-sized dimension frames (idf weights, unigram probabilities)
 # are broadcast-hinted only while the corpus is LOCALLY small: at
 # 100 TB the vocabulary is itself huge (Heaps' law, but hundreds of
 # millions of tokens on web text) and forcing a broadcast would be
-# wrong — on a non-local path the hint is omitted and AQE picks the
+# wrong — off a local master the hint is omitted and AQE picks the
 # strategy from the runtime size it observes.
 BCAST_VOCAB_MAX_CORPUS = 64 << 20
 
@@ -93,16 +83,9 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> split on ' '."""
 
     def build() -> DataFrame:
-        # load_spread, not an unconditional repartition: locally the
-        # one-row-group scan yields a single task and the tokenize pass
-        # would run on one core; on a multi-split cluster read the
-        # partition count already exceeds default parallelism and no
-        # shuffle is added (an unconditional repartition would reshuffle
-        # the full corpus at 100 TB). The byte budget sizes the local
-        # fan-out to the work (see TF_SPREAD_BUDGET).
-        d = sources.load_spread(
-            spark, sf_dir, "documents", budget_bytes=TF_SPREAD_BUDGET
-        )
+        # sized spread: the tokenize pass is the measured case behind
+        # sources.BYTES_PER_TASK
+        d = sources.load_spread(spark, sf_dir, "documents", sized=True)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import re
@@ -142,17 +125,15 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vocab_bcast(sf_dir: str, df: DataFrame) -> DataFrame:
     """Broadcast-hint a vocab-sized dimension frame (idf weights,
     unigram probabilities) iff the corpus is locally small (<
-    BCAST_VOCAB_MAX_CORPUS on a local path). Removes the planner's
+    BCAST_VOCAB_MAX_CORPUS under a local master). Removes the planner's
     shuffle on BOTH sides of the token join at test tiers — AQE only
     converts the join AFTER the exchanges are staged — while a
-    non-local (cluster) path gets no hint at all: at 100 TB the
-    vocabulary is too large to force into executor memory, and AQE
-    decides from observed runtime sizes."""
-    try:
-        sizes = sources._local_file_sizes(f"{sf_dir}/documents.parquet")
-    except FileNotFoundError:
-        return df
-    if sizes is not None and sum(sizes) < BCAST_VOCAB_MAX_CORPUS:
+    cluster gets no hint at all: at 100 TB the vocabulary is too
+    large to force into executor memory, and AQE decides from
+    observed runtime sizes."""
+    spark = df.sparkSession
+    size = sources.plan_bytes(spark, sources.load(spark, sf_dir, "documents"))
+    if size is not None and size < BCAST_VOCAB_MAX_CORPUS:
         return F.broadcast(df)
     return df
 

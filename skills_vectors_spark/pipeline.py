@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from skills_vectors_spark import sources
 from skills_vectors_spark.functions.vector import cosine_sim, l2_dist
 
 
@@ -61,10 +62,11 @@ def build_index(
 
     emb = corpus.select(F.col(id_col).alias("vec_id"), "embedding")
     if method == "hyperplane_lsh":
+        spread = sources.spread(corpus.sparkSession, emb)
         return VectorIndex(
             method=method,
             corpus=emb.withColumnRenamed("vec_id", id_col),
-            buckets=hyperplane_buckets(emb).withColumnRenamed("vec_id", id_col),
+            buckets=hyperplane_buckets(spread).withColumnRenamed("vec_id", id_col),
             id_col=id_col,
         )
     if method == "ivf":
@@ -127,6 +129,7 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
     qe = queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
     bc = index.buckets.withColumnRenamed(index.id_col, "c_id")
     if index.method == "hyperplane_lsh":
+        # the query batch is bucketed at its own width, never spread
         bq = hyperplane_buckets(qe).withColumnRenamed("vec_id", "q_id")
         cand = (
             bq.join(bc, ["table", "bucket"])

@@ -1,14 +1,38 @@
-"""Table catalog over the parquet corpus + CSV round-trip readers.
+"""Table catalog over the parquet corpus, and the one spread rule.
 
 The reference ingests row-oriented CSV + positional .npy matrices
-(/root/reference/create_skill_embeddings.py:31,54-55). Here every
-table is a columnar parquet scan with Catalyst pushdown; embeddings
-live as an `array<float>` column keyed by `vec_id` (never positional).
+(create_skill_embeddings.py:31,54-55). Here every table is a columnar
+parquet scan with Catalyst pushdown; embeddings live as an
+`array<float>` column keyed by `vec_id` (never positional).
+
+The reference's per-row stages (embedding batches, index signatures,
+cell assignment) run here as Arrow passes over a scan, and a small
+corpus tier arrives as one parquet file with one row group, which
+parquet cannot split: every narrow stage after the scan would run as
+one task. ``spread``/``load_spread`` are the only place that decides
+how wide such a pass fans out, by one rule:
+
+- **Where it applies:** a local master only. Off one a frame is never
+  probed or repartitioned; a cluster read big enough to matter is
+  multi-split already, so no shuffle is ever added at scale.
+- **The rule:** round-robin repartition to a target only when Spark's
+  own partition count for the frame is below it.
+- **Sized vs full width:** ``load_spread(..., sized=True)`` targets
+  ``tasks_for``, the table's Catalyst plan size over
+  ``BYTES_PER_TASK`` clamped to [1, defaultParallelism]; every other
+  pass, and every ``spread`` call, targets defaultParallelism. The
+  sized passes are the per-row Arrow passes over whole tables
+  (signatures, cell assignment, PQ scoring, tokenizing, shingle
+  hashing).
+- **Training frames stay full width:** ``ann.corpus_sample`` takes
+  ``limit(MAX_TRAIN)`` rows in partition order, and that sample seeds
+  k-means, so its frame's partitioning fixes every IVF and PQ result.
+
+Operators that gate on corpus size read ``plan_bytes`` too, and take
+their at-scale branch when it is None (off a local master).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -225,210 +249,73 @@ def bind_view(spark: SparkSession, name: str, sf_dir: str, frame_fn) -> None:
         cache.memo(spark, key, bind)
 
 
-def _parse_bytes(s: str, default: int) -> int:
-    """Spark byte-size conf string -> int ('134217728b', '128m',
-    '1g' ...). Falls back to `default` on anything unparseable."""
-    v = s.strip().lower()
-    mult = 1
-    for suf, m in (("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10)):
-        if v.endswith(suf + "b"):
-            v, mult = v[: -(len(suf) + 1)], m
-            break
-        if v.endswith(suf):
-            v, mult = v[: -len(suf)], m
-            break
-    else:
-        if v.endswith("b"):
-            v = v[:-1]
-    try:
-        return int(v) * mult
-    except ValueError:
-        return default
+# Input bytes per task for the sized per-row Python passes. Measured
+# on the tokenize pass only: the r13 sweep (one process, min-of-3)
+# found sf0.1 fastest at 4-8 tasks (0.48 s vs 0.62 s at 32 and 0.69 s
+# at 1) and the 10x tier monotone down to full width (0.73 s at 32);
+# 128 KiB per task lands both on their measured best. The other sized
+# sites (shingle hashing, plane matmuls, centroid distances, PQ
+# scoring) use the same value without having been measured one by one.
+BYTES_PER_TASK = 128 << 10
 
 
-def _local_file_sizes(path: str) -> list[int] | None:
-    """Data-file byte sizes under a LOCAL table path; None when the
-    path is not on the local filesystem (an object-store / DFS URI on
-    a real cluster — there the listing itself is the cost we refuse
-    to pay). Raises FileNotFoundError on a missing/renamed path so
-    callers never memoize a decision for a table that was not there
-    to probe."""
-    if "://" in path and not path.startswith("file://"):
+def _local(spark: SparkSession) -> bool:
+    return spark.sparkContext.master.startswith("local")
+
+
+def plan_bytes(spark: SparkSession, df: DataFrame) -> int | None:
+    """Catalyst's size estimate of `df` on a local master. For a bare
+    corpus scan it is the table's data-file bytes (the file index's
+    leaf sum, hive-partitioned layouts included). None off a local
+    master, where every caller takes its at-scale branch: a cluster
+    corpus is large by assumption."""
+    if not _local(spark):
         return None
-    p = path[len("file://") :] if path.startswith("file://") else path
-    if os.path.isfile(p):
-        return [os.path.getsize(p)]
-    if os.path.isdir(p):
-        # recurse: a hive-partitioned table is nested subdirectories
-        # of data files — a top-level-only scandir would sum 0 bytes
-        # and misreport the table as single-split (advisor r9)
-        sizes = []
-        for root, dirs, files in os.walk(p):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            sizes.extend(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        return sizes
-    # missing/renamed path: let the caller decide
-    raise FileNotFoundError(p)
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def _local_scan_splits(spark: SparkSession, path: str) -> int | None:
-    """Estimated scan-split count for a LOCAL parquet table path —
-    computed from filesystem file sizes with Spark's own
-    FilePartition packing math (maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, bytesPerCore))), WITHOUT compiling a physical
-    plan or listing files through the DataFrame API.
-
-    Returns None when the path is not on the local filesystem (an
-    object-store / DFS URI on a real cluster): there the probe itself
-    is the cost we refuse to pay — listing a 100 TB table a second
-    time just to decide what would be a no-op anyway (a cluster read
-    of any table big enough to matter is multi-split by construction).
-
-    Known estimate limit, stated: parquet cannot split inside a row
-    group, so a pathological writer that packs one giant row group
-    into a >maxPartitionBytes file yields fewer EFFECTIVE partitions
-    than this byte math predicts. The corpus tiers here are
-    one-file-one-row-group SMALL files, where the estimate and the
-    physical plan agree."""
-    sizes = _local_file_sizes(path)
-    if sizes is None:
-        return None
-    total = sum(sizes)
-    if total == 0:
-        return 1
-    max_part = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"), 128 << 20
-    )
-    open_cost = _parse_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304b"), 4 << 20
-    )
-    parallelism = max(1, spark.sparkContext.defaultParallelism)
-    bytes_per_core = (total + open_cost * len(sizes)) // parallelism
-    max_split = max(1, min(max_part, max(open_cost, bytes_per_core)))
-    # Replicate FilePartition.getFilePartitions exactly: files are cut
-    # into <= maxSplitBytes chunks, chunks sorted largest-first, then
-    # greedily packed — a partition closes when the next chunk would
-    # push its BYTE size past maxSplitBytes, and every added chunk
-    # also charges openCostInBytes against the budget. The previous
-    # per-file ceil() skipped the packing step and over-counted
-    # many-small-file layouts (12 tiny files -> estimate 12 vs
-    # physical 6), which would make load_spread SKIP a needed local
-    # spread on a fragmented table (r11 property test pins agreement).
-    chunks: list[int] = []
-    for sz in sizes:
-        while sz > max_split:
-            chunks.append(max_split)
-            sz -= max_split
-        if sz:
-            chunks.append(sz)
-    chunks.sort(reverse=True)
-    n_parts, current = 0, 0
-    for c in chunks:
-        if current + c > max_split and current > 0:
-            n_parts += 1
-            current = 0
-        current += c + open_cost
-    if current > 0:
-        n_parts += 1
-    return max(1, n_parts)
+def tasks_for(spark: SparkSession, df: DataFrame) -> int:
+    """ceil(plan_bytes / BYTES_PER_TASK), clamped to [1,
+    defaultParallelism]; defaultParallelism off a local master."""
+    width = spark.sparkContext.defaultParallelism
+    size = plan_bytes(spark, df)
+    if size is None:
+        return width
+    return max(1, min(width, -(-size // BYTES_PER_TASK)))
 
 
-def load_spread(
-    spark: SparkSession, sf_dir: str, name: str, budget_bytes: int | None = None
-) -> DataFrame:
-    """Scan one corpus table, guaranteeing at least default-parallelism
-    partitions before CPU-heavy per-row work (regex tokenization,
-    n-gram extraction, hashing, binary decode).
-
-    Why: a small corpus tier ships as ONE parquet file with ONE row
-    group, and parquet can't split inside a row group — so every
-    downstream narrow stage runs as a single task and 31 of 32 local
-    cores idle (measured 4x wall on text_ngram_novelty at sf0.1). On a
-    real cluster the same operator reads thousands of splits, the
-    partition count already exceeds the target, and this is a NO-OP —
-    no shuffle is ever added at scale, which is exactly why this lives
-    behind a conditional instead of an unconditional repartition()
-    (an unconditional one would reshuffle the full corpus at 100 TB).
-    Round-robin repartition is only applied where downstream results
-    are partitioning-independent (grouped aggregations / joins whose
-    oracles are order-robust by construction).
-
-    The probe is a driver-local stat of the table's file sizes fed
-    through Spark's split-packing math (see _local_scan_splits),
-    memoized per (session, path, budget): non-local paths are
-    never probed (no plan compile, no second file listing at cluster
-    scale), and repeated load_spread calls reuse the decision.
-
-    ``budget_bytes`` sizes the spread to the WORK instead of the
-    machine: when set, the target is ceil(table_bytes / budget),
-    clamped to [1, defaultParallelism] — so a small tier fans out to
-    a handful of tasks instead of paying task-scheduling + Python
-    worker fan-out for 32 near-empty partitions, while a bigger tier
-    still reaches full width. Measured on the tokenize pass
-    (_term_freqs, r13 sweep, one process, min-of-3): sf0.1
-    0.48 s at 4-8 parts vs 0.62 s at 32 and 0.69 s at 1; 10x tier
-    monotone down to 32 parts (0.73 s) — a 128 KiB budget lands both
-    tiers on their measured best. At cluster scale the conditional
-    still short-circuits: a multi-split read already exceeds any
-    target, so no shuffle is ever added."""
+def load_spread(spark: SparkSession, sf_dir: str, name: str, sized: bool = False) -> DataFrame:
+    """`spread` over `load`: corpus table `name`, fanned out for per-row
+    work under the spread rule (module docstring). The decision is
+    memoized under ``("spread", sf_dir, name, sized)``, so
+    ``cache.evict(spark, sf_dir)`` drops it with the table's other
+    entries. A missing table raises AnalysisException from `load`
+    before any decision is stored."""
     df = load(spark, sf_dir, name)
-    path = f"{sf_dir}/{name}.parquet"
-
-    def decide() -> int:
-        """Target partition count; 0 = don't spread."""
-        # raises FileNotFoundError before anything is memoized: the
-        # load() above resolved a schema, so the table exists under
-        # some layout this probe doesn't see (e.g. a path alias);
-        # don't spread, and don't memoize 'never spread' for a path
-        # that wasn't probe-able (advisor r9)
-        sizes = _local_file_sizes(path)
-        est = _local_scan_splits(spark, path)
-        if est is None:
-            return 0
-        target = spark.sparkContext.defaultParallelism
-        if budget_bytes is not None and sizes is not None:
-            target = max(1, min(target, -(-sum(sizes) // budget_bytes)))
-        return target if est < target else 0
-
-    try:
-        tgt = cache.memo(spark, ("spread", sf_dir, name, budget_bytes), decide)
-    except FileNotFoundError:
-        return df
-    return df.repartition(tgt) if tgt else df
+    return _spread(spark, df, ("spread", sf_dir, name, sized), sized)
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Conditionally repartition an arbitrary frame to default
-    parallelism — the load_spread policy for frames that already had
-    a projection applied. No-op whenever the plan already carries
-    enough partitions (multi-split cluster reads, post-shuffle
-    frames), so no shuffle is added at scale.
+    """`df`, repartitioned round-robin to defaultParallelism when a
+    local master gives it fewer partitions. Untouched off a local
+    master and whenever the frame is already wide enough (module
+    docstring).
 
-    On a non-local master this returns the frame UNTOUCHED without
-    probing at all: a cluster read big enough to matter is multi-split
-    by construction, and the probe itself (a physical-plan compile
-    that lists the table's files) is the at-scale cost the round-8
-    advisor flagged. The accepted trade (advisor r11): a genuinely
-    single-split cluster input — a tiny dim table or driver-created
-    frame — keeps its one task; the fail direction is bounded
-    missed-parallelism on small inputs, never an added shuffle.
+    The decision (the chosen count, 0 for "left alone") is a plan
+    entry memoized per (session, semanticHash), so the probe, a
+    physical-plan compile, runs once per distinct plan rather than
+    once per call. A 32-bit semanticHash collision can at worst replay
+    another plan's local decision, never add a cluster shuffle."""
+    return _spread(spark, df, ("spread", df.semanticHash()), False)
 
-    Under local[*] the compile is milliseconds against page-cached
-    files, and memoized per (session, semanticHash) so loop-hot
-    call sites (ranked_knn, embed paths) compile the probe plan once
-    per distinct plan rather than per invocation (advisor r11). A
-    32-bit semanticHash collision could at worst replay the other
-    plan's decision: a skipped spread (missed local parallelism) or
-    an extra local repartition — never a cluster-side shuffle, since
-    non-local masters return above."""
-    if not spark.sparkContext.master.startswith("local"):
+
+def _spread(spark: SparkSession, df: DataFrame, key: tuple, sized: bool) -> DataFrame:
+    if not _local(spark):
         return df
-    target = spark.sparkContext.defaultParallelism
-    dec = cache.memo(
-        spark, ("spread", df.semanticHash()), lambda: df.rdd.getNumPartitions() < target
-    )
-    return df.repartition(target) if dec else df
+
+    def decide() -> int:
+        target = tasks_for(spark, df) if sized else spark.sparkContext.defaultParallelism
+        return target if df.rdd.getNumPartitions() < target else 0
+
+    n = cache.memo(spark, key, decide)
+    return df.repartition(n) if n else df

@@ -114,3 +114,20 @@ def test_build_index_ivf_and_search_recall(spark, sf_dir):
     gold = {(r.q_id, r.c_id) for r in gold_df.collect()}
     recall = len(gold & approx) / len(gold)
     assert recall >= 0.7, f"facade IVF recall too low: {recall}"
+
+
+def test_lsh_search_does_not_spread_the_query_batch(spark, sf_dir):
+    """The LSH query side of pipeline.search runs at the batch's own
+    width: a few query rows fanned out round-robin cost an exchange
+    and a Python worker round trip per task and buy nothing. The
+    corpus here is already wide, so build_index's own spread is a
+    no-op and any round-robin exchange left is the query side's."""
+    from skills_vectors_spark import sources
+    from skills_vectors_spark.plans import physical_plan
+
+    emb = sources.load(spark, sf_dir, "embeddings")
+    width = spark.sparkContext.defaultParallelism
+    corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding").repartition(width, "doc_id")
+    queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), "embedding")
+    index = pipeline.build_index(corpus)
+    assert "RoundRobinPartitioning" not in physical_plan(pipeline.search(index, queries, k=10))

@@ -103,3 +103,22 @@ def test_no_unconditional_full_repartition_in_package():
         "unconditional round-robin repartition(defaultParallelism) "
         f"reintroduced at: {offenders} — use sources.spread/load_spread"
     )
+
+
+def test_no_sources_internals_outside_sources():
+    """Operators size their work through the public sources surface
+    (plan_bytes, tasks_for, spread, load_spread); a private
+    `sources._name` reached from another module is a second home of
+    the spread rule in the making."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "skills_vectors_spark"
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        if py.parent.name == "sources":
+            continue
+        for n, line in enumerate(py.read_text().splitlines(), 1):
+            if re.search(r"\bsources\._\w", line):
+                offenders.append(f"{py.relative_to(pkg)}:{n}")
+    assert not offenders, f"private sources members used at: {offenders}"

@@ -55,19 +55,29 @@ def test_events_nanos_fallback_truncates_and_restores_conf(spark, nanos_dir):
 
 def test_load_spread_parallelizes_single_partition_scan(spark, sf_dir):
     """A one-row-group parquet file scans as a single partition; the
-    spread policy must raise it to default parallelism so CPU-heavy
-    narrow stages don't run on one core (measured 4x-32x at sf0.1/10x
-    on ngram extraction and the all-pairs cosine NLJ)."""
-    plain = sources.load(spark, sf_dir, "documents")
-    spreaded = sources.load_spread(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    if plain.rdd.getNumPartitions() < target:
-        assert spreaded.rdd.getNumPartitions() == target
-    # row identity preserved
-    assert spreaded.count() == plain.count()
+    spread rule must raise it to default parallelism (full width) or
+    to tasks_for (sized) so CPU-heavy narrow stages don't run on one
+    core (measured 4x-32x at sf0.1/10x on ngram extraction and the
+    all-pairs cosine NLJ). The embeddings table is over one
+    BYTES_PER_TASK at every tier, so its sized case repartitions too."""
+    width = spark.sparkContext.defaultParallelism
+    for name in ("documents", "embeddings"):
+        plain = sources.load(spark, sf_dir, name)
+        n_plain = plain.rdd.getNumPartitions()
+        sized_target = sources.tasks_for(spark, plain)
+        assert 1 <= sized_target <= width
+        for sized, target in ((False, width), (True, sized_target)):
+            spreaded = sources.load_spread(spark, sf_dir, name, sized=sized)
+            assert spreaded.rdd.getNumPartitions() == max(target, n_plain)
+            # the memo holds the chosen count, 0 for "left alone"
+            chosen = cache.entries(spark)[("spread", sf_dir, name, sized)]
+            assert type(chosen) is int
+            assert chosen == (target if n_plain < target else 0)
+            # row identity preserved
+            assert spreaded.count() == plain.count()
 
 
-def test_spread_is_a_noop_when_already_parallel(spark, sf_dir):
+def test_spread_is_a_noop_when_already_parallel(spark, sf_dir, tmp_path):
     """The cluster-safety contract: a frame that already carries
     enough partitions must come back UNCHANGED — no shuffle is ever
     added at scale (a repartition node would show in the plan)."""
@@ -75,7 +85,30 @@ def test_spread_is_a_noop_when_already_parallel(spark, sf_dir):
     wide = sources.load(spark, sf_dir, "documents").repartition(target + 7)
     out = sources.spread(spark, wide)
     assert out.rdd.getNumPartitions() == target + 7
-    assert "RoundRobinPartitioning(" + str(target) not in out._jdf.queryExecution().optimizedPlan().toString()
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Repartition") == 1, plan
+    assert cache.entries(spark)[("spread", wide.semanticHash())] == 0
+    # a table stored as many files already scans wide: both sized and
+    # full-width load_spread leave it alone
+    d = str(tmp_path)
+    wide.write.parquet(f"{d}/documents.parquet")
+    n_scan = sources.load(spark, d, "documents").rdd.getNumPartitions()
+    assert n_scan >= target
+    for sized in (False, True):
+        out = sources.load_spread(spark, d, "documents", sized=sized)
+        assert out.rdd.getNumPartitions() == n_scan
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "Repartition" not in plan, plan
+        assert cache.entries(spark)[("spread", d, "documents", sized)] == 0
+    cache.evict(spark, d)
+
+
+def test_plan_bytes_is_the_on_disk_table_size(spark, sf_dir):
+    """Every sized decision and size gate rests on plan_bytes of a
+    bare scan being the table's data-file bytes."""
+    for name in sources.TABLES:
+        on_disk = os.path.getsize(f"{sf_dir}/{name}.parquet")
+        assert sources.plan_bytes(spark, sources.load(spark, sf_dir, name)) == on_disk, name
 
 
 def _view_bindings(spark):
@@ -187,83 +220,48 @@ def test_evict_views_forces_rebind(spark, sf_dir, _clean_view_memo):
     assert spark.sql("SELECT count(*) AS c FROM nation").collect()[0].c > 0
 
 
-def test_scan_splits_recurses_partitioned_layout(spark, sf_dir):
+def test_plan_bytes_recurses_partitioned_layout(spark, sf_dir):
     """A hive-partitioned table is NESTED subdirectories of data
-    files; the split estimate must sum the leaf files, not the (zero)
-    top-level ones (advisor r10)."""
+    files: a nested copy of a table must size, and spread, exactly like
+    the flat file — leaf files counted, `_`-prefixed metadata pruned
+    (advisor r10)."""
     d = tempfile.mkdtemp(prefix="svs_nested_")
-    flat = sources._local_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
-    os.makedirs(f"{d}/lang=en", exist_ok=True)
-    os.makedirs(f"{d}/_delta_log", exist_ok=True)  # must be pruned
-    src = f"{sf_dir}/lineitem.parquet"
-    data = open(src, "rb").read()
-    open(f"{d}/lang=en/part-0.parquet", "wb").write(data)
-    open(f"{d}/_delta_log/0.json", "wb").write(b"x" * (64 << 20))
-    open(f"{d}/_SUCCESS", "wb").close()
-    nested = sources._local_scan_splits(spark, d)
-    assert nested == flat, "nested leaf file must count like the flat file"
+    table = f"{d}/lineitem.parquet"
+    os.makedirs(f"{table}/lang=en", exist_ok=True)
+    os.makedirs(f"{table}/_delta_log", exist_ok=True)  # must be pruned
+    data = open(f"{sf_dir}/lineitem.parquet", "rb").read()
+    open(f"{table}/lang=en/part-0.parquet", "wb").write(data)
+    open(f"{table}/_delta_log/0.json", "wb").write(b"x" * (64 << 20))
+    open(f"{table}/_SUCCESS", "wb").close()
+    flat, nested = (sources.load(spark, s, "lineitem") for s in (sf_dir, d))
+    assert sources.plan_bytes(spark, nested) == sources.plan_bytes(spark, flat) == len(data)
+    assert (
+        sources.load_spread(spark, d, "lineitem", sized=True).rdd.getNumPartitions()
+        == sources.load_spread(spark, sf_dir, "lineitem", sized=True).rdd.getNumPartitions()
+    )
+    assert cache.entries(spark)[("spread", d, "lineitem", True)] == cache.entries(spark)[
+        ("spread", sf_dir, "lineitem", True)
+    ]
+    cache.evict(spark, d)
 
 
-def test_scan_splits_missing_path_raises_and_never_memoizes(spark, sf_dir):
-    """A missing/renamed path must raise (so load_spread skips the
-    decision) rather than memoize 'never spread' for the application's
-    lifetime (advisor r10)."""
-    with pytest.raises(FileNotFoundError):
-        sources._local_scan_splits(spark, "/nonexistent/svs_gone")
-    before = cache.entries(spark)
-    # end-to-end: a table that vanishes between load() and the probe
-    # cannot happen through the public API (load() resolves eagerly),
-    # so pin the contract at the probe layer: no new memo entries for
-    # paths that were never stat-able.
-    # (("spread", sf_dir, name, budget) keys are the per-table probe
-    # entries; spread() also memoizes ("spread", semanticHash) keys
-    # that carry no path)
+def test_load_spread_missing_table_raises_and_never_memoizes(spark, sf_dir):
+    """A missing/renamed table must raise from `load` before any
+    spread decision is stored, rather than memoize 'never spread' for
+    the session's lifetime (advisor r10)."""
+    from pyspark.sql.utils import AnalysisException
+
+    gone = "/nonexistent/svs_gone"
+    for sized in (False, True):
+        with pytest.raises(AnalysisException):
+            sources.load_spread(spark, gone, "documents", sized=sized)
+    entries = cache.entries(spark)
+    assert not [k for k in entries if len(k) > 1 and k[1] == gone]
+    # every per-table decision, ("spread", sf_dir, name, sized), names
+    # a table that exists (spread() keys are ("spread", semanticHash)
+    # and carry no path)
     assert all(
         os.path.exists(f"{k[1]}/{k[2]}.parquet".removeprefix("file://"))
-        for k in before
+        for k in entries
         if k[0] == "spread" and len(k) == 4
     )
-
-
-def test_scan_splits_estimate_matches_physical_partitions(spark):
-    """The probe's FilePartition packing math must agree with the
-    partition count Spark actually produces for representative local
-    layouts — one small file, many small files (openCost-dominated
-    packing), and a file larger than maxPartitionBytes (row-group
-    limits make the BYTE estimate an upper bound there; for the
-    spread decision only the `estimate < target` comparison matters,
-    and an over-estimate can only SKIP a local repartition, never add
-    a cluster-side shuffle). Validates the math the r11
-    unconditional-repartition retirement stands on."""
-    import pandas as pd
-
-    d = tempfile.mkdtemp(prefix="svs_splitmath_")
-
-    # (a) one small file -> one split on both sides
-    one = f"{d}/one.parquet"
-    pd.DataFrame({"x": range(1000)}).to_parquet(one)
-    est = sources._local_scan_splits(spark, one)
-    act = spark.read.parquet(one).rdd.getNumPartitions()
-    assert est == act == 1
-
-    # (b) many small files: openCostInBytes packs several per split
-    many = f"{d}/many.parquet"
-    os.makedirs(many)
-    for i in range(12):
-        pd.DataFrame({"x": range(i * 50, i * 50 + 50)}).to_parquet(
-            f"{many}/part-{i}.parquet"
-        )
-    est = sources._local_scan_splits(spark, many)
-    act = spark.read.parquet(many).rdd.getNumPartitions()
-    assert est == act, f"packing estimate {est} != physical {act}"
-
-    # (c) estimate is monotone in total bytes: a directory with twice
-    # the files never estimates fewer splits
-    more = f"{d}/more.parquet"
-    os.makedirs(more)
-    for i in range(24):
-        pd.DataFrame({"x": range(i * 50, i * 50 + 50)}).to_parquet(
-            f"{more}/part-{i}.parquet"
-        )
-    est2 = sources._local_scan_splits(spark, more)
-    assert est2 >= est
