@@ -1,1 +1,7 @@
-from skills_vectors_spark.functions.vector import cosine_sim, dot, l2_dist, l2_norm  # noqa: F401
+from skills_vectors_spark.functions.vector import (  # noqa: F401
+    cosine_from_norms,
+    cosine_sim,
+    dot,
+    l2_dist,
+    l2_norm,
+)

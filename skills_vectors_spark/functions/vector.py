@@ -21,9 +21,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
 def dot(a: Column | str, b: Column | str) -> Column:
     """Sequential left-fold dot product in double precision."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
+    a, b = _col(a), _col(b)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -33,6 +37,24 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
+
+
+def cosine_from_norms(
+    a: Column | str,
+    b: Column | str,
+    a_norm: Column | str | None = None,
+    b_norm: Column | str | None = None,
+) -> Column:
+    """Cosine similarity over supplied norms: one fold per pair. A
+    pair-scoring join computes `l2_norm` once per row on each side,
+    below the join, and passes the columns here; the result equals
+    `cosine_sim` bit for bit (same folds, same operand order). A norm
+    left as None is folded here, per pair, after the dot product, so
+    `cosine_sim`'s plan keeps its lambda names too."""
+    ab = dot(a, b)
+    a_norm = l2_norm(a) if a_norm is None else _col(a_norm)
+    b_norm = l2_norm(b) if b_norm is None else _col(b_norm)
+    return ab / F.nullif(a_norm * b_norm, F.lit(0.0))
 
 
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
@@ -47,11 +69,11 @@ def cosine_sim(a: Column | str, b: Column | str) -> Column:
     the zero-vector case to -1.0, so zero-norm rows are outside the
     oracle parity contract (the test corpus embeddings are non-zero
     by construction; the kernel's NULL is pinned by a unit test)."""
-    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
+    return cosine_from_norms(a, b)
 
 
 def l2_dist(a: Column | str, b: Column | str) -> Column:
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
+    a, b = _col(a), _col(b)
     return F.sqrt(
         F.aggregate(
             F.zip_with(a, b, lambda x, y: F.pow(x.cast("double") - y.cast("double"), F.lit(2))),

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import cache, sources
-from skills_vectors_spark.functions.vector import cosine_sim
+from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_norm
 from skills_vectors_spark.operators.knn import K, N_QUERIES
 from skills_vectors_spark.registry import register
 
@@ -133,12 +133,18 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "c_id")
         .distinct()
     )
-    qv = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    cv = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
+    # norms once per row, below the joins: the pair projection folds
+    # only the dot product
+    qv = emb.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    ).withColumn("q_norm", l2_norm("q_emb"))
+    cv = emb.select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
+    ).withColumn("c_norm", l2_norm("c_emb"))
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
-        .withColumn("score", cosine_sim("q_emb", "c_emb"))
+        .withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
     return (
@@ -440,10 +446,11 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # queries don't need their own cell — pull them straight from the
     # source so the assignment pass only ever runs once (filters do
-    # not push through mapInPandas)
+    # not push through mapInPandas). Norms are taken once per row on
+    # each side, below the re-rank join.
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    ).withColumn("q_norm", l2_norm("q_emb"))
     # rank centroids per query by cosine, keep N_PROBE
     qc = q.crossJoin(F.broadcast(centers)).withColumn(
         "c_score", cosine_sim("q_emb", "center")
@@ -452,15 +459,18 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         qc.withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= N_PROBE)
-        .select("q_id", "q_emb", "cell")
+        .select("q_id", "q_emb", "q_norm", "cell")
     )
     # probes is bounded at N_QUERIES*N_PROBE rows — broadcast it so
     # the corpus-sized index never shuffles by the 16-value cell key
     # (the same hint ann_ivf_pq's candidate join already carries)
     cand = assigned.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_emb"),
+        l2_norm("embedding").alias("c_norm"),
+        "cell",
     ).join(F.broadcast(probes), "cell").filter(F.col("q_id") != F.col("c_id"))
-    scored = cand.withColumn("score", cosine_sim("q_emb", "c_emb"))
+    scored = cand.withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
-from skills_vectors_spark.functions.vector import cosine_sim, l2_dist
+from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_dist, l2_norm
 from skills_vectors_spark.registry import register
 
 K = 10
@@ -58,15 +58,20 @@ def ranked_knn(
     # full-corpus reshuffle is added at 100 TB.
     corpus = sources.spread(spark, emb.select(*corpus_cols))
 
-    joined = corpus.crossJoin(F.broadcast(q)).where(F.col("q_id") != F.col("c_id"))
     if metric == "cosine":
-        scored = joined.withColumn("score", cosine_sim("q_emb", "c_emb"))
+        # norms once per row on each side, below the join: the pair
+        # projection folds only the dot product
+        q = q.withColumn("q_norm", l2_norm("q_emb"))
+        corpus = corpus.withColumn("c_norm", l2_norm("c_emb"))
+        score = cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm")
         order = [F.col("score").desc(), F.col("c_id").asc()]
     elif metric == "l2":
-        scored = joined.withColumn("score", l2_dist("q_emb", "c_emb"))
+        score = l2_dist("q_emb", "c_emb")
         order = [F.col("score").asc(), F.col("c_id").asc()]
     else:
         raise ValueError(metric)
+    joined = corpus.crossJoin(F.broadcast(q)).where(F.col("q_id") != F.col("c_id"))
+    scored = joined.withColumn("score", score)
 
     w = Window.partitionBy("q_id").orderBy(*order)
     out_cols = ["q_id", "rnk", "c_id", "score"] + (["label"] if with_label else [])

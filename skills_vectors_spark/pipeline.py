@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
-from skills_vectors_spark.functions.vector import cosine_sim, l2_dist
+from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_dist, l2_norm
 
 
 def embed(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -42,7 +42,10 @@ class VectorIndex:
     """A built ANN index: the bucketed corpus plus what search needs.
     The Spark analogue of the reference's server-side index build
     (load_skill_vectors_pg.py:48-59, load_skill_vectors_milvus.py:
-    53-68): a pre-materialized table keyed for candidate equi-joins."""
+    53-68): a pre-materialized table keyed for candidate equi-joins.
+    Both methods compute `buckets` over the spread corpus
+    (sources.spread), so the persisted table is the wide stream side
+    of the search's probe join."""
 
     method: str  # "hyperplane_lsh" | "ivf"
     corpus: DataFrame  # (id, embedding)
@@ -75,11 +78,13 @@ def build_index(
         # nearest cell — the cell id IS the index
         from skills_vectors_spark.operators.ann import assign_cells, train_ivf_centroids
 
+        # trained on the un-spread frame: its limit(MAX_TRAIN) sample
+        # follows partition order and seeds k-means (see sources)
         centers = train_ivf_centroids(emb)
         return VectorIndex(
             method=method,
             corpus=emb.withColumnRenamed("vec_id", id_col),
-            buckets=assign_cells(emb, centers).select(
+            buckets=assign_cells(sources.spread(corpus.sparkSession, emb), centers).select(
                 F.col("vec_id").alias(id_col), "cell"
             ),
             id_col=id_col,
@@ -97,20 +102,28 @@ def search_exact(
     q_id_col: str = "q_id",
 ) -> DataFrame:
     """Exact top-k: broadcast the (small) query set against the
-    partitioned corpus scan, score with codegen distance expressions,
-    keep per-query top-k via WindowGroupLimit. The ground-truth tier
-    (skills_for_jobs.py:354-387)."""
+    corpus, spread first (sources.spread) so the nested-loop join
+    streams it on every core even when it is one parquet file; score
+    with codegen distance expressions, keep per-query top-k via
+    WindowGroupLimit. The ground-truth tier (skills_for_jobs.py:354-387)."""
     q = queries.select(F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col("embedding").alias("c_emb"))
-    joined = c.crossJoin(F.broadcast(q))
+    c = sources.spread(
+        corpus.sparkSession,
+        corpus.select(F.col(id_col).alias("c_id"), F.col("embedding").alias("c_emb")),
+    )
     if metric == "cosine":
-        scored = joined.withColumn("score", cosine_sim("q_emb", "c_emb"))
+        # norms once per row on each side, below the join: the pair
+        # projection folds only the dot product
+        q = q.withColumn("q_norm", l2_norm("q_emb"))
+        c = c.withColumn("c_norm", l2_norm("c_emb"))
+        score = cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm")
         order = [F.col("score").desc(), F.col("c_id").asc()]
     elif metric == "l2":
-        scored = joined.withColumn("score", l2_dist("q_emb", "c_emb"))
+        score = l2_dist("q_emb", "c_emb")
         order = [F.col("score").asc(), F.col("c_id").asc()]
     else:
         raise ValueError(metric)
+    scored = c.crossJoin(F.broadcast(q)).withColumn("score", score)
     w = Window.partitionBy("q_id").orderBy(*order)
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -135,6 +148,11 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
             bq.join(bc, ["table", "bucket"])
             .filter(F.col("q_id") != F.col("c_id"))
             .select("q_id", "c_id")
+            # one hash exchange on q_id serves the dedup, the re-rank
+            # and the top-k window. AQE keeps a keyed repartition at
+            # this width, where it would coalesce the distinct's own
+            # exchange to one task
+            .repartition(queries.sparkSession.sparkContext.defaultParallelism, "q_id")
             .distinct()
         )
     else:  # ivf: probe the N_PROBE nearest cells per query
@@ -158,14 +176,17 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
             .filter(F.col("q_id") != F.col("c_id"))
             .select("q_id", "c_id")
         )
-    qv = queries.select(F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb"))
+    # norms once per row, below the joins (as in search_exact)
+    qv = queries.select(
+        F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb")
+    ).withColumn("q_norm", l2_norm("q_emb"))
     cv = index.corpus.select(
         F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
-    )
+    ).withColumn("c_norm", l2_norm("c_emb"))
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
-        .withColumn("score", cosine_sim("q_emb", "c_emb"))
+        .withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
     return (

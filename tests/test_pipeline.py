@@ -1,9 +1,13 @@
 """End-to-end pipeline facade: embed -> index -> search -> evaluate
 -> report, the reference's full workflow in one chained Catalyst plan."""
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import pipeline, sources
+from skills_vectors_spark.functions.vector import cosine_sim
+from skills_vectors_spark.plans import physical_plan
 
 
 def test_full_pipeline_end_to_end(spark, sf_dir):
@@ -131,3 +135,144 @@ def test_lsh_search_does_not_spread_the_query_batch(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), "embedding")
     index = pipeline.build_index(corpus)
     assert "RoundRobinPartitioning" not in physical_plan(pipeline.search(index, queries, k=10))
+
+
+# ------------------------------------------ search plan shape and identity
+
+
+@pytest.fixture(scope="module")
+def one_file(spark, sf_dir, tmp_path_factory):
+    """(corpus, queries) over the smoke embeddings rewritten as ONE
+    parquet file: one scan partition, the shape a spread must widen."""
+    path = str(tmp_path_factory.mktemp("one_file") / "corpus.parquet")
+    emb = sources.load(spark, sf_dir, "embeddings")
+    emb.select(F.col("vec_id").alias("doc_id"), "embedding").coalesce(1).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    assert corpus.rdd.getNumPartitions() == 1
+    queries = corpus.filter(F.col("doc_id") < 20).withColumnRenamed("doc_id", "q_id")
+    return corpus, queries
+
+
+def _searches(corpus, queries):
+    ivf = pipeline.build_index(corpus, method="ivf")
+    lsh = pipeline.build_index(corpus, method="hyperplane_lsh")
+    return {
+        "exact": pipeline.search_exact(corpus, queries),
+        "ivf": pipeline.search(ivf, queries),
+        "lsh": pipeline.search(lsh, queries),
+    }
+
+
+def _find(node, name):
+    """First node named `name` in a JVM SparkPlan tree, preorder."""
+    if node.nodeName() == name:
+        return node
+    children = node.children()
+    for i in range(children.size()):
+        hit = _find(children.apply(i), name)
+        if hit is not None:
+            return hit
+    return None
+
+
+def test_search_exact_streams_the_corpus_at_full_width(spark, one_file):
+    """A one-file corpus is one scan partition; spread first, the
+    nested-loop join streams it on every core."""
+    corpus, queries = one_file
+    plan = pipeline.search_exact(corpus, queries)._jdf.queryExecution().executedPlan()
+    plan = plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+    join = _find(plan, "BroadcastNestedLoopJoin")
+    assert join is not None
+    streamed = join.left().execute().getNumPartitions()
+    assert streamed >= spark.sparkContext.defaultParallelism
+
+
+def test_ivf_index_buckets_are_spread(spark, one_file):
+    corpus, _ = one_file
+    index = pipeline.build_index(corpus, method="ivf")
+    assert index.buckets.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_searches_fold_once_per_pair(one_file):
+    """Above the topmost join every projection is pair-level; there the
+    score holds one zip_with fold (the dot product), because both norm
+    folds run in the per-row projections below the join."""
+    for name, df in _searches(*one_file).items():
+        lines = physical_plan(df).splitlines()
+        top_join = next(i for i, line in enumerate(lines) if "Join" in line)
+        pair_level = "\n".join(lines[:top_join])
+        assert "AS score#" in pair_level, name
+        assert pair_level.count("zip_with(") == 1, (name, pair_level)
+
+
+def test_lsh_search_plans_one_q_id_exchange(one_file):
+    """One hash exchange on q_id above the bucket join serves the
+    dedup, the re-rank and the top-k window."""
+    lines = physical_plan(_searches(*one_file)["lsh"]).splitlines()
+    bucket_join = next(i for i, line in enumerate(lines) if "Join [table" in line)
+    above = [line for line in lines[:bucket_join] if "Exchange" in line]
+    assert len(above) == 1, above
+    assert "Exchange hashpartitioning(q_id#" in above[0], above
+
+
+def _rerank_per_pair(cand, queries, corpus, k=10):
+    """The re-rank as every search wrote it with the per-pair
+    cosine_sim form: the reference the searches must equal bitwise."""
+    qv = queries.select("q_id", F.col("embedding").alias("q_emb"))
+    cv = corpus.select(F.col("doc_id").alias("c_id"), F.col("embedding").alias("c_emb"))
+    scored = cand.join(qv, "q_id").join(cv, "c_id").withColumn(
+        "score", cosine_sim("q_emb", "c_emb")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("q_id", "rnk", "c_id", "score")
+    )
+
+
+def _rows(df):
+    return df.toPandas().sort_values(["q_id", "rnk"]).reset_index(drop=True)
+
+
+def test_searches_equal_the_per_pair_reference(spark, one_file):
+    from skills_vectors_spark.operators.ann import N_PROBE, hyperplane_buckets, train_ivf_centroids
+
+    corpus, queries = one_file
+    got = _searches(corpus, queries)
+    ids = corpus.select(F.col("doc_id").alias("c_id"))
+    exact = queries.select("q_id").crossJoin(ids)
+
+    index = pipeline.build_index(corpus, method="hyperplane_lsh")
+    bq = hyperplane_buckets(queries.select(F.col("q_id").alias("vec_id"), "embedding"))
+    lsh = (
+        bq.withColumnRenamed("vec_id", "q_id")
+        .join(index.buckets.withColumnRenamed("doc_id", "c_id"), ["table", "bucket"])
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select("q_id", "c_id")
+        .distinct()
+    )
+
+    index = pipeline.build_index(corpus, method="ivf")
+    # k-means trains on the caller's frame, not the spread one
+    unspread = corpus.select(F.col("doc_id").alias("vec_id"), "embedding")
+    assert index.centers == train_ivf_centroids(unspread)
+    centers = spark.createDataFrame(
+        list(enumerate(index.centers)), "cell int, center array<double>"
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("c_score").desc(), F.col("cell"))
+    probes = (
+        queries.crossJoin(centers)
+        .withColumn("c_score", cosine_sim("embedding", "center"))
+        .withColumn("pr", F.row_number().over(w))
+        .filter(F.col("pr") <= N_PROBE)
+    )
+    ivf = (
+        probes.join(index.buckets.withColumnRenamed("doc_id", "c_id"), "cell")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select("q_id", "c_id")
+    )
+
+    for name, cand in (("exact", exact), ("lsh", lsh), ("ivf", ivf)):
+        want = _rows(_rerank_per_pair(cand, queries, corpus))
+        assert _rows(got[name]).equals(want), name

@@ -117,6 +117,69 @@ def test_cosine_zero_vector_is_null_not_a_crash(spark):
     assert math.isclose(got[2], 1.0, rel_tol=1e-12)
 
 
+def test_cosine_from_norms_equals_cosine_sim_bitwise(spark):
+    """Norms computed once per row, in their own projection, then
+    passed in: the same doubles as the per-pair cosine_sim, zero-norm
+    NULLs included."""
+    import struct
+
+    from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_norm
+
+    rng = np.random.default_rng(11)
+    pairs = []
+    for scale_a in (1e-3, 1.0, 1e3):
+        for _ in range(10):
+            a = (rng.standard_normal(16) * scale_a).astype(np.float32)
+            pairs.append((a.tolist(), rng.standard_normal(16).astype(np.float32).tolist()))
+    pairs += [([0.0] * 16, [1.0] * 16), ([0.0] * 16, [0.0] * 16), ([1.0] * 16, [0.0] * 16)]
+    df = spark.createDataFrame(pairs, "a array<float>, b array<float>").select(
+        "a", "b", l2_norm("a").alias("na"), l2_norm("b").alias("nb")
+    )
+    got = df.select(
+        cosine_sim("a", "b").alias("per_pair"),
+        cosine_from_norms("a", "b", "na", "nb").alias("from_norms"),
+    ).collect()
+    for r in got:
+        if r.per_pair is None:
+            assert r.from_norms is None
+        else:
+            assert struct.pack("<d", r.per_pair) == struct.pack("<d", r.from_norms)
+    assert [r.per_pair for r in got[-3:]] == [None, None, None]
+
+
+def test_fn_cosine_plan_is_the_per_pair_expression(spark, sf_dir):
+    """cosine_sim keeps its expression tree: fn_cosine plans exactly as
+    the inline dot / nullif(norm * norm) form. Expression ids, plan ids
+    and the lambda and common-expression name suffixes come from global
+    counters, so each is renumbered by rank: the construction order
+    still has to match."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from skills_vectors_spark import sources
+    from skills_vectors_spark.functions.vector import dot, l2_norm
+    from skills_vectors_spark.operators.functions_suite import fn_cosine
+    from skills_vectors_spark.plans import physical_plan
+
+    e = sources.load(spark, sf_dir, "embeddings")
+    a = e.select(F.col("vec_id"), F.col("embedding").alias("ea"))
+    b = e.select((F.col("vec_id") - 1).alias("vec_id"), F.col("embedding").alias("eb"))
+    inline = dot("ea", "eb") / F.nullif(l2_norm("ea") * l2_norm("eb"), F.lit(0.0))
+    want = a.join(b, "vec_id").select("vec_id", F.round(inline, 6).alias("cos_next"))
+
+    def shape(df):
+        plan = physical_plan(df)
+        for prefix in ("plan_id=", "#", "lambda [a-z]+_", "_common_expr_"):
+            pattern = f"({prefix})(\\d+)"
+            ns = sorted({int(n) for _, n in re.findall(pattern, plan)})
+            rank = {n: i for i, n in enumerate(ns)}
+            plan = re.sub(pattern, lambda m: f"{m.group(1)}<{rank[int(m.group(2))]}>", plan)
+        return plan
+
+    assert shape(fn_cosine(spark, sf_dir)) == shape(want)
+
+
 def test_normalize_text_idempotent_batch(spark):
     from skills_vectors_spark.functions.text import normalize_text
 
