@@ -9,9 +9,14 @@ query uses, skills_for_jobs.py:363,371-379):
 
   * ann_lsh       — random-hyperplane cosine LSH (custom; MLlib's LSH
                     family lacks cosine — SURVEY §4 hard part #1)
-  * ann_ivf       — IVF-style coarse quantizer via MLlib KMeans cells
-                    + nprobe probing (the IVFFlat analogue)
+  * ann_ivf       — IVF-style coarse quantizer (numpy Lloyd's k-means
+                    cells, _kmeans) + nprobe probing (the IVFFlat
+                    analogue)
   * ann_brp_l2    — stock MLlib BucketedRandomProjectionLSH (L2)
+
+ann_lsh and ann_ivf are pipeline.search over a per-session index
+(lsh_index / ivf_index, each a pipeline.build_index); the exact gold
+is knn.ranked_knn, i.e. pipeline.search_exact.
 
 Scale: every strategy turns the all-pairs cross join into an
 equi-join on bucket/cell ids — shuffle-partitionable, skew-salted by
@@ -26,7 +31,8 @@ SQL-expressible; quality is gated by recall-vs-knn_exact unit tests
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -35,9 +41,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skills_vectors_spark import cache, sources
-from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_norm
-from skills_vectors_spark.operators.knn import K, N_QUERIES
+from skills_vectors_spark import cache, pipeline, sources
+from skills_vectors_spark.functions.vector import cosine_sim
+from skills_vectors_spark.operators.knn import K, N_QUERIES, ranked_knn
 from skills_vectors_spark.registry import register
 
 DIM = 64
@@ -105,52 +111,56 @@ def hyperplane_buckets(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     return df.select(F.col(id_col).alias("vec_id"), "embedding").mapInPandas(run, _SIG_SCHEMA)
 
 
+def _session_index(
+    spark: SparkSession, sf_dir: str, kind: str, build: Callable[[], pipeline.VectorIndex]
+) -> pipeline.VectorIndex:
+    """This session's `kind` index of the corpus under sf_dir, built
+    once by `build()` — the build-once / search-many split of a real
+    vector store. Its bucket table is persisted through cached_df, so
+    clear() unpersists it and the next call rebuilds the index."""
+
+    def persisted() -> pipeline.VectorIndex:
+        index = build()
+        return replace(
+            index, buckets=cache.cached_df(kind, spark, sf_dir, lambda: index.buckets)
+        )
+
+    return cache.memo(spark, (kind, sf_dir), persisted)
+
+
+def lsh_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
+    """The corpus hyperplane-LSH index: (vec_id, table, bucket)."""
+    return _session_index(
+        spark,
+        sf_dir,
+        "lsh_index",
+        lambda: pipeline.build_index(
+            sources.load(spark, sf_dir, "embeddings"), "vec_id", "hyperplane_lsh"
+        ),
+    )
+
+
+def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The N_QUERIES query vectors, drawn from the corpus."""
+    return sources.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES)
+
+
+def _cos_sim_rows(ranked: DataFrame) -> DataFrame:
+    """(q_id, rnk, c_id, cos_sim): a ranked search result with its
+    score rounded to 6 places."""
+    return ranked.select(
+        "q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim")
+    )
+
+
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 cosine KNN via random-hyperplane LSH:
     candidates = corpus vectors sharing any (table, bucket) with the
     query, then exact cosine re-rank of candidates only. Bucket join
     replaces the knn_exact cross join — candidate count is ~corpus /
     2^bits per table, independent of total corpus size."""
-
-    emb = sources.load(spark, sf_dir, "embeddings")
-    # the query side is tiny (N_QUERIES rows): bucket it in its own
-    # pass rather than re-deriving it from the corpus buckets, which
-    # would force the full-corpus Arrow pass to execute twice. The
-    # corpus bucket table is the LSH INDEX — persisted per session,
-    # exactly the build-once/search-many split of a real vector store.
-    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
-    buckets_c = cache.cached_df(
-        "lsh_buckets_c", spark, sf_dir, lambda: hyperplane_buckets(emb_sp)
-    ).withColumnRenamed("vec_id", "c_id")
-    q = emb.filter(F.col("vec_id") < N_QUERIES)
-    buckets_q = hyperplane_buckets(q).withColumnRenamed("vec_id", "q_id")
-    cand = (
-        # the query bucket table is bounded at N_QUERIES*N_TABLES rows
-        # — broadcast it so the corpus index side never shuffles for
-        # the candidate join, at any corpus size
-        F.broadcast(buckets_q).join(buckets_c, ["table", "bucket"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    # norms once per row, below the joins: the pair projection folds
-    # only the dot product
-    qv = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    ).withColumn("q_norm", l2_norm("q_emb"))
-    cv = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    ).withColumn("c_norm", l2_norm("c_emb"))
-    scored = (
-        cand.join(F.broadcast(qv), "q_id")
-        .join(cv, "c_id")
-        .withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= K)
-        .select("q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"))
+    return _cos_sim_rows(
+        pipeline.search(lsh_index(spark, sf_dir), _queries(spark, sf_dir), K, q_id_col="vec_id")
     )
 
 
@@ -164,8 +174,6 @@ def recall_lsh_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_id, n_match, recall); the seeded hyperplanes make the values
     non-SQL-expressible, so the registered ``eval_recall_lsh`` reduces
     this to a gate-column summary the driver can hash."""
-    from skills_vectors_spark.operators.knn import ranked_knn
-
     gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
     approx = ann_lsh(spark, sf_dir).select(
         "q_id", "c_id", F.lit(1).alias("hit")
@@ -348,13 +356,22 @@ def train_ivf_centroids(
     return [[float(x) for x in c] for c in cent]
 
 
-def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    return cache.memo(
+def ivf_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
+    """The corpus IVF index: (vec_id, cell) plus the trained centers.
+    Built over the same full-width frame as corpus_sample (see there),
+    which k-means trains on; cells are assigned over the spread corpus."""
+    return _session_index(
         spark,
-        ("ivf_centroids", sf_dir),
-        # the same full-width frame as corpus_sample — see there
-        lambda: train_ivf_centroids(sources.load_spread(spark, sf_dir, "embeddings")),
+        sf_dir,
+        "ivf_index",
+        lambda: pipeline.build_index(
+            sources.load_spread(spark, sf_dir, "embeddings"), "vec_id", "ivf"
+        ),
     )
+
+
+def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    return ivf_index(spark, sf_dir).centers
 
 
 def _query_rows(spark: SparkSession, sf_dir: str):
@@ -363,8 +380,7 @@ def _query_rows(spark: SparkSession, sf_dir: str):
     return cache.memo(
         spark,
         ("query_rows", sf_dir),
-        lambda: sources.load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
+        lambda: _queries(spark, sf_dir)
         .select("vec_id", "embedding")
         .toPandas()
         .sort_values("vec_id"),
@@ -375,8 +391,6 @@ def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
     """(vec_id, embedding, cell) — nearest-centroid assignment as one
     Arrow-vectorized matmul per batch (the KMeans prediction rule):
     zero shuffle, zero row blow-up, linear in corpus size."""
-    import pandas as pd
-
     # empty-corpus training yields zero centroids; keep C 2-D so the
     # closure constructs (the batch loop never runs — no batches)
     C = (
@@ -415,67 +429,13 @@ def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN (the pgvector IVFFlat analogue, lists=N_CELLS,
     probes=N_PROBE — ref load_skill_vectors_pg.py:15,51 and the
-    probes commentary skills_for_jobs.py:360-362): KMeans coarse
+    probes commentary skills_for_jobs.py:360-362): k-means coarse
     quantizer -> assign corpus to cells -> each query probes its
     N_PROBE nearest centroids -> exact re-rank within probed cells.
     Corpus scan per query drops to nprobe/ncells of the data; at
     100 TB the cell assignment is the partitioning key."""
-    # centroid training reads its own full-width frame (see
-    # corpus_sample); the per-row Arrow passes below read the sized
-    # frame — identical rows, bounded task fan-out
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
-    cents = ivf_centroids(spark, sf_dir)
-    if not cents:  # empty corpus: nothing to index or search
-        return spark.createDataFrame(
-            [], "q_id long, rnk long, c_id long, cos_sim double"
-        )
-    centers = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "cell int, center array<double>",
-    )
-    # cell assignment = argmin L2 to the cached centroids (the KMeans
-    # prediction rule) as one Arrow-vectorized matmul per batch —
-    # zero shuffle, zero row blow-up, linear in corpus size (vs the
-    # naive corpus x centroids explode + window, which shuffles
-    # N_CELLS x corpus rows). Persisted per session: the assignment
-    # IS the IVF index and every search probes the same table.
-
-    assigned = cache.cached_df(
-        "ivf_assigned", spark, sf_dir, lambda: assign_cells(emb_sp, cents)
-    )
-    # queries don't need their own cell — pull them straight from the
-    # source so the assignment pass only ever runs once (filters do
-    # not push through mapInPandas). Norms are taken once per row on
-    # each side, below the re-rank join.
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    ).withColumn("q_norm", l2_norm("q_emb"))
-    # rank centroids per query by cosine, keep N_PROBE
-    qc = q.crossJoin(F.broadcast(centers)).withColumn(
-        "c_score", cosine_sim("q_emb", "center")
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("c_score").desc(), F.col("cell"))
-    probes = (
-        qc.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= N_PROBE)
-        .select("q_id", "q_emb", "q_norm", "cell")
-    )
-    # probes is bounded at N_QUERIES*N_PROBE rows — broadcast it so
-    # the corpus-sized index never shuffles by the 16-value cell key
-    # (the same hint ann_ivf_pq's candidate join already carries)
-    cand = assigned.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        l2_norm("embedding").alias("c_norm"),
-        "cell",
-    ).join(F.broadcast(probes), "cell").filter(F.col("q_id") != F.col("c_id"))
-    scored = cand.withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= K)
-        .select("q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"))
+    return _cos_sim_rows(
+        pipeline.search(ivf_index(spark, sf_dir), _queries(spark, sf_dir), K, q_id_col="vec_id")
     )
 
 
@@ -522,10 +482,6 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     way: Milvus L2 beside pgvector cosine). All per-backend results
     union into ONE long DataFrame before a single semi-join + agg —
     one pass over gold, not one per backend."""
-    from skills_vectors_spark.functions.vector import cosine_sim as _cos
-    from skills_vectors_spark.operators.knn import K, N_QUERIES, ranked_knn
-
-
     gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
 
     def build_allr() -> DataFrame:
@@ -558,7 +514,7 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = (
         allr.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
-        .withColumn("cs", _cos("q_emb", "c_emb"))
+        .withColumn("cs", cosine_sim("q_emb", "c_emb"))
         .groupBy("backend")
         .agg(
             F.count("*").alias("n_returned"),
@@ -617,8 +573,6 @@ def eval_backend_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's pass/fail framing at skills_for_jobs.py:354-355).
     The full numeric report (n_hits, avg_recall, avg_cos_sim) stays
     in the library function for human consumption."""
-    from skills_vectors_spark.operators.knn import K, N_QUERIES
-
     floors = F.create_map(
         *[F.lit(x) for kv in BACKEND_FLOORS.items() for x in kv]
     )
@@ -748,7 +702,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("arnk", F.row_number().over(w_adc))
         .filter(F.col("arnk") <= n_cand)
     )
-    qv = sources.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES).select(
+    qv = _queries(spark, sf_dir).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     cv = sources.load(spark, sf_dir, "embeddings").select(
@@ -760,10 +714,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("score", cosine_sim("q_emb", "c_emb"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= K)
-        .select("q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"))
+    return _cos_sim_rows(
+        scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= K)
     )
 
 
@@ -800,25 +752,21 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     The candidate join carries only (q_id, cell, c_id, code) — at
     100 TB no embedding ever crosses the wire until the final
     re-rank join fetches the few shortlisted vectors."""
-    cents = ivf_centroids(spark, sf_dir)
-    if not cents:  # empty corpus: nothing to index or search
+    ivf = ivf_index(spark, sf_dir)
+    if not ivf.centers:  # empty corpus: nothing to index or search
         return spark.createDataFrame(
             [], "q_id long, rnk long, c_id long, cos_sim double"
         )
     books = pq_residual_codebooks(spark, sf_dir)
-    C = np.array(cents, dtype=np.float64)
+    C = np.array(ivf.centers, dtype=np.float64)
     c_sq = (C**2).sum(axis=1)  # query-side probe ranking below
     d_sub = books.shape[2]
 
-    # --- index build: residual-encode FROM the shared cell assignment
-    # (r14, verdict item 7): ann_ivf's cached `ivf_assigned` table
-    # already holds (vec_id, embedding, cell) computed by the exact
-    # argmin this encode pass used to repeat — reading it deletes one
-    # full corpus argmin matmul whenever both backends run in a
-    # session (the suite order and eval_backend_compare both do). An
-    # isolated cold ann_ivf_pq now materializes the assignment first
-    # (one extra cache write) — the recorded trade for sharing the
-    # subtree; at 100 TB the assignment IS the IVF index a real
+    # --- index build: residual-encode FROM the IVF index's persisted
+    # cell assignment (ivf_index, which ann_ivf searches): one corpus
+    # argmin pass serves both IVF rows in a session. An isolated cold
+    # ann_ivf_pq materializes the assignment first (one extra cache
+    # write); at 100 TB the assignment IS the IVF index a real
     # deployment builds exactly once for both consumers.
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -837,21 +785,13 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"vec_id": pdf["vec_id"], "cell": cell.astype("int32"), "code": code}
             )
 
-
-    # same sized frame as ann_ivf's assignment build (the shared
-    # cache key must build identically from either consumer);
-    # training frames above stay full-width — see ann_ivf
-    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
-    assigned = cache.cached_df(
-        "ivf_assigned", spark, sf_dir, lambda: assign_cells(emb_sp, cents)
-    )
     # the (vec_id, cell, code) table IS the IVFADC index — persist per
     # session so repeated searches skip the encode pass entirely
     index = cache.cached_df(
         "ivfpq_index",
         spark,
         sf_dir,
-        lambda: assigned.mapInPandas(
+        lambda: ivf.buckets.join(ivf.corpus, "vec_id").mapInPandas(
             encode,
             T.StructType(
                 [
@@ -938,7 +878,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = scored_cand.withColumn("arnk", F.row_number().over(w_adc)).filter(
         F.col("arnk") <= n_cand
     )
-    qv = sources.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES).select(
+    qv = _queries(spark, sf_dir).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     cv = sources.load(spark, sf_dir, "embeddings").select(
@@ -950,10 +890,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("score", cosine_sim("q_emb", "c_emb"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= K)
-        .select("q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"))
+    return _cos_sim_rows(
+        reranked.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= K)
     )
 
 
@@ -1135,8 +1073,6 @@ def _ann_gate_summary(
     on (q_id, c_id) by construction (top-K pairs), so the outer join
     is 1:1 and plain counts over the markers reproduce the previous
     arm values exactly."""
-    from skills_vectors_spark.operators.knn import ranked_knn
-
     a = topk_fn(spark, sf_dir).select("q_id", "c_id", F.lit(1).alias("in_a"))
     g = ranked_knn(spark, sf_dir, gold_metric).select(
         "q_id", "c_id", F.lit(1).alias("in_g")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.pipeline import search_exact
 from skills_vectors_spark.registry import register
 
 EMBED_DIM = 32
@@ -245,30 +246,12 @@ def embed_knn_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (skills_for_jobs.py:416-433). Embeds with the mock-sqlhash-v1
     provider so the WHOLE composition is oracle-recomputable: the
     stored float32 coordinates are exact md5-derived values, and the
-    cosine/rank stage inherits knn_exact's proven cross-engine
-    parity (list_cosine_similarity over DOUBLE[] + round 6)."""
-    from pyspark.sql import Window
-    from skills_vectors_spark.functions.vector import cosine_sim
-
+    cosine/rank stage is knn_exact's own pipeline.search_exact, with
+    its proven cross-engine parity (list_cosine_similarity over
+    DOUBLE[] + round 6)."""
     emb = embed_documents(sources.load(spark, sf_dir, "documents"), provider=SQLHASH_PROVIDER)
-    q = emb.filter(F.col("doc_id") < 10).select(
-        F.col("doc_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    c = sources.spread(
-        spark,
-        emb.select(F.col("doc_id").alias("c_id"), F.col("embedding").alias("c_emb")),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("score", cosine_sim("q_emb", "c_emb"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-        .select("q_id", "rnk", "c_id", F.round("score", 6).alias("cos_sim"))
-    )
+    hits = search_exact(emb, emb.filter(F.col("doc_id") < 10), k=5, q_id_col="doc_id")
+    return hits.select("q_id", "rnk", "c_id", F.round("score", 6).alias("cos_sim"))
 
 
 _EMBED_STATUS_SCHEMA = T.StructType(

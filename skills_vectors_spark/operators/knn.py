@@ -7,94 +7,45 @@ scan ORDER BY distance LIMIT (:354-387), rank-order dedup (:371-379),
 recall-style match counting (:199-200), average cosine of hits
 (:204-211), and the wide skill0/level0/... report (:188-207).
 
-Scale design (100 TB): the query set is the SMALL side — it is
-broadcast to every executor; the corpus scan stays fully partitioned
-and never shuffles for the join. The per-query top-K uses
-row_number over (partition by q_id order by score) + rank<=K, which
-Spark >=3.5 rewrites into WindowGroupLimit: each task keeps only its
-local top-K per query BEFORE the shuffle, so shuffle volume is
-O(n_queries * K * n_partitions), independent of corpus size. Distance
-math is pure codegen (functions/vector.py) — no Python boundary.
+Scale design (100 TB): every top-K here is pipeline.search_exact —
+the query set is the SMALL side, broadcast against the spread corpus;
+the per-query top-K is a row_number window that Spark >=3.5 rewrites
+into WindowGroupLimit, so shuffle volume is O(n_queries * K *
+n_partitions), independent of corpus size. Distance math is pure
+codegen (functions/vector.py) — no Python boundary.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from skills_vectors_spark import sources
-from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_dist, l2_norm
+from skills_vectors_spark import cache, sources
+from skills_vectors_spark.pipeline import search_exact
 from skills_vectors_spark.registry import register
 
 K = 10
 N_QUERIES = 20
 
 
-def ranked_knn(
-    spark: SparkSession,
-    sf_dir: str,
-    metric: str = "cosine",
-    k: int = K,
-    n_queries: int = N_QUERIES,
-    with_label: bool = False,
-) -> DataFrame:
-    """Core exact-KNN: (q_id, c_id, score, rnk<=k) long-format result.
+def ranked_knn(spark: SparkSession, sf_dir: str, metric: str = "cosine") -> DataFrame:
+    """Core exact-KNN: (q_id, rnk, c_id, score) for the first
+    N_QUERIES vectors against the whole corpus, rnk <= K.
 
     Self-matches are excluded (q_id != c_id); ties broken by c_id so
-    ranks are deterministic for oracle comparison.
+    ranks are deterministic for oracle comparison. The exact gold is
+    the reference ranking every ANN gate, the knn/eval family and
+    report_pivot compare against, so it is persisted once per session
+    and metric: a bounded result (N_QUERIES*K rows) of a full corpus
+    pass, the build-once / read-many split cached_df models.
     """
-    emb = sources.load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    corpus_cols = [F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")]
-    if with_label:
-        corpus_cols.append(F.col("label"))
-    # spread the corpus before the expansion join: the local parquet
-    # is one small file (one scan partition) and the join multiplies
-    # rows by n_queries — pre-spreading keeps the interpreted HOF
-    # distance fold parallel across all cores. Conditional: a
-    # multi-split cluster read already exceeds the target, so no
-    # full-corpus reshuffle is added at 100 TB.
-    corpus = sources.spread(spark, emb.select(*corpus_cols))
 
-    if metric == "cosine":
-        # norms once per row on each side, below the join: the pair
-        # projection folds only the dot product
-        q = q.withColumn("q_norm", l2_norm("q_emb"))
-        corpus = corpus.withColumn("c_norm", l2_norm("c_emb"))
-        score = cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm")
-        order = [F.col("score").desc(), F.col("c_id").asc()]
-    elif metric == "l2":
-        score = l2_dist("q_emb", "c_emb")
-        order = [F.col("score").asc(), F.col("c_id").asc()]
-    else:
-        raise ValueError(metric)
-    joined = corpus.crossJoin(F.broadcast(q)).where(F.col("q_id") != F.col("c_id"))
-    scored = joined.withColumn("score", score)
+    def build() -> DataFrame:
+        emb = sources.load(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id") < N_QUERIES)
+        return search_exact(emb, queries, K, metric, id_col="vec_id", q_id_col="vec_id")
 
-    w = Window.partitionBy("q_id").orderBy(*order)
-    out_cols = ["q_id", "rnk", "c_id", "score"] + (["label"] if with_label else [])
-    out = (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select(*out_cols)
-    )
-    if k == K and n_queries == N_QUERIES:
-        # the exact-gold top-k is the reference ranking every ANN gate,
-        # the knn/eval family and report_pivot compare against — ~9
-        # call sites rebuild the same |corpus| x n_queries expansion +
-        # window per session. The RESULT is bounded (n_queries*k rows)
-        # while the build is a full corpus pass, the exact build-once /
-        # read-many split cached_df models; non-default k/n_queries
-        # calls (tests, ad-hoc) stay uncached so the entry set is
-        # bounded at {metric} x {with_label}.
-        from skills_vectors_spark.cache import cached_df
-
-        return cached_df(
-            f"ranked_knn_{metric}_{int(with_label)}", spark, sf_dir, lambda: out
-        )
-    return out
+    return cache.cached_df(f"ranked_knn_{metric}", spark, sf_dir, build)
 
 
 _RANKED_SQL = """
@@ -233,13 +184,10 @@ def report_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's CSV report shape (skills_for_jobs.py:188-207).
     Conditional aggregation instead of .pivot() so column names and
     order are fully deterministic."""
-    # derive from the SHARED cosine gold + a label join instead of
-    # ranked_knn(with_label=True) (r13): the labeled variant built its
-    # own full corpus-expansion window while the label is functionally
-    # dependent on c_id — joining the per-session cached gold (at most
-    # n_queries*k rows, always the broadcast side) onto the embeddings
-    # dim reproduces the identical frame for the cost of one tiny join,
-    # and drops the second expansion build from every suite pass.
+    # the label is functionally dependent on c_id: joining it onto the
+    # SHARED cosine gold (at most N_QUERIES*K rows, always the
+    # broadcast side) costs one tiny join instead of a second
+    # corpus-expansion build per suite pass.
     emb = sources.load(spark, sf_dir, "embeddings")
     ranked = ranked_knn(spark, sf_dir, "cosine").join(
         emb.select(F.col("vec_id").alias("c_id"), "label"), "c_id"
@@ -287,26 +235,19 @@ def knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     opposite of most ANN index structures, because candidate
     generation is a scan, not a graph walk."""
     emb = sources.load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    hits = search_exact(
+        emb.filter(F.col("label") == FILTER_LABEL),
+        emb.filter(F.col("vec_id") < N_QUERIES),
+        K,
+        id_col="vec_id",
+        q_id_col="vec_id",
     )
-    corpus = sources.spread(
-        spark,
-        emb.filter(F.col("label") == FILTER_LABEL).select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "label"
-        ),
-    )
-    joined = corpus.crossJoin(F.broadcast(q)).where(F.col("q_id") != F.col("c_id"))
-    scored = joined.withColumn("score", cosine_sim("q_emb", "c_emb"))
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= K)
-        .select(
-            "q_id",
-            "rnk",
-            "c_id",
-            "label",
-            (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"),
-        )
+    return hits.select(
+        "q_id",
+        "rnk",
+        "c_id",
+        # every hit passed the pre-filter; `when` keeps the column
+        # nullable, like the parquet label it stands for
+        F.when(F.col("c_id").isNotNull(), F.lit(FILTER_LABEL)).alias("label"),
+        (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim"),
     )

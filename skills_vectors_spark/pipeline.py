@@ -15,6 +15,11 @@ Catalyst plan, so the whole pipeline optimizes globally (pushdown
 through all five stages, shared scans, broadcasts chosen end-to-end).
 Nothing here is sf_dir-bound: callers pass any DataFrame with an id
 column and either a text or an embedding column.
+
+This is the one implementation of exact top-k, LSH and IVF search:
+the registered knn/ann rows (operators/knn.py, operators/ann.py,
+embed_knn_pipeline) call these stages over their corpus and keep only
+their own output projection.
 """
 
 from __future__ import annotations
@@ -105,7 +110,8 @@ def search_exact(
     corpus, spread first (sources.spread) so the nested-loop join
     streams it on every core even when it is one parquet file; score
     with codegen distance expressions, keep per-query top-k via
-    WindowGroupLimit. The ground-truth tier (skills_for_jobs.py:354-387)."""
+    WindowGroupLimit. Self-matches (q_id == c_id) are dropped, as in
+    search(). The ground-truth tier (skills_for_jobs.py:354-387)."""
     q = queries.select(F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb"))
     c = sources.spread(
         corpus.sparkSession,
@@ -123,7 +129,11 @@ def search_exact(
         order = [F.col("score").asc(), F.col("c_id").asc()]
     else:
         raise ValueError(metric)
-    scored = c.crossJoin(F.broadcast(q)).withColumn("score", score)
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .where(F.col("q_id") != F.col("c_id"))
+        .withColumn("score", score)
+    )
     w = Window.partitionBy("q_id").orderBy(*order)
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))

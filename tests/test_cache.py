@@ -128,19 +128,25 @@ def _arrays(v):
     return [np.asarray(x) for x in v] if isinstance(v, tuple) else [np.asarray(v)]
 
 
+def _bucket_rows(index):
+    return index.buckets.toPandas().sort_values(list(index.buckets.columns)).reset_index(drop=True)
+
+
 def test_quantizers_retrain_after_clear_and_per_session(spark, sf_dir):
-    """IVF centroids, PQ codebooks and the PCA basis are result
-    entries: clear() retrains them, and a sibling session trains its
-    own instead of reading the parent's."""
+    """IVF centroids (held by the IVF index), PQ codebooks and the PCA
+    basis are result entries: clear() retrains them, and a sibling
+    session trains its own instead of reading the parent's. The same
+    holds for the persisted bucket tables of both ANN indexes."""
     import numpy as np
 
     from skills_vectors_spark.operators import ann, vector_blas
 
     trainers = {
-        "ivf_centroids": lambda s: ann.ivf_centroids(s, sf_dir),
+        "ivf_index": lambda s: ann.ivf_centroids(s, sf_dir),
         "pq_codebooks": lambda s: ann.pq_codebooks(s, sf_dir),
         "pca_basis": lambda s: vector_blas.pca_basis(s, sf_dir),
     }
+    indexes = {"lsh_index": ann.lsh_index, "ivf_index": ann.ivf_index}
 
     def misses(s, kind):
         return cache.stats(s).get(kind, {}).get("misses", 0)
@@ -148,18 +154,31 @@ def test_quantizers_retrain_after_clear_and_per_session(spark, sf_dir):
     first = {k: fit(spark) for k, fit in trainers.items()}
     before = {k: misses(spark, k) for k in trainers}
     assert all(trainers[k](spark) is first[k] for k in trainers), "warm reuse"
+    buckets = {k: index(spark, sf_dir).buckets for k, index in indexes.items()}
+    rows = {k: _bucket_rows(index(spark, sf_dir)) for k, index in indexes.items()}
+    assert all(b.is_cached for b in buckets.values())
     cache.clear(spark)
+    assert not any(b.is_cached for b in buckets.values()), "clear() must unpersist the buckets"
     for kind, fit in trainers.items():
         again = fit(spark)
         assert misses(spark, kind) == before[kind] + 1, f"{kind} must retrain after clear()"
         assert again is not first[kind]
         assert all(map(np.array_equal, _arrays(again), _arrays(first[kind]))), kind
+    for kind, index in indexes.items():
+        rebuilt = index(spark, sf_dir)
+        assert rebuilt.buckets is not buckets[kind] and rebuilt.buckets.is_cached, kind
+        assert _bucket_rows(rebuilt).equals(rows[kind]), kind
 
     sibling = spark.newSession()
-    assert not any(k[0] in trainers for k in cache.entries(sibling))
+    assert not any(k[0] in trainers or k[0] in indexes for k in cache.entries(sibling))
     for kind, fit in trainers.items():
         fit(sibling)
         assert misses(sibling, kind) == 1, f"sibling must train its own {kind}"
+    for kind, index in indexes.items():
+        own = index(sibling, sf_dir)
+        assert misses(sibling, kind) == 1, f"sibling must build its own {kind}"
+        assert own.buckets is not index(spark, sf_dir).buckets, kind
+        assert ("df", sf_dir, kind) in cache.entries(sibling), kind
     cache.clear(sibling)
 
 

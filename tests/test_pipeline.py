@@ -39,23 +39,21 @@ def test_search_exact_matches_registered_knn(spark, sf_dir):
 
     emb = sources.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed("vec_id", "q_id")
-    # exclude self-matches the same way ranked_knn does
-    got = (
-        pipeline.search_exact(emb, queries, k=11, id_col="vec_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn(
-            "rnk2",
-            F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"]).Window.partitionBy(
-                    "q_id"
-                ).orderBy(F.col("score").desc(), F.col("c_id"))
-            ),
-        )
-        .filter(F.col("rnk2") <= 10)
-        .select("q_id", "c_id")
-    )
-    want = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    for metric in ("cosine", "l2"):
+        got = pipeline.search_exact(emb, queries, metric=metric, id_col="vec_id")
+        assert _rows(got).equals(_rows(ranked_knn(spark, sf_dir, metric))), metric
+
+
+def test_search_exact_drops_self_matches(spark, sf_dir):
+    """Queries drawn from the corpus: search_exact, like search, never
+    returns a query as its own neighbor, and still fills k rows."""
+    from collections import Counter
+
+    emb = sources.load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).withColumnRenamed("vec_id", "q_id")
+    rows = pipeline.search_exact(emb, queries, k=10, id_col="vec_id").collect()
+    assert not [r for r in rows if r.q_id == r.c_id]
+    assert Counter(r.q_id for r in rows) == {q: 10 for q in range(5)}
 
 
 def test_prepare_corpus_end_to_end(spark, sf_dir):
@@ -110,12 +108,7 @@ def test_build_index_ivf_and_search_recall(spark, sf_dir):
     )
     idx = build_index(corpus, method="ivf")
     approx = {(r.q_id, r.c_id) for r in search(idx, queries, k=10).collect()}
-    gold_df = search_exact(corpus, queries, k=11).filter(F.col("c_id") != F.col("q_id"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("q_id").orderBy("rnk")
-    gold_df = gold_df.withColumn("r2", F.row_number().over(w)).filter(F.col("r2") <= 10)
-    gold = {(r.q_id, r.c_id) for r in gold_df.collect()}
+    gold = {(r.q_id, r.c_id) for r in search_exact(corpus, queries, k=10).collect()}
     recall = len(gold & approx) / len(gold)
     assert recall >= 0.7, f"facade IVF recall too low: {recall}"
 
@@ -163,6 +156,15 @@ def _searches(corpus, queries):
     }
 
 
+def _registered(spark, sf_dir):
+    """The library outputs of the registered rows that search through
+    this module."""
+    from skills_vectors_spark.operators import ann, embed, knn
+
+    fns = (knn.knn_exact, knn.knn_filtered, embed.embed_knn_pipeline, ann.ann_lsh, ann.ann_ivf)
+    return {fn.__name__: fn(spark, sf_dir) for fn in fns}
+
+
 def _find(node, name):
     """First node named `name` in a JVM SparkPlan tree, preorder."""
     if node.nodeName() == name:
@@ -193,11 +195,12 @@ def test_ivf_index_buckets_are_spread(spark, one_file):
     assert index.buckets.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
 
-def test_searches_fold_once_per_pair(one_file):
+def test_searches_fold_once_per_pair(spark, sf_dir, one_file):
     """Above the topmost join every projection is pair-level; there the
     score holds one zip_with fold (the dot product), because both norm
-    folds run in the per-row projections below the join."""
-    for name, df in _searches(*one_file).items():
+    folds run in the per-row projections below the join. knn_exact
+    reads the persisted gold, whose plan prints under the cache scan."""
+    for name, df in {**_searches(*one_file), **_registered(spark, sf_dir)}.items():
         lines = physical_plan(df).splitlines()
         top_join = next(i for i, line in enumerate(lines) if "Join" in line)
         pair_level = "\n".join(lines[:top_join])
@@ -205,14 +208,18 @@ def test_searches_fold_once_per_pair(one_file):
         assert pair_level.count("zip_with(") == 1, (name, pair_level)
 
 
-def test_lsh_search_plans_one_q_id_exchange(one_file):
+def test_lsh_search_plans_one_q_id_exchange(spark, sf_dir, one_file):
     """One hash exchange on q_id above the bucket join serves the
-    dedup, the re-rank and the top-k window."""
-    lines = physical_plan(_searches(*one_file)["lsh"]).splitlines()
-    bucket_join = next(i for i, line in enumerate(lines) if "Join [table" in line)
-    above = [line for line in lines[:bucket_join] if "Exchange" in line]
-    assert len(above) == 1, above
-    assert "Exchange hashpartitioning(q_id#" in above[0], above
+    dedup, the re-rank and the top-k window, in the facade search and
+    in the registered ann_lsh row."""
+    from skills_vectors_spark.operators import ann
+
+    for df in (_searches(*one_file)["lsh"], ann.ann_lsh(spark, sf_dir)):
+        lines = physical_plan(df).splitlines()
+        bucket_join = next(i for i, line in enumerate(lines) if "Join [table" in line)
+        above = [line for line in lines[:bucket_join] if "Exchange" in line]
+        assert len(above) == 1, above
+        assert "Exchange hashpartitioning(q_id#" in above[0], above
 
 
 def _rerank_per_pair(cand, queries, corpus, k=10):
@@ -241,7 +248,7 @@ def test_searches_equal_the_per_pair_reference(spark, one_file):
     corpus, queries = one_file
     got = _searches(corpus, queries)
     ids = corpus.select(F.col("doc_id").alias("c_id"))
-    exact = queries.select("q_id").crossJoin(ids)
+    exact = queries.select("q_id").crossJoin(ids).filter(F.col("q_id") != F.col("c_id"))
 
     index = pipeline.build_index(corpus, method="hyperplane_lsh")
     bq = hyperplane_buckets(queries.select(F.col("q_id").alias("vec_id"), "embedding"))
