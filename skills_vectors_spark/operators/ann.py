@@ -357,7 +357,8 @@ def train_ivf_centroids(
 
 
 def ivf_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
-    """The corpus IVF index: (vec_id, cell) plus the trained centers.
+    """The corpus IVF index: its lists (vec_id, cell, embedding, norm)
+    plus the trained centers.
     Built over the same full-width frame as corpus_sample (see there),
     which k-means trains on; cells are assigned over the spread corpus."""
     return _session_index(
@@ -713,10 +714,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cv, "c_id")
         .withColumn("score", cosine_sim("q_emb", "c_emb"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return _cos_sim_rows(
-        scored.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= K)
-    )
+    return _cos_sim_rows(pipeline._top_k(scored, K))
 
 
 # ------------------------------------------------------------- IVF + PQ
@@ -762,12 +760,12 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_sq = (C**2).sum(axis=1)  # query-side probe ranking below
     d_sub = books.shape[2]
 
-    # --- index build: residual-encode FROM the IVF index's persisted
-    # cell assignment (ivf_index, which ann_ivf searches): one corpus
-    # argmin pass serves both IVF rows in a session. An isolated cold
-    # ann_ivf_pq materializes the assignment first (one extra cache
-    # write); at 100 TB the assignment IS the IVF index a real
-    # deployment builds exactly once for both consumers.
+    # --- index build: residual-encode straight from the persisted IVF
+    # lists (ivf_index, which ann_ivf searches; each row holds vector
+    # and cell): one corpus argmin pass serves both IVF rows in a
+    # session, with no corpus back-join. An isolated cold ann_ivf_pq
+    # materializes the lists first (one extra cache write); at 100 TB
+    # the lists ARE the IVF index a deployment builds once for both.
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -791,7 +789,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivfpq_index",
         spark,
         sf_dir,
-        lambda: ivf.buckets.join(ivf.corpus, "vec_id").mapInPandas(
+        lambda: ivf.buckets.select("vec_id", "embedding", "cell").mapInPandas(
             encode,
             T.StructType(
                 [
@@ -889,10 +887,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cv, "c_id")
         .withColumn("score", cosine_sim("q_emb", "c_emb"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
-    return _cos_sim_rows(
-        reranked.withColumn("rnk", F.row_number().over(w).cast("long")).filter(F.col("rnk") <= K)
-    )
+    return _cos_sim_rows(pipeline._top_k(reranked, K))
 
 
 def ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,10 +903,9 @@ def ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests."""
     from skills_vectors_spark.scratch import scratch as _scratch
 
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir)
     path = _scratch(sf_dir, "ivf_index")
-    idx = assign_cells(emb, cents)
+    # the session's IVF lists already hold every vector with its cell
+    idx = ivf_index(spark, sf_dir).buckets.select("vec_id", "embedding", "cell")
     idx.write.mode("overwrite").partitionBy("cell").parquet(path)
     # explicit schema: a zero-vector corpus writes no data file for
     # inference; the relation is identical otherwise

@@ -24,13 +24,14 @@ their own output projection.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
-from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sim, l2_dist, l2_norm
+from skills_vectors_spark.functions.vector import cosine_from_norms, l2_dist, l2_norm
 
 
 def embed(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -50,11 +51,12 @@ class VectorIndex:
     53-68): a pre-materialized table keyed for candidate equi-joins.
     Both methods compute `buckets` over the spread corpus
     (sources.spread), so the persisted table is the wide stream side
-    of the search's probe join."""
+    of the search's probe join. IVF buckets are IVFFlat lists
+    (load_skill_vectors_pg.py:51): each row holds its vector and norm."""
 
     method: str  # "hyperplane_lsh" | "ivf"
     corpus: DataFrame  # (id, embedding)
-    buckets: DataFrame  # (id, table, bucket) | (id, cell)
+    buckets: DataFrame  # (id, table, bucket) | (id, cell, embedding, norm)
     id_col: str
     centers: list[list[float]] | None = None  # ivf: trained centroids
 
@@ -62,40 +64,31 @@ class VectorIndex:
 def build_index(
     corpus: DataFrame, id_col: str = "doc_id", method: str = "hyperplane_lsh"
 ) -> VectorIndex:
-    """Index build = one vectorized signature pass over the corpus.
-    Persist `index.buckets` as a table partitioned by (table, bucket)
-    to reuse it across many search batches — the reference's
-    load-once / search-many split."""
-    from skills_vectors_spark.operators.ann import hyperplane_buckets
+    """Index build = one vectorized pass over the corpus: LSH
+    signatures, or IVF cell assignment plus a once-per-row L2 norm.
+    Persist `index.buckets` to reuse it across many search batches —
+    the reference's load-once / search-many split."""
+    from skills_vectors_spark.operators.ann import assign_cells, hyperplane_buckets, train_ivf_centroids
 
     emb = corpus.select(F.col(id_col).alias("vec_id"), "embedding")
+    centers = None
     if method == "hyperplane_lsh":
-        spread = sources.spread(corpus.sparkSession, emb)
-        return VectorIndex(
-            method=method,
-            corpus=emb.withColumnRenamed("vec_id", id_col),
-            buckets=hyperplane_buckets(spread).withColumnRenamed("vec_id", id_col),
-            id_col=id_col,
-        )
-    if method == "ivf":
+        buckets = hyperplane_buckets(sources.spread(corpus.sparkSession, emb))
+    elif method == "ivf":
         # pgvector IVFFlat analogue (load_skill_vectors_pg.py:48-59):
         # train a coarse quantizer, assign every corpus vector to its
-        # nearest cell — the cell id IS the index
-        from skills_vectors_spark.operators.ann import assign_cells, train_ivf_centroids
-
-        # trained on the un-spread frame: its limit(MAX_TRAIN) sample
-        # follows partition order and seeds k-means (see sources)
+        # nearest cell — the cell id IS the index, and each list holds
+        # its vectors. Trained on the un-spread frame: its
+        # limit(MAX_TRAIN) sample follows partition order and seeds
+        # k-means (see sources)
         centers = train_ivf_centroids(emb)
-        return VectorIndex(
-            method=method,
-            corpus=emb.withColumnRenamed("vec_id", id_col),
-            buckets=assign_cells(sources.spread(corpus.sparkSession, emb), centers).select(
-                F.col("vec_id").alias(id_col), "cell"
-            ),
-            id_col=id_col,
-            centers=centers,
+        buckets = assign_cells(sources.spread(corpus.sparkSession, emb), centers).select(
+            "vec_id", "cell", "embedding", l2_norm("embedding").alias("norm")
         )
-    raise ValueError(f"unknown index method: {method}")
+    else:
+        raise ValueError(f"unknown index method: {method}")
+    emb, buckets = (df.withColumnRenamed("vec_id", id_col) for df in (emb, buckets))
+    return VectorIndex(method, emb, buckets, id_col, centers)
 
 
 def search_exact(
@@ -134,28 +127,28 @@ def search_exact(
         .where(F.col("q_id") != F.col("c_id"))
         .withColumn("score", score)
     )
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "rnk", "c_id", "score")
-    )
+    return _top_k(scored, k, order)
 
 
 def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = "q_id") -> DataFrame:
-    """ANN search against a built index: bucket the queries with the
-    same hash family, equi-join on (table, bucket) for candidates,
-    exact re-rank of candidates only (the fetch-then-verify shape,
-    skills_for_jobs.py:363,371-379)."""
-    from skills_vectors_spark.operators.ann import hyperplane_buckets
-
-    qe = queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
-    bc = index.buckets.withColumnRenamed(index.id_col, "c_id")
+    """ANN search against a built index, fetch-then-verify
+    (skills_for_jobs.py:363,371-379). LSH equi-joins the queries'
+    buckets for candidates, then re-ranks them against the corpus.
+    IVF joins each query's broadcast probe cells to the lists, which
+    carry vectors and norms: one join, no corpus read."""
+    # norms once per row, below the joins (as in search_exact)
+    qv = queries.select(
+        F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb")
+    ).withColumn("q_norm", l2_norm("q_emb"))
     if index.method == "hyperplane_lsh":
+        from skills_vectors_spark.operators.ann import hyperplane_buckets
+
         # the query batch is bucketed at its own width, never spread
-        bq = hyperplane_buckets(qe).withColumnRenamed("vec_id", "q_id")
+        bq = hyperplane_buckets(
+            queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
+        ).withColumnRenamed("vec_id", "q_id")
         cand = (
-            bq.join(bc, ["table", "bucket"])
+            bq.join(index.buckets.withColumnRenamed(index.id_col, "c_id"), ["table", "bucket"])
             .filter(F.col("q_id") != F.col("c_id"))
             .select("q_id", "c_id")
             # one hash exchange on q_id serves the dedup, the re-rank
@@ -165,40 +158,46 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
             .repartition(queries.sparkSession.sparkContext.defaultParallelism, "q_id")
             .distinct()
         )
-    else:  # ivf: probe the N_PROBE nearest cells per query
-        from skills_vectors_spark.operators.ann import N_PROBE
+        cv = index.corpus.select(
+            F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
+        ).withColumn("c_norm", l2_norm("c_emb"))
+        pairs = cand.join(F.broadcast(qv), "q_id").join(cv, "c_id")
+    else:  # ivf
+        lists = index.buckets.toDF("c_id", "cell", "c_emb", "c_norm")
+        pairs = lists.join(F.broadcast(_probes(qv, index.centers)), "cell").filter(
+            F.col("q_id") != F.col("c_id")
+        )
+    scored = pairs.withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
+    return _top_k(scored, k)
 
-        centers_df = queries.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(index.centers)], "cell int, center array<double>"
-        )
-        qc = qe.crossJoin(F.broadcast(centers_df)).withColumn(
-            "c_score", cosine_sim("embedding", "center")
-        )
-        wq = Window.partitionBy("vec_id").orderBy(F.col("c_score").desc(), F.col("cell"))
-        probes = (
-            qc.withColumn("pr", F.row_number().over(wq))
-            .filter(F.col("pr") <= N_PROBE)
-            .select(F.col("vec_id").alias("q_id"), "cell")
-        )
-        cand = (
-            F.broadcast(probes)
-            .join(bc, "cell")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select("q_id", "c_id")
-        )
-    # norms once per row, below the joins (as in search_exact)
-    qv = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb")
-    ).withColumn("q_norm", l2_norm("q_emb"))
-    cv = index.corpus.select(
-        F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
-    ).withColumn("c_norm", l2_norm("c_emb"))
-    scored = (
-        cand.join(F.broadcast(qv), "q_id")
-        .join(cv, "c_id")
-        .withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
+
+def _probes(qv: DataFrame, centers: list[list[float]]) -> DataFrame:
+    """qv plus `cell`, one row per probe: each query's N_PROBE nearest
+    centers by cosine, picked per row (no exchange) from one centers
+    literal. Sorting (score, -cell) descending ranks ties to the lower
+    cell and NULL scores (zero norm) last, as a NULL field sorts low."""
+    from skills_vectors_spark.operators.ann import N_PROBE
+
+    # one JSON string the optimizer folds to an array literal: 7 py4j calls, not
+    # ~130 per center; shortest-repr floats parse back to the same doubles
+    ranked = F.sort_array(
+        F.transform(
+            F.from_json(F.lit(json.dumps(centers)), "array<array<double>>"),
+            lambda c, i: F.struct(
+                cosine_from_norms("q_emb", c, "q_norm").alias("score"), (-i).alias("neg_cell")
+            ),
+        ),
+        asc=False,
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id"))
+    probes = qv.select("*", F.explode(F.slice(ranked, 1, N_PROBE)).alias("p"))
+    return probes.select(*qv.columns, (-F.col("p.neg_cell")).alias("cell"))
+
+
+def _top_k(scored: DataFrame, k: int, order: list[Column] | None = None) -> DataFrame:
+    """(q_id, rnk, c_id, score): the first k rows per query under
+    `order`, by default best cosine first (a WindowGroupLimit)."""
+    order = order or [F.col("score").desc(), F.col("c_id")]
+    w = Window.partitionBy("q_id").orderBy(*order)
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
@@ -209,16 +208,22 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
 def evaluate(results: DataFrame, gold: DataFrame, k: int = 10) -> DataFrame:
     """Per-query recall@k of `results` against `gold` (both in the
     (q_id, c_id) long format) — the reference's match counting
-    (skills_for_jobs.py:199-200, 209-211) as one semi-join + agg."""
-    hits = results.select("q_id", "c_id").join(
-        gold.select("q_id", "c_id"), ["q_id", "c_id"], "left_semi"
+    (skills_for_jobs.py:199-200, 209-211) as one aggregate of both,
+    tagged, under one q_id exchange: each result row in gold counts
+    once, gold q_ids without hits read 0, result-only q_ids drop."""
+    tagged = (
+        # a NULL q_id matches no gold row, as in an equi-join
+        results.where(F.col("q_id").isNotNull())
+        .select("q_id", "c_id", F.lit(False).alias("is_gold"))
+        .unionByName(gold.select("q_id", "c_id", F.lit(True).alias("is_gold")))
     )
-    per_q = (
-        gold.select("q_id")
-        .distinct()
-        .join(hits.groupBy("q_id").agg(F.count("*").alias("n_hit")), "q_id", "left")
-        .select("q_id", F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_match"))
+    per_q = tagged.groupBy("q_id").agg(
+        F.bool_or("is_gold").alias("in_gold"),
+        F.collect_set(F.when(F.col("is_gold"), F.col("c_id"))).alias("gold_ids"),
+        F.collect_list(F.when(~F.col("is_gold"), F.col("c_id"))).alias("result_ids"),
     )
+    n_match = F.size(F.filter("result_ids", lambda c: F.array_contains("gold_ids", c)))
+    per_q = per_q.where("in_gold").select("q_id", n_match.cast("long").alias("n_match"))
     return per_q.withColumn("recall", F.col("n_match") / F.lit(float(k)))
 
 

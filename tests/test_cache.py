@@ -129,7 +129,10 @@ def _arrays(v):
 
 
 def _bucket_rows(index):
-    return index.buckets.toPandas().sort_values(list(index.buckets.columns)).reset_index(drop=True)
+    # sorted on the key columns: pandas cannot order the IVF lists'
+    # embedding arrays
+    keys = [index.id_col, *(["cell"] if index.method == "ivf" else ["table", "bucket"])]
+    return index.buckets.toPandas().sort_values(keys).reset_index(drop=True)
 
 
 def test_quantizers_retrain_after_clear_and_per_session(spark, sf_dir):

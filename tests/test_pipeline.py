@@ -165,25 +165,31 @@ def _registered(spark, sf_dir):
     return {fn.__name__: fn(spark, sf_dir) for fn in fns}
 
 
-def _find(node, name):
-    """First node named `name` in a JVM SparkPlan tree, preorder."""
-    if node.nodeName() == name:
-        return node
+def _input_plan(df):
+    """The JVM SparkPlan tree of `df`, before adaptive execution."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+
+
+def _nodes(node):
+    """Every node of a JVM SparkPlan tree, preorder. A cache scan is a
+    leaf: the plan it caches is not walked."""
+    yield node
     children = node.children()
     for i in range(children.size()):
-        hit = _find(children.apply(i), name)
-        if hit is not None:
-            return hit
-    return None
+        yield from _nodes(children.apply(i))
+
+
+def _find(node, name):
+    """First node named `name` in a JVM SparkPlan tree, preorder."""
+    return next((n for n in _nodes(node) if n.nodeName() == name), None)
 
 
 def test_search_exact_streams_the_corpus_at_full_width(spark, one_file):
     """A one-file corpus is one scan partition; spread first, the
     nested-loop join streams it on every core."""
     corpus, queries = one_file
-    plan = pipeline.search_exact(corpus, queries)._jdf.queryExecution().executedPlan()
-    plan = plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
-    join = _find(plan, "BroadcastNestedLoopJoin")
+    join = _find(_input_plan(pipeline.search_exact(corpus, queries)), "BroadcastNestedLoopJoin")
     assert join is not None
     streamed = join.left().execute().getNumPartitions()
     assert streamed >= spark.sparkContext.defaultParallelism
@@ -220,6 +226,70 @@ def test_lsh_search_plans_one_q_id_exchange(spark, sf_dir, one_file):
         above = [line for line in lines[:bucket_join] if "Exchange" in line]
         assert len(above) == 1, above
         assert "Exchange hashpartitioning(q_id#" in above[0], above
+
+
+def test_ivf_search_is_one_probe_join(spark, one_file):
+    """IVF search picks its probe cells per query row and joins the
+    broadcast probes to the persisted lists once: no nested-loop join,
+    no window or shuffle below that join, and no scan of the corpus.
+    The queries are a local relation, so any file scan is the corpus."""
+    corpus, queries = one_file
+    index = pipeline.build_index(corpus, method="ivf")
+    index.buckets = index.buckets.persist()
+    try:
+        local = spark.createDataFrame(queries.toPandas(), queries.schema)
+        plan = _input_plan(pipeline.search(index, local))
+        joins = [n for n in _nodes(plan) if "Join" in n.nodeName()]
+        assert [j.nodeName() for j in joins] == ["BroadcastHashJoin"]
+        below = [n.nodeName() for n in _nodes(joins[0])]
+        assert not {"Window", "WindowGroupLimit", "Exchange"} & set(below), below
+        assert "InMemoryTableScan" in below
+        names = [n.nodeName() for n in _nodes(plan)]
+        assert not any(name.startswith("Scan ") for name in names), names
+    finally:
+        index.buckets.unpersist()
+
+
+def test_ivf_probes_rank_nulls_last_and_ties_by_cell(spark):
+    """Each query probes its N_PROBE best cells by cosine, equal scores
+    to the lower cell and NULL scores (a zero-norm center or query)
+    last: the cells a row_number window over (score DESC NULLS LAST,
+    cell ASC) picks."""
+    from collections import defaultdict
+
+    from skills_vectors_spark.operators.ann import N_PROBE
+
+    # cell 1 is zero-norm; cells 0, 2 and 9 tie, as do 6 and 7, and the
+    # 8th/9th places (cells 8 and 10) for query 1
+    centers = [[1, 0], [0, 0], [1, 0], [0, 1], [-1, 0], [0, -1], [1, 1], [1, 1], [-1, -1], [2, 0], [-1, -1]]
+    centers = [[float(x) for x in c] for c in centers]
+    # one list member per cell, id 100 + cell
+    lists = spark.createDataFrame(
+        [(100 + c, c, [1.0, 0.0], 1.0) for c in range(len(centers))],
+        "doc_id long, cell int, embedding array<float>, norm double",
+    )
+    index = pipeline.VectorIndex("ivf", lists.select("doc_id", "embedding"), lists, "doc_id", centers)
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [-1.0, 0.5])], "q_id long, embedding array<float>"
+    )
+    got = defaultdict(set)
+    for r in pipeline.search(index, queries, k=len(centers)).collect():
+        got[r.q_id].add(r.c_id - 100)
+
+    cells = spark.createDataFrame(list(enumerate(centers)), "cell int, center array<double>")
+    w = Window.partitionBy("q_id").orderBy(F.col("c_score").desc(), F.col("cell"))
+    window_rule = (
+        queries.crossJoin(cells)
+        .withColumn("c_score", cosine_sim("embedding", "center"))
+        .withColumn("pr", F.row_number().over(w))
+        .filter(F.col("pr") <= N_PROBE)
+    )
+    want = defaultdict(set)
+    for r in window_rule.collect():
+        want[r.q_id].add(r.cell)
+    assert got == want
+    assert got[1] == {0, 2, 9, 6, 7, 3, 5, 8}
+    assert got[2] == set(range(N_PROBE))
 
 
 def _rerank_per_pair(cand, queries, corpus, k=10):
@@ -283,3 +353,36 @@ def test_searches_equal_the_per_pair_reference(spark, one_file):
     for name, cand in (("exact", exact), ("lsh", lsh), ("ivf", ivf)):
         want = _rows(_rerank_per_pair(cand, queries, corpus))
         assert _rows(got[name]).equals(want), name
+
+
+# ------------------------------------------------------------- evaluate
+
+
+def _eval_frames(spark):
+    """(results, gold) with every counting edge case: a duplicated
+    result row, a duplicated gold row, a result-only q_id (3) and a
+    gold q_id without hits (2, 4)."""
+    results = spark.createDataFrame(
+        [(1, 10), (1, 10), (1, 11), (1, 19), (2, 20), (3, 10)], "q_id long, c_id long"
+    )
+    gold = spark.createDataFrame(
+        [(1, 10), (1, 10), (1, 11), (1, 12), (2, 21), (4, 40)], "q_id long, c_id long"
+    )
+    return results, gold
+
+
+def test_evaluate_counts_each_result_row_once_per_gold_query(spark):
+    import pandas as pd
+
+    got = pipeline.evaluate(*_eval_frames(spark), k=10).toPandas()
+    want = pd.DataFrame({"q_id": [1, 2, 4], "n_match": [3, 0, 0], "recall": [0.3, 0.0, 0.0]})
+    pd.testing.assert_frame_equal(
+        got.sort_values("q_id").reset_index(drop=True), want, check_exact=True
+    )
+
+
+def test_evaluate_plans_one_exchange(spark):
+    lines = physical_plan(pipeline.evaluate(*_eval_frames(spark))).splitlines()
+    exchanges = [line for line in lines if "Exchange" in line]
+    assert len(exchanges) == 1, exchanges
+    assert "hashpartitioning(q_id#" in exchanges[0], exchanges

@@ -12,8 +12,8 @@ from skills_vectors_spark import registry
 from skills_vectors_spark.plans import physical_plan
 
 # Every entry here is an INTENTIONAL nested-loop: the build side is
-# constant-size (N_QUERIES=20 query vectors, N_CELLS=16 centroids) or
-# the query is the declared exact/oracle tier whose scale twin exists.
+# constant-size (N_QUERIES=20 query vectors) or the query is the
+# declared exact/oracle tier whose scale twin exists.
 BNLJ_ALLOWED = {
     "knn_exact",  # 20 broadcast query vecs x corpus — the exact tier
     "knn_filtered",  # same shape, metadata predicate pre-filters the corpus
@@ -24,8 +24,7 @@ BNLJ_ALLOWED = {
     "eval_backend_compare",  # consumes all ANN tiers + gold
     "report_pivot",  # consumes knn_exact
     "embed_knn_pipeline",  # embeds then knn_exact
-    "ann_ivf",  # 20 queries x 16 centroids probe ranking; r13 gate
-    # row additionally consumes knn_exact gold + 1-row scalar crosses
+    "ann_ivf",  # r13 gate row: knn_exact gold + 1-row scalar crosses
     "ann_lsh",  # r13 gate row: knn_exact gold + 1-row scalar crosses
     "ann_brp_l2",  # r13 gate row: same shape (L2 gold)
     "ann_pq",  # r13 gate row: same shape
