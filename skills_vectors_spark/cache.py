@@ -16,8 +16,8 @@ picks a kind also picks how long the entry lives:
   same way at any time. They live as long as the session.
 - **Result entries** (every other kind) hold anything that ran a job:
   persisted frames (``cached_df``, kind ``"df"``), the ANN indexes
-  (with the trained IVF centroids), PQ codebooks, the PCA basis,
-  collected query rows and probe answers. ``clear()`` drops them too, and unpersists the
+  (with their trained IVF centroids and PQ codebooks), the PCA basis
+  and probe answers. ``clear()`` drops them too, and unpersists the
   frames.
 
 Persisted frames model the build-once / read-many split of a real

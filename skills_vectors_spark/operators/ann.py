@@ -3,7 +3,7 @@ pgvector IVFFlat /root/reference/load_skill_vectors_pg.py:48-59,
 Milvus HNSW load_skill_vectors_milvus.py:53-68) re-expressed as
 batch Spark jobs.
 
-Three strategies, all subquadratic candidate generation + exact
+Five strategies, all subquadratic candidate generation + exact
 re-rank (the same fetch-then-verify overshoot the reference's gold
 query uses, skills_for_jobs.py:363,371-379):
 
@@ -12,11 +12,15 @@ query uses, skills_for_jobs.py:363,371-379):
   * ann_ivf       — IVF-style coarse quantizer (numpy Lloyd's k-means
                     cells, _kmeans) + nprobe probing (the IVFFlat
                     analogue)
+  * ann_pq        — product quantization: 8-byte codes scored by
+                    asymmetric distance (ADC) over a shortlist
+  * ann_ivf_pq    — IVF cells + residual PQ codes (FAISS IVFADC)
   * ann_brp_l2    — stock MLlib BucketedRandomProjectionLSH (L2)
 
-ann_lsh and ann_ivf are pipeline.search over a per-session index
-(lsh_index / ivf_index, each a pipeline.build_index); the exact gold
-is knn.ranked_knn, i.e. pipeline.search_exact.
+All but ann_brp_l2 are pipeline.search over a per-session index
+(lsh_index / ivf_index / pq_index / ivf_pq_index, each a
+pipeline.build_index); the exact gold, which every tier is scored
+against, is knn.ranked_knn, i.e. pipeline.search_exact.
 
 Scale: every strategy turns the all-pairs cross join into an
 equi-join on bucket/cell ids — shuffle-partitionable, skew-salted by
@@ -42,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import cache, pipeline, sources
-from skills_vectors_spark.functions.vector import cosine_sim
+from skills_vectors_spark.functions.vector import cosine_from_norms, l2_norm
 from skills_vectors_spark.operators.knn import K, N_QUERIES, ranked_knn
 from skills_vectors_spark.registry import register
 
@@ -140,15 +144,12 @@ def lsh_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
     )
 
 
-def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The N_QUERIES query vectors, drawn from the corpus."""
-    return sources.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES)
-
-
-def _cos_sim_rows(ranked: DataFrame) -> DataFrame:
-    """(q_id, rnk, c_id, cos_sim): a ranked search result with its
-    score rounded to 6 places."""
-    return ranked.select(
+def _cos_sim_rows(spark: SparkSession, sf_dir: str, index: pipeline.VectorIndex) -> DataFrame:
+    """(q_id, rnk, c_id, cos_sim): the top-K search of the N_QUERIES
+    query vectors, drawn from the corpus, with scores rounded to 6
+    places."""
+    queries = sources.load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < N_QUERIES)
+    return pipeline.search(index, queries, K, q_id_col="vec_id").select(
         "q_id", "rnk", "c_id", (F.round(F.col("score") * 1e6) / 1e6).alias("cos_sim")
     )
 
@@ -159,9 +160,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, then exact cosine re-rank of candidates only. Bucket join
     replaces the knn_exact cross join — candidate count is ~corpus /
     2^bits per table, independent of total corpus size."""
-    return _cos_sim_rows(
-        pipeline.search(lsh_index(spark, sf_dir), _queries(spark, sf_dir), K, q_id_col="vec_id")
-    )
+    return _cos_sim_rows(spark, sf_dir, lsh_index(spark, sf_dir))
 
 
 RECALL_GATE = 0.8  # suite-level recall@K floor, same bar as tests/test_ann.py
@@ -296,9 +295,9 @@ MAX_TRAIN = 16384  # coarse-quantizer training sample cap
 
 # The coarse quantizer is an INDEX — the reference builds it once at
 # load time (load_skill_vectors_pg.py:48-59) and searches many times.
-# The fitted centroids (and the PQ codebooks below) are result
-# entries of the session store (cache.py), keyed by corpus, so
-# repeated searches skip the fit and cache.clear() retrains.
+# The fitted centroids (and the PQ codebooks below) ride the session's
+# indexes, result entries of the session store (cache.py) keyed by
+# corpus, so repeated searches skip the fit and cache.clear() retrains.
 #
 # Training runs driver-side on a bounded uniform sample (numpy
 # Lloyd's): this is the standard IVF recipe — FAISS trains coarse
@@ -316,13 +315,18 @@ def _train_sample(emb: DataFrame) -> np.ndarray | None:
 
 
 def corpus_sample(spark: SparkSession, sf_dir: str) -> np.ndarray | None:
-    """Training sample of every corpus quantizer (IVF, PQ, PCA). Always
-    the full-width spread frame: the limit(MAX_TRAIN) sample rides
-    partition order, so the training frame's partitioning fixes the
-    seeded k-means init and with it every IVF/PQ result (verified by
-    bit-diff, r14). One frame for every trainer keeps the quantizers
-    independent of which query trained first."""
+    """Training sample of the corpus quantizers. Always the full-width
+    spread frame, the one every corpus index builds over (see
+    _spread_index): the limit(MAX_TRAIN) sample rides partition order,
+    so the training frame's partitioning fixes the seeded k-means init
+    and with it every IVF/PQ result (verified by bit-diff, r14)."""
     return _train_sample(sources.load_spread(spark, sf_dir, "embeddings"))
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Per row of X, the index of its nearest row of C by L2:
+    argmin_c ||x - c||^2 = argmin_c (||c||^2 - 2 x.c)."""
+    return ((C**2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
 
 
 def _kmeans(sample: np.ndarray, k: int, rng: np.random.Generator) -> np.ndarray:
@@ -331,9 +335,7 @@ def _kmeans(sample: np.ndarray, k: int, rng: np.random.Generator) -> np.ndarray:
     # corpus); normal tiers keep replace=False
     cent = sample[rng.choice(len(sample), k, replace=len(sample) < k)].copy()
     for _ in range(10):
-        # argmin_c ||x - c||^2 = argmin_c (||c||^2 - 2 x.c)
-        d = (cent**2).sum(axis=1)[None, :] - 2.0 * (sample @ cent.T)
-        assign = d.argmin(axis=1)
+        assign = _nearest(sample, cent)
         for c in range(k):
             members = sample[assign == c]
             if len(members):
@@ -356,57 +358,43 @@ def train_ivf_centroids(
     return [[float(x) for x in c] for c in cent]
 
 
-def ivf_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
-    """The corpus IVF index: its lists (vec_id, cell, embedding, norm)
-    plus the trained centers.
-    Built over the same full-width frame as corpus_sample (see there),
-    which k-means trains on; cells are assigned over the spread corpus."""
+def _spread_index(spark: SparkSession, sf_dir: str, method: str) -> pipeline.VectorIndex:
+    """This session's `method` index (kind "<method>_index"), built over
+    the full-width frame of corpus_sample (see there), which its
+    quantizers train on."""
     return _session_index(
         spark,
         sf_dir,
-        "ivf_index",
+        f"{method}_index",
         lambda: pipeline.build_index(
-            sources.load_spread(spark, sf_dir, "embeddings"), "vec_id", "ivf"
+            sources.load_spread(spark, sf_dir, "embeddings"), "vec_id", method
         ),
     )
+
+
+def ivf_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
+    """The corpus IVF index: its lists (vec_id, cell, embedding, norm)
+    plus the trained centers."""
+    return _spread_index(spark, sf_dir, "ivf")
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     return ivf_index(spark, sf_dir).centers
 
 
-def _query_rows(spark: SparkSession, sf_dir: str):
-    """The N_QUERIES query vectors on the driver, shared by ann_pq and
-    ann_ivf_pq (one filter+toPandas job per session, not one each)."""
-    return cache.memo(
-        spark,
-        ("query_rows", sf_dir),
-        lambda: _queries(spark, sf_dir)
-        .select("vec_id", "embedding")
-        .toPandas()
-        .sort_values("vec_id"),
-    )
-
-
 def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
     """(vec_id, embedding, cell) — nearest-centroid assignment as one
     Arrow-vectorized matmul per batch (the KMeans prediction rule):
     zero shuffle, zero row blow-up, linear in corpus size."""
-    # empty-corpus training yields zero centroids; keep C 2-D so the
-    # closure constructs (the batch loop never runs — no batches)
-    C = (
-        np.array(centers, dtype=np.float64)
-        if centers
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    c_sq = (C**2).sum(axis=1)
+    # an empty corpus trains no centroids: the batch loop never runs
+    C = np.array(centers, dtype=np.float64)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cell = (c_sq[None, :] - 2.0 * (V @ C.T)).argmin(axis=1)
+            cell = _nearest(V, C)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -435,9 +423,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_PROBE nearest centroids -> exact re-rank within probed cells.
     Corpus scan per query drops to nprobe/ncells of the data; at
     100 TB the cell assignment is the partitioning key."""
-    return _cos_sim_rows(
-        pipeline.search(ivf_index(spark, sf_dir), _queries(spark, sf_dir), K, q_id_col="vec_id")
-    )
+    return _cos_sim_rows(spark, sf_dir, ivf_index(spark, sf_dir))
 
 
 def ann_brp_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,11 +464,11 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ANN backend scored side-by-side against the exact gold
     standard — avg recall@K (match counting :199-200,209-211) and avg
     cosine of returned hits (:204-211) per backend, one row each.
-    Backends = hyperplane cosine LSH, IVF cell probing, and MLlib
-    BRP-L2 (the reference compares mixed-metric backends the same
-    way: Milvus L2 beside pgvector cosine). All per-backend results
-    union into ONE long DataFrame before a single semi-join + agg —
-    one pass over gold, not one per backend."""
+    Backends = hyperplane cosine LSH, IVF cell probing, PQ, IVF-PQ
+    and MLlib BRP-L2 (the reference compares mixed-metric backends
+    the same way: Milvus L2 beside pgvector cosine). All per-backend
+    results union into ONE long DataFrame before a single semi-join +
+    agg — one pass over gold, not one per backend."""
     gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
 
     def build_allr() -> DataFrame:
@@ -502,20 +488,26 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         return allr
 
     # referenced twice below (recall semi-join + similarity join);
-    # without a persist each reference re-runs ALL THREE backend
-    # pipelines — at scale that doubles three corpus-wide passes
+    # without a persist each reference re-runs ALL FIVE backend
+    # pipelines — at scale that doubles five corpus-wide passes
     allr = cache.cached_df("eval_backend_allr", spark, sf_dir, build_allr)
 
-    emb = sources.load(spark, sf_dir, "embeddings")
-    qv = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    cv = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
+    # norms once per row, below the joins: the pair projection folds
+    # only the dot product
+    emb = sources.load(spark, sf_dir, "embeddings").withColumn("norm", l2_norm("embedding"))
+    qv = emb.select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm")
+    )
+    cv = emb.select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), F.col("norm").alias("c_norm")
+    )
     hits = allr.join(gold, ["q_id", "c_id"], "left_semi").groupBy("backend").agg(
         F.count("*").alias("n_hits")
     )
     sims = (
         allr.join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
-        .withColumn("cs", cosine_sim("q_emb", "c_emb"))
+        .withColumn("cs", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
         .groupBy("backend")
         .agg(
             F.count("*").alias("n_returned"),
@@ -609,8 +601,8 @@ def _fit_pq(sample: np.ndarray | None, seed: int) -> np.ndarray:
     """(M, K, d/M) codebooks: one k-means per subspace, all drawing
     their inits from one rng in subspace order."""
     if sample is None:
-        # empty corpus: zero-width codebooks; the search path returns
-        # empty before they are ever applied
+        # empty corpus: zero-width codebooks; an empty index has no
+        # cells, so search never applies them
         return np.zeros((PQ_M, PQ_K, 0))
     d_sub = sample.shape[1] // PQ_M
     rng = np.random.default_rng(seed)
@@ -619,121 +611,144 @@ def _fit_pq(sample: np.ndarray | None, seed: int) -> np.ndarray:
     )
 
 
-def pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    """(M, K, DIM/M) product-quantization codebooks, trained
-    driver-side on a bounded sample exactly like the IVF coarse
-    quantizer (per-subspace Lloyd's) — the index-build step."""
-    return cache.memo(
-        spark, ("pq_codebooks", sf_dir), lambda: _fit_pq(corpus_sample(spark, sf_dir), SEED)
+def train_pq(emb: DataFrame, method: str) -> tuple[list[list[float]], np.ndarray]:
+    """(centers, codebooks) of a "pq" or "ivf_pq" index, trained
+    driver-side on one bounded sample of `emb` (as the IVF coarse
+    quantizer). Flat PQ is IVF-PQ with one cell centered at the origin:
+    its codebooks fit the vectors themselves (seed SEED). IVF-PQ fits
+    N_CELLS k-means centers (seed SEED, as train_ivf_centroids) and
+    codebooks on the residuals x - nearest center (seed SEED + 1) —
+    the FAISS IVFADC formulation: the coarse quantizer removes the
+    between-cell variance, so the 4-bit-per-subspace budget is spent
+    on the (much smaller) within-cell displacement. An empty corpus
+    trains no centers."""
+    sample = _train_sample(emb)
+    if sample is None:
+        return [], _fit_pq(None, SEED)
+    if method == "pq":
+        return [[0.0] * sample.shape[1]], _fit_pq(sample, SEED)
+    C = _kmeans(sample, N_CELLS, np.random.default_rng(SEED))
+    return [[float(x) for x in c] for c in C], _fit_pq(sample - C[_nearest(sample, C)], SEED + 1)
+
+
+def pq_encode(emb: DataFrame, centers: list[list[float]], books: np.ndarray) -> DataFrame:
+    """(vec_id, cell, code): each vector's nearest center (the
+    assign_cells rule) and the PQ code of its residual, packed 4 bits
+    per subspace, in one Arrow-vectorized pass — per subspace, the
+    nearest codebook entry by one matmul per batch."""
+    C = np.array(centers, dtype=np.float64)
+    d_sub = books.shape[2]
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            cell = _nearest(V, C)
+            R = V - C[cell]
+            code = np.zeros(len(V), dtype=np.int64)
+            for m in range(PQ_M):
+                code |= _nearest(R[:, m * d_sub : (m + 1) * d_sub], books[m]) << (4 * m)
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cell.astype(np.int32), "code": code})
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        encode, "vec_id long, cell int, code long"
     )
 
 
-def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (the memory-bound scale tier: 8-byte
-    codes instead of 256-byte vectors — at 100 TB the codes for the
-    WHOLE corpus fit in cluster RAM). Encode: per-subspace nearest
-    codebook entry, one matmul per Arrow batch. Search: asymmetric
-    distance computation — each query precomputes an (M x K) lookup
-    table of exact subspace distances, scoring a code is M table
-    gathers; top candidates get an exact cosine re-rank (the same
-    overshoot-then-verify shape as the reference's gold query,
-    skills_for_jobs.py:363,371-379)."""
-    books = pq_codebooks(spark, sf_dir)  # (M, K, d_sub)
-    d_sub = books.shape[2]
-    q_rows = _query_rows(spark, sf_dir)
-    if not len(q_rows):  # empty corpus / no query slice: empty result
-        return spark.createDataFrame(
-            [], "q_id long, rnk long, c_id long, cos_sim double"
-        )
-    Q = np.stack(q_rows["embedding"].to_numpy()).astype(np.float64)  # (nq, DIM)
-    q_ids = q_rows["vec_id"].to_numpy()
-    # per-query ADC tables: luts[q, m, k] = ||Q[q, sub m] - books[m, k]||^2
-    luts = np.empty((len(Q), PQ_M, PQ_K))
-    for m in range(PQ_M):
-        qs = Q[:, m * d_sub : (m + 1) * d_sub]
-        diff = qs[:, None, :] - books[m][None, :, :]
-        luts[:, m, :] = (diff**2).sum(axis=2)
-    n_cand = K * PQ_OVERSHOOT
+def adc_shortlist(
+    lists: DataFrame,
+    queries: pd.DataFrame,
+    centers: list[list[float]],
+    books: np.ndarray,
+    n_cand: int,
+) -> DataFrame:
+    """(q_id, c_id): each query's n_cand best rows of the PQ lists
+    (c_id, cell, code) by asymmetric distance (ADC), ordered by
+    (adc, c_id), its self-match dropped. `queries` is the collected
+    (q_id, embedding) batch.
+
+    Each query probes its N_PROBE nearest cells by L2 (||c||^2 -
+    2 q.c, ties to the lower cell). The residuals are L2, so this rank
+    deliberately differs from IVF's cosine probes (pipeline._probes).
+    Per (query, probe) the closure holds an (M x K) table of exact
+    squared subspace distances from the query's residual; scoring a
+    code is M table gathers, and only these nq x N_PROBE tables exist,
+    whatever the cell count. One pass scores each batch and keeps each
+    query's local top n_cand by (adc, c_id), a superset of its share
+    of the global top under any partitioning; one window keeps the
+    global top."""
+    if not centers:  # an empty index: no cell to probe
+        queries = queries.iloc[:0]
+    nq, d_sub = len(queries), books.shape[2]
+    q_ids = queries["q_id"].to_numpy()
+    # reshaped so that empty inputs stay 2-D
+    Q = np.array(queries["embedding"].tolist(), dtype=np.float64).reshape(nq, PQ_M * d_sub)
+    C = np.array(centers, dtype=np.float64).reshape(len(centers), PQ_M * d_sub)
+    rank = (C**2).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
+    probes = np.argsort(rank, axis=1, kind="stable")[:, :N_PROBE]  # (nq, P)
+    # slot[q, cell] = the probe's place in probes[q], -1 if unprobed
+    slot = np.full((nq, len(C)), -1)
+    slot[np.arange(nq)[:, None], probes] = np.arange(probes.shape[1])
+    R = (Q[:, None, :] - C[probes]).reshape(*probes.shape, PQ_M, 1, d_sub)
+    luts = ((R - books[None, None]) ** 2).sum(axis=-1)  # (nq, P, M, K)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(V), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                sub = V[:, m * d_sub : (m + 1) * d_sub]
-                cent = books[m]
-                codes[:, m] = (
-                    (cent**2).sum(axis=1)[None, :] - 2.0 * (sub @ cent.T)
-                ).argmin(axis=1)
-            # adc[q, i] = sum_m luts[q, m, codes[i, m]] — gather via
-            # flattened (m, k) indices: one fancy-index per batch
-            flat = codes + (np.arange(PQ_M) * PQ_K)[None, :]  # (n, M)
-            adc = luts.reshape(len(luts), PQ_M * PQ_K)[:, flat].sum(axis=2)
-            ids = pdf["vec_id"].to_numpy()
-            out = {"q_id": [], "c_id": [], "adc": []}
-            keep = min(n_cand, adc.shape[1])
-            for qi in range(adc.shape[0]):
-                top = np.argpartition(adc[qi], keep - 1)[:keep]
-                out["q_id"].extend([int(q_ids[qi])] * len(top))
-                out["c_id"].extend(int(ids[t]) for t in top)
-                out["adc"].extend(float(adc[qi, t]) for t in top)
-            yield pd.DataFrame(out)
+            ids = pdf["c_id"].to_numpy()
+            cell = pdf["cell"].to_numpy()
+            codes = (pdf["code"].to_numpy()[:, None] >> (4 * np.arange(PQ_M))) & 0xF
+            for qi in range(nq):
+                p = slot[qi, cell]
+                rows = np.flatnonzero((p >= 0) & (ids != q_ids[qi]))
+                adc = np.zeros(len(rows))
+                for m in range(PQ_M):
+                    adc += luts[qi, p[rows], m, codes[rows, m]]
+                top = np.lexsort((ids[rows], adc))[:n_cand]
+                yield pd.DataFrame(
+                    {"q_id": np.full(len(top), q_ids[qi]), "c_id": ids[rows[top]], "adc": adc[top]}
+                )
 
-    cand_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("c_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-    # per-partition candidates: each partition returns its local ADC
-    # top keep; the global window below merges them (candidates per
-    # query = keep x n_partitions upper bound, still << corpus)
-    # sized scan for the ADC scoring pass (results are
-    # partition-independent: each partition emits its local top
-    # n_cand, a superset of the global top n_cand); the codebook
-    # training keeps the full-width frame — see corpus_sample
-    emb_sp = sources.load_spread(spark, sf_dir, "embeddings", sized=True)
-    cand = emb_sp.select("vec_id", "embedding").mapInPandas(score, cand_schema)
-    w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), F.col("c_id"))
-    shortlist = (
-        cand.filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("arnk", F.row_number().over(w_adc))
+    w = Window.partitionBy("q_id").orderBy("adc", "c_id")
+    return (
+        lists.mapInPandas(score, "q_id long, c_id long, adc double")
+        .withColumn("arnk", F.row_number().over(w))
         .filter(F.col("arnk") <= n_cand)
+        .select("q_id", "c_id")
     )
-    qv = _queries(spark, sf_dir).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cv = sources.load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    scored = (
-        shortlist.join(F.broadcast(qv), "q_id")
-        .join(cv, "c_id")
-        .withColumn("score", cosine_sim("q_emb", "c_emb"))
-    )
-    return _cos_sim_rows(pipeline._top_k(scored, K))
 
 
-# ------------------------------------------------------------- IVF + PQ
+def pq_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
+    """The corpus PQ index: (vec_id, code) lists plus codebooks."""
+    return _spread_index(spark, sf_dir, "pq")
+
+
+def ivf_pq_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
+    """The corpus IVF-PQ index: (vec_id, cell, code) lists plus its
+    own centers and residual codebooks (it reads no IVF index)."""
+    return _spread_index(spark, sf_dir, "ivf_pq")
+
+
+def pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
+    """(M, K, DIM/M) product-quantization codebooks of pq_index."""
+    return pq_index(spark, sf_dir).codebooks
+
 
 def pq_residual_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    """PQ codebooks trained on RESIDUALS (x - nearest centroid) — the
-    FAISS IVFADC formulation: the coarse quantizer removes the
-    between-cell variance, so the 4-bit-per-subspace budget is spent
-    on the (much smaller) within-cell displacement."""
+    """(M, K, DIM/M) residual codebooks of ivf_pq_index."""
+    return ivf_pq_index(spark, sf_dir).codebooks
 
-    def fit() -> np.ndarray:
-        sample = corpus_sample(spark, sf_dir)
-        if sample is not None:
-            C = np.array(ivf_centroids(spark, sf_dir), dtype=np.float64)
-            cell = ((C**2).sum(axis=1)[None, :] - 2.0 * (sample @ C.T)).argmin(axis=1)
-            sample = sample - C[cell]
-        return _fit_pq(sample, SEED + 1)
 
-    return cache.memo(spark, ("pq_residual_codebooks", sf_dir), fit)
+def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN (the memory-bound scale tier: 8-byte
+    codes instead of 256-byte vectors — at 100 TB the codes for the
+    WHOLE corpus fit in cluster RAM): asymmetric distance computation
+    over every code, then an exact cosine re-rank of the shortlist
+    (the same overshoot-then-verify shape as the reference's gold
+    query, skills_for_jobs.py:363,371-379)."""
+    return _cos_sim_rows(spark, sf_dir, pq_index(spark, sf_dir))
 
 
 def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,152 +757,13 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/load_skill_vectors_pg.py:51 and a compressed
     in-RAM graph load_skill_vectors_milvus.py:55-63 — converge to at
     scale): coarse cells bound WHICH vectors each query scores
-    (nprobe/ncells of the corpus), packed 32-bit PQ codes bound WHAT
-    moves through the shuffle (4 bytes/vector instead of 256), ADC
-    table lookups bound the per-candidate cost, and an exact cosine
-    re-rank of the shortlist restores accuracy (the reference's own
+    (nprobe/ncells of the corpus), residual PQ codes bound what the
+    index holds (8 bytes/vector instead of 256), ADC table lookups
+    bound the per-candidate cost, and an exact cosine re-rank of the
+    shortlist restores accuracy (the reference's own
     overshoot-then-verify shape, skills_for_jobs.py:363,371-379).
-    The candidate join carries only (q_id, cell, c_id, code) — at
-    100 TB no embedding ever crosses the wire until the final
-    re-rank join fetches the few shortlisted vectors."""
-    ivf = ivf_index(spark, sf_dir)
-    if not ivf.centers:  # empty corpus: nothing to index or search
-        return spark.createDataFrame(
-            [], "q_id long, rnk long, c_id long, cos_sim double"
-        )
-    books = pq_residual_codebooks(spark, sf_dir)
-    C = np.array(ivf.centers, dtype=np.float64)
-    c_sq = (C**2).sum(axis=1)  # query-side probe ranking below
-    d_sub = books.shape[2]
-
-    # --- index build: residual-encode straight from the persisted IVF
-    # lists (ivf_index, which ann_ivf searches; each row holds vector
-    # and cell): one corpus argmin pass serves both IVF rows in a
-    # session, with no corpus back-join. An isolated cold ann_ivf_pq
-    # materializes the lists first (one extra cache write); at 100 TB
-    # the lists ARE the IVF index a deployment builds once for both.
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cell = pdf["cell"].to_numpy().astype(np.int64)
-            R = V - C[cell]
-            code = np.zeros(len(V), dtype=np.int64)
-            for m in range(PQ_M):
-                sub = R[:, m * d_sub : (m + 1) * d_sub]
-                cent = books[m]
-                cm = ((cent**2).sum(axis=1)[None, :] - 2.0 * (sub @ cent.T)).argmin(axis=1)
-                code |= cm.astype(np.int64) << (4 * m)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": cell.astype("int32"), "code": code}
-            )
-
-    # the (vec_id, cell, code) table IS the IVFADC index — persist per
-    # session so repeated searches skip the encode pass entirely
-    index = cache.cached_df(
-        "ivfpq_index",
-        spark,
-        sf_dir,
-        lambda: ivf.buckets.select("vec_id", "embedding", "cell").mapInPandas(
-            encode,
-            T.StructType(
-                [
-                    T.StructField("vec_id", T.LongType()),
-                    T.StructField("cell", T.IntegerType()),
-                    T.StructField("code", T.LongType()),
-                ]
-            ),
-        ),
-    )
-
-    # --- query side: probe lists + per-(query, cell) ADC tables,
-    # all driver-side over N_QUERIES rows (constant work)
-    q_rows = _query_rows(spark, sf_dir)
-    Q = np.stack(q_rows["embedding"].to_numpy()).astype(np.float64)
-    q_ids = q_rows["vec_id"].to_numpy()
-    qc_d2 = c_sq[None, :] - 2.0 * (Q @ C.T)  # (nq, ncells) L2 rank
-    probe_cells = np.argsort(qc_d2, axis=1)[:, :N_PROBE]
-    probes = spark.createDataFrame(
-        [
-            (int(q_ids[qi]), int(c))
-            for qi in range(len(Q))
-            for c in probe_cells[qi]
-        ],
-        "q_id long, cell int",
-    )
-    # ADC tables ONLY for the (query, probed-cell) pairs that can ever
-    # be scored — (nq x N_PROBE x M x K), independent of the total
-    # cell count (at production scale ncells ~ sqrt(N); an all-cells
-    # table would explode on the driver). Executors resolve a
-    # candidate row's (q, cell) to its table via binary search over
-    # the sorted composite keys.
-    nq = len(Q)
-    n_cells = len(C)
-    probe_keys = np.array(
-        sorted(
-            int(q_ids[qi]) * n_cells + int(c)
-            for qi in range(nq)
-            for c in probe_cells[qi]
-        ),
-        dtype=np.int64,
-    )
-    luts = np.empty((len(probe_keys), PQ_M, PQ_K))
-    for qi in range(nq):
-        for c in probe_cells[qi]:
-            slot = int(np.searchsorted(probe_keys, int(q_ids[qi]) * n_cells + int(c)))
-            r = Q[qi] - C[c]
-            for m in range(PQ_M):
-                diff = r[m * d_sub : (m + 1) * d_sub][None, :] - books[m]
-                luts[slot, m] = (diff**2).sum(axis=1)
-
-    # --- candidate scoring: ADC gather over (q_id, cell, code) rows;
-    # the join payload is ids + 4-byte codes only
-    cand = index.join(F.broadcast(probes), "cell").filter(F.col("q_id") != F.col("vec_id"))
-
-    def adc_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = pdf["q_id"].to_numpy()
-            cell = pdf["cell"].to_numpy().astype(np.int64)
-            code = pdf["code"].to_numpy().astype(np.int64)
-            # every candidate came through the probes join, so its
-            # (q, cell) key is guaranteed present in probe_keys
-            slot = np.searchsorted(probe_keys, q * n_cells + cell)
-            adc = np.zeros(len(pdf))
-            for m in range(PQ_M):
-                sub_code = (code >> (4 * m)) & 0xF
-                adc += luts[slot, m, sub_code]
-            yield pd.DataFrame({"q_id": q, "c_id": pdf["vec_id"], "adc": adc})
-
-    scored_cand = cand.mapInPandas(
-        adc_score,
-        T.StructType(
-            [
-                T.StructField("q_id", T.LongType()),
-                T.StructField("c_id", T.LongType()),
-                T.StructField("adc", T.DoubleType()),
-            ]
-        ),
-    )
-    n_cand = K * PQ_OVERSHOOT
-    w_adc = Window.partitionBy("q_id").orderBy(F.col("adc").asc(), F.col("c_id"))
-    shortlist = scored_cand.withColumn("arnk", F.row_number().over(w_adc)).filter(
-        F.col("arnk") <= n_cand
-    )
-    qv = _queries(spark, sf_dir).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cv = sources.load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    reranked = (
-        shortlist.join(F.broadcast(qv), "q_id")
-        .join(cv, "c_id")
-        .withColumn("score", cosine_sim("q_emb", "c_emb"))
-    )
-    return _cos_sim_rows(pipeline._top_k(reranked, K))
+    Only the shortlist's few vectors are fetched from the corpus."""
+    return _cos_sim_rows(spark, sf_dir, ivf_pq_index(spark, sf_dir))
 
 
 def ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

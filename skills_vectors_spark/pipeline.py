@@ -16,10 +16,10 @@ through all five stages, shared scans, broadcasts chosen end-to-end).
 Nothing here is sf_dir-bound: callers pass any DataFrame with an id
 column and either a text or an embedding column.
 
-This is the one implementation of exact top-k, LSH and IVF search:
-the registered knn/ann rows (operators/knn.py, operators/ann.py,
-embed_knn_pipeline) call these stages over their corpus and keep only
-their own output projection.
+This is the one implementation of exact top-k, LSH, IVF, PQ and
+IVF-PQ search: the registered knn/ann rows (operators/knn.py,
+operators/ann.py, embed_knn_pipeline) call these stages over their
+corpus and keep only their own output projection.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,30 +49,44 @@ class VectorIndex:
     """A built ANN index: the bucketed corpus plus what search needs.
     The Spark analogue of the reference's server-side index build
     (load_skill_vectors_pg.py:48-59, load_skill_vectors_milvus.py:
-    53-68): a pre-materialized table keyed for candidate equi-joins.
-    Both methods compute `buckets` over the spread corpus
+    53-68): a pre-materialized table keyed for candidate lookups.
+    Every method computes `buckets` over the spread corpus
     (sources.spread), so the persisted table is the wide stream side
-    of the search's probe join. IVF buckets are IVFFlat lists
-    (load_skill_vectors_pg.py:51): each row holds its vector and norm."""
+    of the search. IVF buckets are IVFFlat lists
+    (load_skill_vectors_pg.py:51): each row holds its vector and norm.
+    PQ and IVF-PQ buckets hold each vector's packed 4-bit-per-subspace
+    code; flat PQ is IVF-PQ with one cell centered at the origin, so
+    its lists leave the constant cell out."""
 
-    method: str  # "hyperplane_lsh" | "ivf"
+    method: str  # "hyperplane_lsh" | "ivf" | "pq" | "ivf_pq"
     corpus: DataFrame  # (id, embedding)
-    buckets: DataFrame  # (id, table, bucket) | (id, cell, embedding, norm)
+    # (id, table, bucket) | (id, cell, embedding, norm) | (id, code) | (id, cell, code)
+    buckets: DataFrame
     id_col: str
-    centers: list[list[float]] | None = None  # ivf: trained centroids
+    centers: list[list[float]] | None = None  # ivf, ivf_pq: trained centroids; pq: the origin
+    codebooks: np.ndarray | None = None  # pq, ivf_pq: (PQ_M, PQ_K, dim / PQ_M)
 
 
 def build_index(
     corpus: DataFrame, id_col: str = "doc_id", method: str = "hyperplane_lsh"
 ) -> VectorIndex:
     """Index build = one vectorized pass over the corpus: LSH
-    signatures, or IVF cell assignment plus a once-per-row L2 norm.
+    signatures, IVF cell assignment plus a once-per-row L2 norm, or
+    PQ / IVF-PQ cell assignment plus the packed residual code. IVF,
+    PQ and IVF-PQ first train their quantizers on one driver-side
+    sample of `corpus` (an eager job).
     Persist `index.buckets` to reuse it across many search batches —
     the reference's load-once / search-many split."""
-    from skills_vectors_spark.operators.ann import assign_cells, hyperplane_buckets, train_ivf_centroids
+    from skills_vectors_spark.operators.ann import (
+        assign_cells,
+        hyperplane_buckets,
+        pq_encode,
+        train_ivf_centroids,
+        train_pq,
+    )
 
     emb = corpus.select(F.col(id_col).alias("vec_id"), "embedding")
-    centers = None
+    centers = codebooks = None
     if method == "hyperplane_lsh":
         buckets = hyperplane_buckets(sources.spread(corpus.sparkSession, emb))
     elif method == "ivf":
@@ -85,10 +100,17 @@ def build_index(
         buckets = assign_cells(sources.spread(corpus.sparkSession, emb), centers).select(
             "vec_id", "cell", "embedding", l2_norm("embedding").alias("norm")
         )
+    elif method in ("pq", "ivf_pq"):
+        # trained on the un-spread frame, as IVF; flat PQ's one cell is
+        # a constant the search's scan projection supplies
+        centers, codebooks = train_pq(emb, method)
+        buckets = pq_encode(sources.spread(corpus.sparkSession, emb), centers, codebooks)
+        if method == "pq":
+            buckets = buckets.drop("cell")
     else:
         raise ValueError(f"unknown index method: {method}")
     emb, buckets = (df.withColumnRenamed("vec_id", id_col) for df in (emb, buckets))
-    return VectorIndex(method, emb, buckets, id_col, centers)
+    return VectorIndex(method, emb, buckets, id_col, centers, codebooks)
 
 
 def search_exact(
@@ -132,41 +154,55 @@ def search_exact(
 
 def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = "q_id") -> DataFrame:
     """ANN search against a built index, fetch-then-verify
-    (skills_for_jobs.py:363,371-379). LSH equi-joins the queries'
-    buckets for candidates, then re-ranks them against the corpus.
-    IVF joins each query's broadcast probe cells to the lists, which
-    carry vectors and norms: one join, no corpus read."""
+    (skills_for_jobs.py:363,371-379). IVF joins each query's broadcast
+    probe cells to the lists, which carry vectors and norms: one join,
+    no corpus read. The other methods pick candidate ids, then re-rank
+    them against the corpus: LSH equi-joins the queries' buckets; PQ
+    and IVF-PQ keep each query's k * PQ_OVERSHOOT best codes by
+    asymmetric distance (ann.adc_shortlist). That kernel needs the
+    query batch in its closure, so a PQ or IVF-PQ search collects the
+    queries once when the plan is built: a bounded eager job, and the
+    one break in the pipeline's "one lazy plan"."""
     # norms once per row, below the joins (as in search_exact)
     qv = queries.select(
         F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb")
     ).withColumn("q_norm", l2_norm("q_emb"))
-    if index.method == "hyperplane_lsh":
-        from skills_vectors_spark.operators.ann import hyperplane_buckets
-
-        # the query batch is bucketed at its own width, never spread
-        bq = hyperplane_buckets(
-            queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
-        ).withColumnRenamed("vec_id", "q_id")
-        cand = (
-            bq.join(index.buckets.withColumnRenamed(index.id_col, "c_id"), ["table", "bucket"])
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select("q_id", "c_id")
-            # one hash exchange on q_id serves the dedup, the re-rank
-            # and the top-k window. AQE keeps a keyed repartition at
-            # this width, where it would coalesce the distinct's own
-            # exchange to one task
-            .repartition(queries.sparkSession.sparkContext.defaultParallelism, "q_id")
-            .distinct()
-        )
-        cv = index.corpus.select(
-            F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
-        ).withColumn("c_norm", l2_norm("c_emb"))
-        pairs = cand.join(F.broadcast(qv), "q_id").join(cv, "c_id")
-    else:  # ivf
+    if index.method == "ivf":
         lists = index.buckets.toDF("c_id", "cell", "c_emb", "c_norm")
         pairs = lists.join(F.broadcast(_probes(qv, index.centers)), "cell").filter(
             F.col("q_id") != F.col("c_id")
         )
+    else:
+        if index.method == "hyperplane_lsh":
+            from skills_vectors_spark.operators.ann import hyperplane_buckets
+
+            # the query batch is bucketed at its own width, never spread
+            bq = hyperplane_buckets(
+                queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
+            ).withColumnRenamed("vec_id", "q_id")
+            cand = (
+                bq.join(index.buckets.withColumnRenamed(index.id_col, "c_id"), ["table", "bucket"])
+                .filter(F.col("q_id") != F.col("c_id"))
+                .select("q_id", "c_id")
+                # one hash exchange on q_id serves the dedup, the re-rank
+                # and the top-k window. AQE keeps a keyed repartition at
+                # this width, where it would coalesce the distinct's own
+                # exchange to one task
+                .repartition(queries.sparkSession.sparkContext.defaultParallelism, "q_id")
+                .distinct()
+            )
+        else:  # pq | ivf_pq
+            from skills_vectors_spark.operators.ann import PQ_OVERSHOOT, adc_shortlist
+
+            batch = queries.select(F.col(q_id_col).alias("q_id"), "embedding").toPandas()
+            cell = "cell" if index.method == "ivf_pq" else F.lit(0).alias("cell")
+            lists = index.buckets.select(F.col(index.id_col).alias("c_id"), cell, "code")
+            n_cand = k * PQ_OVERSHOOT
+            cand = adc_shortlist(lists, batch.sort_values("q_id"), index.centers, index.codebooks, n_cand)
+        cv = index.corpus.select(
+            F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
+        ).withColumn("c_norm", l2_norm("c_emb"))
+        pairs = cand.join(F.broadcast(qv), "q_id").join(cv, "c_id")
     scored = pairs.withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
     return _top_k(scored, k)
 

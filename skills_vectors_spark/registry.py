@@ -50,10 +50,9 @@ def register(name: str, oracle: str | None = None):
 #   entropy, zipf, pmi, winsorized, approx_percentile,
 #   eval_recall_lsh, scan_npy;
 # (c) r14-touched: dedup_minhash (candidate caches), the ANN family
-#   (ann_lsh / ann_ivf search per-session pipeline indexes, ann_ivf_pq
-#   encodes from the IVF index's cell assignment, ann_pq / ann_ivf_pq
-#   share the query-vector memo, ann_brp_l2 / eval_backend_compare
-#   consume the shared gold and allr cache), the TWS trio +
+#   (ann_lsh / ann_ivf / ann_pq / ann_ivf_pq search per-session
+#   pipeline indexes, ann_brp_l2 / eval_backend_compare consume the
+#   shared gold and allr cache), the TWS trio +
 #   stream_tumbling (run_to_completion retry path), and the
 #   cost-shift families' heads (jaccard/containment/production,
 #   tfidf/ndcg, embed pipeline) that ride the session caches the

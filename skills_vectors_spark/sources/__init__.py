@@ -22,9 +22,9 @@ how wide such a pass fans out, by one rule:
   ``BYTES_PER_TASK`` clamped to [1, defaultParallelism]; every other
   pass, and every ``spread`` call, targets defaultParallelism. The
   sized passes are the per-row Arrow passes over whole tables
-  (PQ scoring, tokenizing, shingle hashing); the ANN index builds
-  (LSH signatures, IVF cell assignment) run in pipeline.build_index
-  over a ``spread`` corpus.
+  (tokenizing, shingle hashing); the ANN index builds (LSH
+  signatures, IVF cell assignment, PQ encoding) run in
+  pipeline.build_index over a ``spread`` corpus.
 - **Training frames stay full width:** ``ann.corpus_sample`` takes
   ``limit(MAX_TRAIN)`` rows in partition order, and that sample seeds
   k-means, so its frame's partitioning fixes every IVF and PQ result.

@@ -131,25 +131,28 @@ def _arrays(v):
 def _bucket_rows(index):
     # sorted on the key columns: pandas cannot order the IVF lists'
     # embedding arrays
-    keys = [index.id_col, *(["cell"] if index.method == "ivf" else ["table", "bucket"])]
-    return index.buckets.toPandas().sort_values(keys).reset_index(drop=True)
+    keys = {"hyperplane_lsh": ["table", "bucket"], "ivf": ["cell"], "ivf_pq": ["cell"], "pq": []}
+    return index.buckets.toPandas().sort_values([index.id_col, *keys[index.method]]).reset_index(
+        drop=True
+    )
 
 
 def test_quantizers_retrain_after_clear_and_per_session(spark, sf_dir):
-    """IVF centroids (held by the IVF index), PQ codebooks and the PCA
-    basis are result entries: clear() retrains them, and a sibling
-    session trains its own instead of reading the parent's. The same
-    holds for the persisted bucket tables of both ANN indexes."""
+    """IVF centroids (held by the IVF index), PQ codebooks (held by the
+    PQ index) and the PCA basis are result entries: clear() retrains
+    them, and a sibling session trains its own instead of reading the
+    parent's. The same holds for the persisted bucket tables of the
+    ANN indexes."""
     import numpy as np
 
     from skills_vectors_spark.operators import ann, vector_blas
 
     trainers = {
         "ivf_index": lambda s: ann.ivf_centroids(s, sf_dir),
-        "pq_codebooks": lambda s: ann.pq_codebooks(s, sf_dir),
+        "pq_index": lambda s: ann.pq_codebooks(s, sf_dir),
         "pca_basis": lambda s: vector_blas.pca_basis(s, sf_dir),
     }
-    indexes = {"lsh_index": ann.lsh_index, "ivf_index": ann.ivf_index}
+    indexes = {"lsh_index": ann.lsh_index, "ivf_index": ann.ivf_index, "ivf_pq_index": ann.ivf_pq_index}
 
     def misses(s, kind):
         return cache.stats(s).get(kind, {}).get("misses", 0)

@@ -147,12 +147,13 @@ def one_file(spark, sf_dir, tmp_path_factory):
 
 
 def _searches(corpus, queries):
-    ivf = pipeline.build_index(corpus, method="ivf")
-    lsh = pipeline.build_index(corpus, method="hyperplane_lsh")
+    methods = {"ivf": "ivf", "lsh": "hyperplane_lsh", "pq": "pq", "ivf_pq": "ivf_pq"}
     return {
         "exact": pipeline.search_exact(corpus, queries),
-        "ivf": pipeline.search(ivf, queries),
-        "lsh": pipeline.search(lsh, queries),
+        **{
+            name: pipeline.search(pipeline.build_index(corpus, method=method), queries)
+            for name, method in methods.items()
+        },
     }
 
 
@@ -161,7 +162,15 @@ def _registered(spark, sf_dir):
     this module."""
     from skills_vectors_spark.operators import ann, embed, knn
 
-    fns = (knn.knn_exact, knn.knn_filtered, embed.embed_knn_pipeline, ann.ann_lsh, ann.ann_ivf)
+    fns = (
+        knn.knn_exact,
+        knn.knn_filtered,
+        embed.embed_knn_pipeline,
+        ann.ann_lsh,
+        ann.ann_ivf,
+        ann.ann_pq,
+        ann.ann_ivf_pq,
+    )
     return {fn.__name__: fn(spark, sf_dir) for fn in fns}
 
 
@@ -353,6 +362,82 @@ def test_searches_equal_the_per_pair_reference(spark, one_file):
     for name, cand in (("exact", exact), ("lsh", lsh), ("ivf", ivf)):
         want = _rows(_rerank_per_pair(cand, queries, corpus))
         assert _rows(got[name]).equals(want), name
+
+
+@pytest.fixture(scope="module")
+def tied(spark):
+    """(corpus, queries): 800 random vectors and two hot ones, each hot
+    vector under 800 ids spread over the id range, so that exact ADC
+    ties straddle the K*PQ_OVERSHOOT cut, also within either partition
+    of a two-way split. Rows come in shuffled id order, so no partition
+    sees its ids sorted. The queries are drawn from the corpus, hot and
+    not."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    V = rng.standard_normal((2400, 64)).astype(np.float32)
+    V[0::3], V[1::3] = V[0], V[1]
+    corpus = spark.createDataFrame(
+        [(int(i), V[i].tolist()) for i in rng.permutation(len(V))],
+        "doc_id long, embedding array<float>",
+    )
+    queries = corpus.filter(F.col("doc_id") < 6).withColumnRenamed("doc_id", "q_id")
+    return corpus, queries
+
+
+def _adc_reference(index, corpus, queries, n_cand):
+    """(q_id, c_id) rows: each query's global (adc, c_id) shortlist
+    without itself, in numpy from the index's centers and codebooks."""
+    import numpy as np
+
+    from skills_vectors_spark.operators.ann import N_PROBE, PQ_M
+
+    def nearest(X, B):
+        return ((B**2).sum(axis=1)[None, :] - 2.0 * (X @ B.T)).argmin(axis=1)
+
+    C, books = np.array(index.centers), index.codebooks
+    d_sub = books.shape[2]
+    pdf = corpus.toPandas()
+    ids = pdf["doc_id"].to_numpy()
+    V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    cell = nearest(V, C)
+    R = V - C[cell]
+    codes = np.stack([nearest(R[:, m * d_sub : (m + 1) * d_sub], books[m]) for m in range(PQ_M)], 1)
+    rows, straddled = [], False
+    for r in queries.toPandas().itertuples():
+        q = np.asarray(r.embedding, dtype=np.float64)
+        probes = list(np.argsort((C**2).sum(axis=1) - 2.0 * (C @ q), kind="stable")[:N_PROBE])
+        sel = np.flatnonzero(np.isin(cell, probes) & (ids != r.q_id))
+        adc = np.zeros(len(sel))
+        for m in range(PQ_M):
+            sub = slice(m * d_sub, (m + 1) * d_sub)
+            luts = np.stack([(((q - C[c])[sub] - books[m]) ** 2).sum(axis=1) for c in probes])
+            adc += luts[[probes.index(c) for c in cell[sel]], codes[sel, m]]
+        order = np.lexsort((ids[sel], adc))
+        straddled |= adc[order[n_cand - 1]] == adc[order[n_cand]]
+        rows += [(r.q_id, int(ids[sel][o])) for o in order[:n_cand]]
+    return rows, straddled
+
+
+@pytest.mark.parametrize("method", ["pq", "ivf_pq"])
+def test_pq_search_equals_the_numpy_reference(spark, tied, method):
+    """pipeline.search on a PQ or IVF-PQ index is the global (adc, c_id)
+    shortlist without self, re-ranked per pair, whatever the
+    partitioning: exact ADC ties at the cut go to the lower c_id, also
+    where one partition holds more tied rows than the cut."""
+    from dataclasses import replace
+
+    from skills_vectors_spark.operators.ann import PQ_OVERSHOOT
+
+    corpus, queries = tied
+    index = pipeline.build_index(corpus, method=method)
+    rows, straddled = _adc_reference(index, corpus, queries, 10 * PQ_OVERSHOOT)
+    assert straddled, "no exact ADC tie across the cut: the corpus does not test the tie rule"
+    cand = spark.createDataFrame(rows, "q_id long, c_id long")
+    want = _rows(_rerank_per_pair(cand, queries, corpus))
+    for lists in (index.buckets, index.buckets.coalesce(2)):
+        assert lists.rdd.getNumPartitions() >= 2
+        assert _rows(pipeline.search(replace(index, buckets=lists), queries)).equals(want)
 
 
 # ------------------------------------------------------------- evaluate

@@ -121,3 +121,34 @@ def test_no_sources_internals_outside_sources():
             if re.search(r"\bsources\._\w", line):
                 offenders.append(f"{py.relative_to(pkg)}:{n}")
     assert not offenders, f"private sources members used at: {offenders}"
+
+
+# The per-row passes that still take the sized spread target. Each
+# count is the file's number of call sites.
+SIZED_ALLOWED = {
+    "operators/dedup.py": 2,  # shingle_sigs, dedup_substring
+    "operators/relevance.py": 1,  # _term_freqs
+}
+
+
+def test_sized_spread_only_at_allowlisted_call_sites():
+    """`load_spread(..., sized=True)` is the narrower spread target; a
+    new sized caller (or one that moved back) must be argued onto the
+    allowlist, and each row that leaves it shrinks the list."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "skills_vectors_spark"
+    found = Counter()
+    for py in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            sized = [kw.value for kw in node.keywords if kw.arg == "sized"] + node.args[3:4]
+            if name == "load_spread" and not all(
+                isinstance(v, ast.Constant) and v.value is False for v in sized
+            ):
+                found[py.relative_to(pkg).as_posix()] += 1
+    assert not found - Counter(SIZED_ALLOWED), f"sized load_spread outside the allowlist: {found}"
