@@ -162,8 +162,16 @@ def entries(spark: SparkSession) -> dict[tuple, Any]:
         return dict(st.entries) if st is not None else {}
 
 
+def tally(spark: SparkSession, kind: str, what: str) -> None:
+    """Count one ``what`` event of ``kind`` for this session (for
+    example a stream's transient retry), reported by ``stats``."""
+    with _LOCK:
+        _store(spark).counts[kind, what] += 1
+
+
 def stats(spark: SparkSession) -> dict[str, dict[str, int]]:
-    """Hit and miss counts per key kind for this session."""
+    """Hit and miss counts per key kind for this session, plus the
+    events counted by ``tally``."""
     st = getattr(spark, _ATTR, None)
     out: dict[str, dict[str, int]] = {}
     if st is None:

@@ -694,12 +694,12 @@ def sink_upsert_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     restated = ev.filter(F.col("event_date") == F.lit(UPSERT_DATE).cast("date")).withColumn(
         "value", F.col("value") * 2
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        restated.write.mode("overwrite").partitionBy("event_date").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        restated.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_date")
+        .parquet(path)
+    )
     # explicit schema: a zero-row base write leaves no data file for
     # inference (empty increment); same relation otherwise
     return spark.read.schema(ev.schema).parquet(path).select(

@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -> SparkSession:
@@ -39,3 +39,25 @@ def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -
 
     ensure_workers_can_import(spark)
     return spark
+
+
+def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` (conf, temp views and functions copied;
+    SparkContext and cache manager shared) with ``conf`` set on the
+    clone only. A session is shared by every query planned on it, so
+    an operator that needs other settings plans on a clone; this is
+    the package's one conf write."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    return clone
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of ``spark``. Relations
+    resolved on another session keep what they resolved there (a file
+    relation its inferred schema, a temp view of a clone its rows)."""
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jds, spark)

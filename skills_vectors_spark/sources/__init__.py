@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from skills_vectors_spark import cache
+from skills_vectors_spark import cache, session
 
 TABLES = (
     "region",
@@ -177,9 +177,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scan. Branch on the dtype actually read rather than assuming a
     physical encoding. A corpus shipping TIMESTAMP(NANOS) parquet is
     handled too: Spark rejects nanos at schema resolution, so the
-    fallback retries that one read under the legacy nanos-as-long conf
-    (restored afterwards) and truncates the long column to the
-    engine's µs — the same truncation DuckDB applies.
+    fallback retries that one read on a ``session.scoped`` clone with
+    the legacy nanos-as-long conf (the caller's conf is untouched) and
+    truncates the long column to the engine's µs — the same truncation
+    DuckDB applies.
     """
     path = f"{sf_dir}/{name}.parquet"
     return cache.memo(spark, ("load", sf_dir, name), lambda: _load_uncached(spark, path, name))
@@ -199,16 +200,9 @@ def _load_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
     except AnalysisException as exc:
         if name != "events" or "NANOS" not in str(exc).upper():
             raise
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(conf_key, "false")
-    spark.conf.set(conf_key, "true")
-    try:
-        df = spark.read.parquet(path)
-        # the read above is lazy w.r.t. the conf only at planning time;
-        # schema resolution already happened, so restoring is safe
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    finally:
-        spark.conf.set(conf_key, prev)
+    nanos = session.scoped(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
+    df = session.rebind(nanos.read.parquet(path), spark)
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 # Temp-view bindings are session-lifetime plan entries (cache.py),

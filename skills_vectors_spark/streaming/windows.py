@@ -4,11 +4,21 @@ batch-only, so these generalize its per-row loop metrics A7 into
 real stateful stream processing).
 
 Each declared query actually RUNS a streaming query: file source ->
-windowed stateful aggregation -> memory sink, driven to completion
-with processAllAvailable() (the documented local test pattern). The
+windowed stateful aggregation -> sink, driven to completion with
+processAllAvailable() (the documented local test pattern). The
 oracles are the batch-equivalent GROUP BYs — for a bounded input that
 has fully arrived, streaming and batch semantics must agree, which is
 exactly what the driver's hash compare certifies.
+
+Every stream runs through one harness, ``drain``: start, process all
+available input, stop. Stateful operators keep one state-store
+instance per shuffle partition, with a snapshot and a commit each per
+micro-batch, so the bounded local stream runs at 8 partitions
+(``STATE_PARTITIONS``); the transformWithState rows add the RocksDB
+provider (``ROCKSDB``). A streaming query copies its session's conf
+when it starts, so ``drain`` sets these on a clone of the caller's
+session; the caller's session, shared by every other query planned on
+it, is never written.
 
 Scale: state lives in the state store keyed by (window, key);
 watermarks bound state size — without them an unbounded stream grows
@@ -18,12 +28,17 @@ across executors.
 
 from __future__ import annotations
 
+import logging
 import uuid
+from collections.abc import Callable
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from skills_vectors_spark import cache, session
 from skills_vectors_spark.registry import register
 
 # streaming file source needs an explicit schema; events.ts ships as
@@ -55,53 +70,65 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def run_to_completion(agg: DataFrame, mode: str = "complete") -> DataFrame:
-    """Start -> drain -> stop a streaming aggregation against a memory
-    sink; return the final result as a batch DataFrame.
+# a deployment sizes this to key cardinality x executor count; it is
+# fixed for a checkpoint's lifetime
+STATE_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
+ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+}
 
-    Stateful operators create one state-store instance per shuffle
-    partition, each with per-batch snapshot/commit overhead; for the
-    bounded local test stream we drop to 8 partitions while the query
-    runs (a real deployment sizes this to key cardinality x executor
-    count, and it is fixed for the checkpoint's lifetime)."""
-    from pyspark.errors import StreamingQueryException
 
-    spark = agg.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+def drain(
+    df: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    conf: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Start ``df``'s stream into the writer ``sink`` configures, process
+    everything available, stop, and return the stopped query (its
+    ``recentProgress`` stays readable). A query copies its session's
+    conf when it starts, so it starts on a ``session.scoped`` clone of
+    ``df``'s session carrying ``STATE_PARTITIONS`` (few state stores
+    for a small stream) plus ``conf``; the caller's session is never
+    written."""
+    clone = session.scoped(df.sparkSession, {**STATE_PARTITIONS, **(conf or {})})
+    q = sink(session.rebind(df, clone).writeStream).start()
     try:
-        # One guarded retry for a specific TRANSIENT infra failure:
-        # Spark's PythonWorkerFactory gives a freshly-spawned simple
-        # worker a hardcoded 10 s (PROCESS_WAIT_TIMEOUT_MS) to connect
-        # back, and the TransformWithState pre-init worker spawn can
-        # exceed it on a heavily-loaded host (observed twice on this
-        # VM during 2x-slowdown phases, r14). The failed attempt left
-        # no sink state behind (fresh memory-sink name + fresh temp
-        # checkpoint per attempt), so a retry recomputes from scratch
-        # — results identical, and the retry only ever ADDS wall time
-        # to the row that hit the flake. Any other error, or a second
-        # failure, propagates.
-        for attempt in (0, 1):
-            name = f"svs_mem_{uuid.uuid4().hex[:12]}"
-            try:
-                q = (
-                    agg.writeStream.outputMode(mode)
-                    .format("memory")
-                    .queryName(name)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
-                break
-            except StreamingQueryException as exc:
-                transient = "failed to connect back" in str(exc)
-                if attempt == 1 or not transient:
-                    raise
+        q.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+        q.stop()
+    return q
+
+
+def run_to_completion(
+    agg: DataFrame, mode: str = "complete", conf: dict[str, str] | None = None
+) -> DataFrame:
+    """``drain`` a streaming aggregation into a memory sink; return the
+    final result as a batch DataFrame of ``agg``'s session. The sink's
+    table is a temp view of ``drain``'s clone, rebound here, so the
+    caller's catalog never holds it.
+
+    One retry covers one TRANSIENT failure: Spark gives a freshly
+    spawned Python worker a hardcoded 10 s to connect back, which the
+    transformWithState worker spawn can exceed on a loaded host. Each
+    attempt has a fresh sink and checkpoint, so it recomputes the same
+    result (a foreachBatch sink's driver-side state or a file sink's
+    checkpoint would not, so ``drain`` never retries). A retry logs a
+    warning and counts as ``cache.stats(spark)["stream"]["retries"]``.
+    Any other error, or a second failure, propagates."""
+    spark = agg.sparkSession
+    for attempt in (0, 1):
+        name = f"svs_mem_{uuid.uuid4().hex[:12]}"
+        try:
+            q = drain(agg, lambda w: w.outputMode(mode).format("memory").queryName(name), conf)
+            break
+        except StreamingQueryException as exc:
+            if attempt == 1 or "failed to connect back" not in str(exc):
+                raise
+            logging.getLogger(__name__).warning("retrying a transient stream failure: %s", exc)
+            cache.tally(spark, "stream", "retries")
+    clone = SparkSession(spark.sparkContext, q._jsq.sparkSession())
+    return session.rebind(clone.table(name), spark)
 
 
 @register(
@@ -424,11 +451,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = stream_events(spark, sf_dir)
-    q = ev.writeStream.outputMode("append").foreachBatch(upsert).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(ev, lambda w: w.outputMode("append").foreachBatch(upsert))
     import os
 
     if not os.path.isdir(target):  # zero micro-batches ran: empty store
@@ -607,33 +630,22 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    # v_nan computed SPARK-side, where NULL and NaN are still
+    # distinct (isnan(NULL) is false; the flag is true only for a
+    # genuine NaN) — worker-side both arrive as NaN in float64
+    ev = stream_events(spark, sf_dir).select(
+        "user_id",
+        "event_id",
+        "value",
+        (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
     )
-    try:
-        # v_nan computed SPARK-side, where NULL and NaN are still
-        # distinct (isnan(NULL) is false; the flag is true only for a
-        # genuine NaN) — worker-side both arrive as NaN in float64
-        ev = stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_id",
-            "value",
-            (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
-        )
-        profiled = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=HighWaterProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = run_to_completion(profiled, mode="update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    profiled = ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=HighWaterProcessor(),
+        outputStructType=out_schema,
+        outputMode="Update",
+        timeMode="None",
+    )
+    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -759,30 +771,19 @@ def stream_transform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ev = stream_events(spark, sf_dir).select(
+        "user_id",
+        "event_id",
+        "value",
+        (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
     )
-    try:
-        ev = stream_events(spark, sf_dir).select(
-            "user_id",
-            "event_id",
-            "value",
-            (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
-        )
-        profiled = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TopKProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = run_to_completion(profiled, mode="update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    profiled = ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=TopKProcessor(),
+        outputStructType=out_schema,
+        outputMode="Update",
+        timeMode="None",
+    )
+    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
     from pyspark.sql.window import Window as W
 
     # keep only each user's FINAL emission (highest n_seen) — earlier
@@ -891,25 +892,14 @@ def stream_transform_typecounts(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ev = stream_events(spark, sf_dir).select("user_id", "event_type")
+    profiled = ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=TypeCountProcessor(),
+        outputStructType=out_schema,
+        outputMode="Update",
+        timeMode="None",
     )
-    try:
-        ev = stream_events(spark, sf_dir).select("user_id", "event_type")
-        profiled = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TypeCountProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = run_to_completion(profiled, mode="update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
     from pyspark.sql.window import Window as W
 
     # each user's FINAL emission carries the complete map snapshot
@@ -1026,22 +1016,13 @@ def stream_sink_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("window.start").alias("window_start"), "n", "sum_value")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        agg,
+        lambda w: w.outputMode("append")
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", chk),
+    )
     return spark.read.schema("window_start timestamp, n long, sum_value double").parquet(out)
 
 
@@ -1154,16 +1135,10 @@ def stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             if wm is None or cand > wm:
                 state["wm"] = cand
 
-    wmk = raw.withWatermark("ts", "1 hour")
-    q = wmk.writeStream.foreachBatch(audit).start()
-    try:
-        q.processAllAvailable()
-        progress = list(q.recentProgress)
-    finally:
-        q.stop()
+    q = drain(raw.withWatermark("ts", "1 hour"), lambda w: w.foreachBatch(audit))
     # honesty gate: the mirror must equal the engine's own per-batch
     # watermark (epoch batches report 1970-01-01)
-    for p in progress:
+    for p in q.recentProgress:
         got = p.get("eventTime", {}).get("watermark")
         bid = int(p["batchId"])
         if got is None or bid not in mirror:

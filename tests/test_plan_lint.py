@@ -152,3 +152,28 @@ def test_sized_spread_only_at_allowlisted_call_sites():
             ):
                 found[py.relative_to(pkg).as_posix()] += 1
     assert not found - Counter(SIZED_ALLOWED), f"sized load_spread outside the allowlist: {found}"
+
+
+def test_no_conf_writes_outside_session_module():
+    """A session's conf is seen by every query planned on it, so an
+    operator that needs other settings plans on a `session.scoped`
+    clone. `.conf.set(` / `.conf.unset(` anywhere else writes shared
+    state that a concurrent query would inherit."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "skills_vectors_spark"
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        if py == pkg / "session.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            func = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(func, ast.Attribute)
+                and func.attr in ("set", "unset")
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "conf"
+            ):
+                offenders.append(f"{py.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, f"session conf written outside session.py: {offenders}"
