@@ -1,5 +1,5 @@
 """Vector-distance column macros built from Catalyst higher-order
-functions — pure JVM-side expressions, no UDFs, fully codegen-able.
+functions — pure JVM-side expressions, no UDFs.
 
 Re-expresses the reference's distance math:
   cosine  = dot(a,b)/(norm(a)*norm(b))   (/root/reference/skills_for_jobs.py:175-176)
@@ -10,9 +10,11 @@ so results are bit-identical with a DuckDB oracle computing over
 DOUBLE[] — verified: `list_cosine_similarity(a::DOUBLE[], b::DOUBLE[])`
 matches this fold with maxdiff == 0.0 on the test corpus.
 
-At 100 TB scale these expressions run inside whole-stage codegen on
-the executors; there is no Python boundary and no per-row allocation
-beyond the array traversal itself.
+The fold is interpreted, not compiled: ArrayAggregate is
+CodegenFallback, so the Project holding it drops out of whole-stage
+codegen (no `*(n)` marker in an executed plan). There is still no
+Python boundary; all-pairs bulk work belongs to the BLAS kernels of
+operators/vector_blas.py.
 """
 
 from __future__ import annotations

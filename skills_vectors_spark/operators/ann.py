@@ -20,7 +20,9 @@ query uses, skills_for_jobs.py:363,371-379):
 All but ann_brp_l2 are pipeline.search over a per-session index
 (lsh_index / ivf_index / pq_index / ivf_pq_index, each a
 pipeline.build_index); the exact gold, which every tier is scored
-against, is knn.ranked_knn, i.e. pipeline.search_exact.
+against, is knn.ranked_knn, i.e. pipeline.search_exact. Scoring is
+pipeline.evaluate: recall_lsh_per_query projects it and every gate
+row aggregates it. Only backend_compare_report counts on its own.
 
 Scale: every strategy turns the all-pairs cross join into an
 equi-join on bucket/cell ids — shuffle-partitionable, skew-salted by
@@ -169,27 +171,14 @@ RECALL_GATE = 0.8  # suite-level recall@K floor, same bar as tests/test_ann.py
 def recall_lsh_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of ann_lsh against the exact gold standard — the
     reference's ANN evaluation loop (skills_for_jobs.py:354-387,
-    199-200) as one join+agg. Library form: per-query detail rows
-    (q_id, n_match, recall); the seeded hyperplanes make the values
-    non-SQL-expressible, so the registered ``eval_recall_lsh`` reduces
-    this to a gate-column summary the driver can hash."""
-    gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
-    approx = ann_lsh(spark, sf_dir).select(
-        "q_id", "c_id", F.lit(1).alias("hit")
-    )
-    # single left join + one grouped count: the gold subtree (a full
-    # exact-KNN scan) and the LSH subtree each execute ONCE — the
-    # previous semi-join + distinct-q_id shape referenced gold twice,
-    # so Spark ran the whole gold cross-join/window pipeline twice.
-    # Every gold q_id keeps exactly K rows, so grouping the joined
-    # frame preserves the query set; count("hit") counts matches only.
-    per_q = (
-        gold.join(approx, ["q_id", "c_id"], "left")
-        .groupBy("q_id")
-        .agg(F.count("hit").cast("long").alias("n_match"))
-    )
+    199-200) as a projection of pipeline.evaluate. Library form:
+    per-query detail rows (q_id, n_match, recall); the seeded
+    hyperplanes make the values non-SQL-expressible, so the registered
+    ``eval_recall_lsh`` reduces this to a gate-column summary the
+    driver can hash."""
+    per_q = pipeline.evaluate(ann_lsh(spark, sf_dir), ranked_knn(spark, sf_dir, "cosine"), K)
     return per_q.select(
-        "q_id", "n_match", (F.round(F.col("n_match") / F.lit(float(K)) * 1e6) / 1e6).alias("recall")
+        "q_id", "n_match", (F.round(F.col("recall") * 1e6) / 1e6).alias("recall")
     )
 
 
@@ -303,8 +292,8 @@ MAX_TRAIN = 16384  # coarse-quantizer training sample cap
 # Lloyd's): this is the standard IVF recipe — FAISS trains coarse
 # quantizers on ~256 vectors per cell, so even at 100 TB the training
 # set is MAX_TRAIN rows, a constant. The full corpus is never
-# collected; only assignment (below) touches it, and that is a
-# per-row codegen expression with no shuffle.
+# collected; only assignment (below) touches it, and that is one
+# Arrow-vectorized matmul per batch with no shuffle.
 
 
 def _train_sample(emb: DataFrame) -> np.ndarray | None:
@@ -468,7 +457,9 @@ def backend_compare_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and MLlib BRP-L2 (the reference compares mixed-metric backends
     the same way: Milvus L2 beside pgvector cosine). All per-backend
     results union into ONE long DataFrame before a single semi-join +
-    agg — one pass over gold, not one per backend."""
+    agg — one pass over gold, not one per backend. This is the one
+    match count outside pipeline.evaluate: it is keyed by backend,
+    and evaluate groups by q_id alone."""
     gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
 
     def build_allr() -> DataFrame:
@@ -931,34 +922,22 @@ def _ann_gate_oracle() -> str:
 def _ann_gate_summary(
     spark: SparkSession, sf_dir: str, topk_fn, gold_metric: str, floor: float
 ) -> DataFrame:
-    """One-row coverage + recall-gate summary of an ANN operator: the
-    operator's top-k joined against the exact gold ranking
-    (ranked_knn — the reference's ground-truth full scan,
-    skills_for_jobs.py:354-387), reduced to driver-hashable columns.
-    Single full-outer join + one aggregation pass: the ANN top-k and
-    the exact gold subtrees each execute ONCE. The previous
-    three-arm shape (stats agg / semi-join / gold count) referenced
-    each subtree twice, so Spark materialized the whole ANN pipeline
-    AND the exact-KNN scan twice per gate row. Both sides are unique
-    on (q_id, c_id) by construction (top-K pairs), so the outer join
-    is 1:1 and plain counts over the markers reproduce the previous
-    arm values exactly."""
-    a = topk_fn(spark, sf_dir).select("q_id", "c_id", F.lit(1).alias("in_a"))
-    g = ranked_knn(spark, sf_dir, gold_metric).select(
-        "q_id", "c_id", F.lit(1).alias("in_g")
-    )
-    j = a.join(g, ["q_id", "c_id"], "full_outer")
-    return j.agg(
-        F.count_distinct(F.when(F.col("in_a").isNotNull(), F.col("q_id")))
-        .cast("long")
-        .alias("n_queries"),
-        F.count("in_a").cast("long").alias("n_results"),
-        F.count(F.when(F.col("in_g").isNotNull(), F.col("in_a"))).alias("n_match"),
-        F.count("in_g").alias("n_gold"),
-    ).select(
+    """One-row coverage + recall-gate summary of an ANN operator: one
+    aggregate over pipeline.evaluate of the operator's top-k against
+    the exact gold ranking (ranked_knn — the reference's ground-truth
+    full scan, skills_for_jobs.py:354-387). evaluate references each
+    input once, so the ANN top-k and the gold each execute once; a
+    second reference to either would re-run the whole search.
+    evaluate keeps gold q_ids only, and every ANN q_id is one: a row
+    for q needs a corpus vector other than q, which also puts q in
+    the gold. So n_queries counts the gold queries with a result."""
+    per_q = pipeline.evaluate(topk_fn(spark, sf_dir), ranked_knn(spark, sf_dir, gold_metric), K)
+    # a sum over zero rows (empty corpus) is NULL, where a count is 0
+    sums = [F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in ("n_result", "n_match", "n_gold")]
+    return per_q.agg(F.count(F.when(F.col("n_result") > 0, 1)).alias("n_queries"), *sums).select(
         "n_queries",
-        "n_results",
-        (F.col("n_results") == F.col("n_queries") * K).alias("full_k"),
+        F.col("n_result").alias("n_results"),
+        (F.col("n_result") == F.col("n_queries") * K).alias("full_k"),
         # vacuously true on zero gold rows (empty corpus) — the
         # 0/0 division would otherwise render NULL, not a verdict
         F.when(F.col("n_gold") == 0, F.lit(True))

@@ -11,8 +11,10 @@ Scale design (100 TB): every top-K here is pipeline.search_exact —
 the query set is the SMALL side, broadcast against the spread corpus;
 the per-query top-K is a row_number window that Spark >=3.5 rewrites
 into WindowGroupLimit, so shuffle volume is O(n_queries * K *
-n_partitions), independent of corpus size. Distance math is pure
-codegen (functions/vector.py) — no Python boundary.
+n_partitions), independent of corpus size. Distance math is the
+functions/vector.py folds, JVM-side but interpreted (ArrayAggregate
+is CodegenFallback) — no Python boundary. Recall counting is
+pipeline.evaluate.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import cache, sources
-from skills_vectors_spark.pipeline import search_exact
+from skills_vectors_spark.pipeline import evaluate, search_exact
 from skills_vectors_spark.registry import register
 
 K = 10
@@ -145,21 +147,11 @@ def eval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2 ranking scored against the cosine gold standard) — the exact
     evaluation structure of ref skills_for_jobs.py:199-200,209-211,
     where each backend's hits are counted against the exact-NN set.
-    """
-    gold = ranked_knn(spark, sf_dir, "cosine").select("q_id", "c_id")
-    cand = ranked_knn(spark, sf_dir, "l2").select("q_id", "c_id")
-    hits = gold.join(cand, ["q_id", "c_id"], "left_semi")
-    per_q = hits.groupBy("q_id").agg(F.count("*").alias("n_hit"))
-    # left join back onto the full query list so 0-hit queries appear
-    all_q = gold.select("q_id").distinct()
-    return (
-        all_q.join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_match"),
-            F.round(F.coalesce(F.col("n_hit"), F.lit(0)) / F.lit(float(K)), 6).alias("recall"),
-        )
-    )
+    A projection of pipeline.evaluate: every gold query, 0-hit ones
+    included."""
+    gold = ranked_knn(spark, sf_dir, "cosine")
+    cand = ranked_knn(spark, sf_dir, "l2")
+    return evaluate(cand, gold, K).select("q_id", "n_match", F.round("recall", 6).alias("recall"))
 
 
 def _pivot_cols_sql() -> str:

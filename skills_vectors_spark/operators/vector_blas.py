@@ -39,10 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import cache, sources
+from skills_vectors_spark.operators.dedup import COSINE_DUP_THRESHOLD
 from skills_vectors_spark.registry import register
 
 TOPK_K = 5
-PAIR_THRESHOLD = 0.4  # shared with operators/dedup.py dedup_embed_cosine
 
 
 # Per-worker-process corpus cache: Spark reuses Python workers across
@@ -106,7 +106,7 @@ _PAIR_SCHEMA = T.StructType(
              / 1e6 AS cos_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-          >= {PAIR_THRESHOLD}
+          >= {COSINE_DUP_THRESHOLD}
     """,
 )
 def dedup_embed_cosine_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,7 +130,7 @@ def dedup_embed_cosine_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_a, out_b, out_s = [], [], []
             for r in range(len(pdf)):
                 qi = pos[int(qid[r])]
-                cols = np.where((S[r] >= PAIR_THRESHOLD) & (np.arange(len(ids)) > qi))[0]
+                cols = np.where((S[r] >= COSINE_DUP_THRESHOLD) & (np.arange(len(ids)) > qi))[0]
                 for c in cols:
                     out_a.append(int(qid[r]))
                     out_b.append(int(ids[c]))

@@ -19,7 +19,11 @@ column and either a text or an embedding column.
 This is the one implementation of exact top-k, LSH, IVF, PQ and
 IVF-PQ search: the registered knn/ann rows (operators/knn.py,
 operators/ann.py, embed_knn_pipeline) call these stages over their
-corpus and keep only their own output projection.
+corpus and keep only their own output projection. evaluate() is
+likewise the one count of top-k matches against a gold set:
+eval_recall, recall_lsh_per_query and the ANN gate rows project or
+aggregate its output (ann.backend_compare_report, keyed by backend,
+keeps its own semi-join).
 """
 
 from __future__ import annotations
@@ -124,9 +128,10 @@ def search_exact(
     """Exact top-k: broadcast the (small) query set against the
     corpus, spread first (sources.spread) so the nested-loop join
     streams it on every core even when it is one parquet file; score
-    with codegen distance expressions, keep per-query top-k via
-    WindowGroupLimit. Self-matches (q_id == c_id) are dropped, as in
-    search(). The ground-truth tier (skills_for_jobs.py:354-387)."""
+    with the functions/vector.py folds (interpreted: ArrayAggregate
+    is CodegenFallback), keep per-query top-k via WindowGroupLimit.
+    Self-matches (q_id == c_id) are dropped, as in search(). The
+    ground-truth tier (skills_for_jobs.py:354-387)."""
     q = queries.select(F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb"))
     c = sources.spread(
         corpus.sparkSession,
@@ -242,11 +247,15 @@ def _top_k(scored: DataFrame, k: int, order: list[Column] | None = None) -> Data
 
 
 def evaluate(results: DataFrame, gold: DataFrame, k: int = 10) -> DataFrame:
-    """Per-query recall@k of `results` against `gold` (both in the
-    (q_id, c_id) long format) — the reference's match counting
-    (skills_for_jobs.py:199-200, 209-211) as one aggregate of both,
-    tagged, under one q_id exchange: each result row in gold counts
-    once, gold q_ids without hits read 0, result-only q_ids drop."""
+    """(q_id, n_match, recall, n_result, n_gold): per-query recall@k of
+    `results` against `gold` (both in the (q_id, c_id) long format) —
+    the reference's match counting (skills_for_jobs.py:199-200,
+    209-211) as one aggregate of both, tagged, under one q_id
+    exchange: each result row in gold counts once, gold q_ids without
+    hits read 0, result-only q_ids drop. n_result counts the query's
+    result c_ids, n_gold its distinct gold c_ids. Each input is
+    referenced once, so a caller aggregating this output runs each
+    subtree once."""
     tagged = (
         # a NULL q_id matches no gold row, as in an equi-join
         results.where(F.col("q_id").isNotNull())
@@ -259,8 +268,14 @@ def evaluate(results: DataFrame, gold: DataFrame, k: int = 10) -> DataFrame:
         F.collect_list(F.when(~F.col("is_gold"), F.col("c_id"))).alias("result_ids"),
     )
     n_match = F.size(F.filter("result_ids", lambda c: F.array_contains("gold_ids", c)))
-    per_q = per_q.where("in_gold").select("q_id", n_match.cast("long").alias("n_match"))
-    return per_q.withColumn("recall", F.col("n_match") / F.lit(float(k)))
+    per_q = per_q.where("in_gold").select(
+        "q_id",
+        n_match.cast("long").alias("n_match"),
+        F.size("result_ids").cast("long").alias("n_result"),
+        F.size("gold_ids").cast("long").alias("n_gold"),
+    )
+    recall = (F.col("n_match") / F.lit(float(k))).alias("recall")
+    return per_q.select("q_id", "n_match", recall, "n_result", "n_gold")
 
 
 def report_wide(results: DataFrame, k: int = 10) -> DataFrame:

@@ -48,6 +48,26 @@ def test_eval_recall_lsh_shape(spark, sf_dir):
     assert abs(summary[0].mean_recall - mean_recall) < 1e-6
 
 
+def test_ann_gate_runs_each_subtree_once(spark, sf_dir):
+    """The ann_ivf gate row plans one top-k window over the search
+    pairs and one scan of the persisted gold: a second reference to
+    either would run the whole search or the gold read twice."""
+    import re
+
+    from skills_vectors_spark.plans import _strip_cached_subtrees, physical_plan
+
+    plan = physical_plan(ann.ann_ivf_gate(spark, sf_dir))
+    live = _strip_cached_subtrees(plan)
+    assert live.count("Window [row_number()") == 1, live
+    lines = plan.splitlines()
+    gold_scans = [
+        a
+        for a, b in zip(lines, lines[1:])
+        if "InMemoryTableScan" in a and re.search(r"InMemoryRelation \[q_id#\d+L, rnk#", b)
+    ]
+    assert len(gold_scans) == 1, plan
+
+
 @quantized_recall_xfail
 def test_eval_backend_compare_report(spark, sf_dir):
     from skills_vectors_spark.operators.ann import (

@@ -168,6 +168,11 @@ CONST_TIER_QUERIES = [
     "sim_topk_bruteforce",
     "text_tfidf_sim",
     "eval_ndcg_mrr",
+    # every score ties: recall inputs' order and the top-k tie-breaks
+    "eval_recall",
+    "eval_recall_lsh",
+    "ann_lsh",
+    "ann_ivf",
 ]
 
 

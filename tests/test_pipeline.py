@@ -460,7 +460,15 @@ def test_evaluate_counts_each_result_row_once_per_gold_query(spark):
     import pandas as pd
 
     got = pipeline.evaluate(*_eval_frames(spark), k=10).toPandas()
-    want = pd.DataFrame({"q_id": [1, 2, 4], "n_match": [3, 0, 0], "recall": [0.3, 0.0, 0.0]})
+    want = pd.DataFrame(
+        {
+            "q_id": [1, 2, 4],
+            "n_match": [3, 0, 0],
+            "recall": [0.3, 0.0, 0.0],
+            "n_result": [4, 1, 0],
+            "n_gold": [3, 1, 1],
+        }
+    )
     pd.testing.assert_frame_equal(
         got.sort_values("q_id").reset_index(drop=True), want, check_exact=True
     )

@@ -177,3 +177,28 @@ def test_no_conf_writes_outside_session_module():
             ):
                 offenders.append(f"{py.relative_to(pkg)}:{node.lineno}")
     assert not offenders, f"session conf written outside session.py: {offenders}"
+
+
+def test_no_match_count_outside_pipeline():
+    """pipeline.evaluate is the one count of top-k matches against a
+    gold set; a caller projects or aggregates its output. A second
+    count would be a second recall rule to keep in step with it.
+    ann.backend_compare_report's per-backend count names its column
+    n_hits."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "skills_vectors_spark"
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        if py == pkg / "pipeline.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            func = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(func, ast.Attribute)
+                and func.attr == "alias"
+                and any(isinstance(a, ast.Constant) and a.value == "n_match" for a in node.args)
+            ):
+                offenders.append(f"{py.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, f"match count outside pipeline.evaluate: {offenders}"
