@@ -10,7 +10,11 @@ numbers move with SUITE composition — a growing query set raises
 executor cache pressure and GC on every member, so a +x% drift on
 one query between rounds cannot distinguish "this query regressed"
 from "the suite around it grew" (the r4 lesson: a +14% 43-query
-overlap drift with zero plan changes). `bench.py --isolate q1 q2 ...`
+overlap drift with zero plan changes). One such pressure was the
+codegen class cache: while a suite generated more classes than Spark's
+default 100-entry cache holds, every member recompiled its classes on
+every pass; session.get_spark now sizes the cache to the full suite.
+`bench.py --isolate q1 q2 ...`
 answers that: each named query runs in its OWN fresh process/JVM
 (warmup + min-of-3), immune to suite composition by construction.
 Compare isolated numbers across rounds to adjudicate; suite mode

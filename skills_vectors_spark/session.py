@@ -6,14 +6,34 @@ Scale notes: AQE handles runtime partition coalescing and skew joins;
 locally (on a 1000-executor cluster you would set it to ~2-3x total
 cores and let AQE coalesce). Arrow is enabled for every
 pandas_udf/mapInPandas boundary.
+
+The codegen class cache is sized to the engine's working set. Spark
+keeps Janino-compiled classes in one LRU per JVM, 100 entries by
+default, and one pass of the engine generates more distinct classes
+than that. Each pass then evicts its own classes, recompiles
+byte-identical source and JIT-compiles the fresh classes again, so a
+repeated plan (a top-k search per job vector, a re-run query) pays
+compilation every time.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Entries of Spark's codegen class cache. Distinct classes one pass
+# compiles, counted by CodegenMetrics on a 4-core host: perfbench's 14
+# query_mix rows at sf0.01 126 and all 189 registered rows at sf0.01
+# 1982 (tools/codegen_census.py), the vector_search pipeline stages on
+# a 400x32 corpus 119. 4096 holds the full suite with 2x headroom.
+# The conf is static: it applies only when get_spark creates the
+# SparkContext, because a running JVM keeps the cache it was started
+# with.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -> SparkSession:
@@ -32,8 +52,16 @@ def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
+    if spark.sparkContext.getConf().get(CODEGEN_CACHE_CONF) != str(CODEGEN_CACHE_ENTRIES):
+        logging.getLogger(__name__).warning(
+            "SparkContext was created without %s=%d: generated classes are "
+            "recompiled whenever a pass outgrows Spark's default cache",
+            CODEGEN_CACHE_CONF,
+            CODEGEN_CACHE_ENTRIES,
+        )
     spark.sparkContext.setLogLevel("WARN")
     from skills_vectors_spark.deploy import ensure_workers_can_import
 
