@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from skills_vectors_spark import registry  # noqa: E402
+from skills_vectors_spark import cache, registry, session  # noqa: E402
 from skills_vectors_spark.deploy import ensure_workers_can_import  # noqa: E402
 
 registry.load_all()
@@ -45,6 +45,9 @@ def entry(spark: SparkSession) -> DataFrame:
     from skills_vectors_spark.operators.knn import knn_exact
 
     ensure_workers_can_import(spark)
+    # a host builds its own session, whose codegen cache get_spark
+    # never sized: report it once per session
+    cache.memo(spark, ("conf", session.CODEGEN_CACHE_CONF), lambda: session.report_codegen_cache(spark))
     return knn_exact(spark, "/root/testdata/sf0.001")
 
 

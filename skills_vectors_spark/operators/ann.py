@@ -19,10 +19,13 @@ query uses, skills_for_jobs.py:363,371-379):
 
 All but ann_brp_l2 are pipeline.search over a per-session index
 (lsh_index / ivf_index / pq_index / ivf_pq_index, each a
-pipeline.build_index); the exact gold, which every tier is scored
-against, is knn.ranked_knn, i.e. pipeline.search_exact. Scoring is
-pipeline.evaluate: recall_lsh_per_query projects it and every gate
-row aggregates it. Only backend_compare_report counts on its own.
+pipeline.build_index of the spread corpus: one persisted table of
+(vec_id, <method key>, embedding, norm), so a search re-ranks its
+candidates without reading the corpus); the exact gold, which every
+tier is scored against, is knn.ranked_knn, i.e.
+pipeline.search_exact. Scoring is pipeline.evaluate:
+recall_lsh_per_query projects it and every gate row aggregates it.
+Only backend_compare_report counts on its own.
 
 Scale: every strategy turns the all-pairs cross join into an
 equi-join on bucket/cell ids — shuffle-partitionable, skew-salted by
@@ -74,19 +77,12 @@ def _plane_matrix(dim: int = DIM) -> np.ndarray:
     return rng.standard_normal((N_TABLES * N_PLANES, dim)).astype(np.float64)
 
 
-_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("table", T.IntegerType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-)
-
-
-def hyperplane_buckets(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, table, bucket) — sign-of-dot-product bit buckets, one row
-    per hash table. One numpy matmul per Arrow batch: the index-build
-    hot loop stays vectorized, output is long-format for equi-joins.
+def hyperplane_buckets(df: DataFrame) -> DataFrame:
+    """(vec_id, buckets, embedding): each vector's N_TABLES
+    sign-of-dot-product bit buckets as one array<bigint> (table t at
+    position t), the vector passed through. One numpy matmul per Arrow
+    batch keeps the index-build hot loop vectorized; a search
+    posexplodes the array into (table, bucket) rows for its equi-join.
 
     Runs at `df`'s own width: a corpus caller spreads its input
     (sources.spread), while a query side bounded at a few rows is left
@@ -105,45 +101,44 @@ def hyperplane_buckets(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
             bits = (V @ planes.T) > 0  # (n, T*P)
             bits = bits.reshape(len(pdf), N_TABLES, N_PLANES)
             buckets = (bits * weights).sum(axis=2)  # (n, T)
-            n = len(pdf)
             yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf[id_col].to_numpy(), N_TABLES),
-                    "table": np.tile(np.arange(N_TABLES, dtype=np.int32), n),
-                    "bucket": buckets.reshape(-1),
-                }
+                {"vec_id": pdf["vec_id"], "buckets": list(buckets), "embedding": pdf["embedding"]}
             )
 
-    return df.select(F.col(id_col).alias("vec_id"), "embedding").mapInPandas(run, _SIG_SCHEMA)
+    return _keyed(df, run, "buckets array<bigint>")
 
 
-def _session_index(
-    spark: SparkSession, sf_dir: str, kind: str, build: Callable[[], pipeline.VectorIndex]
-) -> pipeline.VectorIndex:
-    """This session's `kind` index of the corpus under sf_dir, built
-    once by `build()` — the build-once / search-many split of a real
-    vector store. Its bucket table is persisted through cached_df, so
-    clear() unpersists it and the next call rebuilds the index."""
+def _keyed(
+    emb: DataFrame, kernel: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]], key_ddl: str
+) -> DataFrame:
+    """`kernel` over (vec_id, embedding) as one Arrow pass whose rows are
+    (vec_id, <key_ddl columns>, embedding): the index kernels key each
+    vector and pass it through at its own element type."""
+    emb = emb.select("vec_id", "embedding")
+    emb_type = emb.schema["embedding"].dataType.simpleString()
+    return emb.mapInPandas(kernel, f"vec_id long, {key_ddl}, embedding {emb_type}")
 
-    def persisted() -> pipeline.VectorIndex:
-        index = build()
-        return replace(
-            index, buckets=cache.cached_df(kind, spark, sf_dir, lambda: index.buckets)
-        )
 
-    return cache.memo(spark, (kind, sf_dir), persisted)
+def _corpus_index(spark: SparkSession, sf_dir: str, method: str) -> pipeline.VectorIndex:
+    """This session's `method` index of the corpus under sf_dir, built
+    once over the full-width spread frame (the one corpus_sample trains
+    on, see there) — the build-once / search-many split of a real
+    vector store. Its kind (lsh_index, ivf_index, pq_index or
+    ivf_pq_index) keys the index and its table, which is persisted
+    through cached_df, so clear() unpersists it and the next call
+    rebuilds the index."""
+    kind = "lsh_index" if method == "hyperplane_lsh" else f"{method}_index"
+
+    def build() -> pipeline.VectorIndex:
+        index = pipeline.build_index(sources.load_spread(spark, sf_dir, "embeddings"), "vec_id", method)
+        return replace(index, buckets=cache.cached_df(kind, spark, sf_dir, lambda: index.buckets))
+
+    return cache.memo(spark, (kind, sf_dir), build)
 
 
 def lsh_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
-    """The corpus hyperplane-LSH index: (vec_id, table, bucket)."""
-    return _session_index(
-        spark,
-        sf_dir,
-        "lsh_index",
-        lambda: pipeline.build_index(
-            sources.load(spark, sf_dir, "embeddings"), "vec_id", "hyperplane_lsh"
-        ),
-    )
+    """The corpus hyperplane-LSH index: (vec_id, buckets, embedding, norm)."""
+    return _corpus_index(spark, sf_dir, "hyperplane_lsh")
 
 
 def _cos_sim_rows(spark: SparkSession, sf_dir: str, index: pipeline.VectorIndex) -> DataFrame:
@@ -306,7 +301,7 @@ def _train_sample(emb: DataFrame) -> np.ndarray | None:
 def corpus_sample(spark: SparkSession, sf_dir: str) -> np.ndarray | None:
     """Training sample of the corpus quantizers. Always the full-width
     spread frame, the one every corpus index builds over (see
-    _spread_index): the limit(MAX_TRAIN) sample rides partition order,
+    _corpus_index): the limit(MAX_TRAIN) sample rides partition order,
     so the training frame's partitioning fixes the seeded k-means init
     and with it every IVF/PQ result (verified by bit-diff, r14)."""
     return _train_sample(sources.load_spread(spark, sf_dir, "embeddings"))
@@ -347,24 +342,10 @@ def train_ivf_centroids(
     return [[float(x) for x in c] for c in cent]
 
 
-def _spread_index(spark: SparkSession, sf_dir: str, method: str) -> pipeline.VectorIndex:
-    """This session's `method` index (kind "<method>_index"), built over
-    the full-width frame of corpus_sample (see there), which its
-    quantizers train on."""
-    return _session_index(
-        spark,
-        sf_dir,
-        f"{method}_index",
-        lambda: pipeline.build_index(
-            sources.load_spread(spark, sf_dir, "embeddings"), "vec_id", method
-        ),
-    )
-
-
 def ivf_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
     """The corpus IVF index: its lists (vec_id, cell, embedding, norm)
     plus the trained centers."""
-    return _spread_index(spark, sf_dir, "ivf")
+    return _corpus_index(spark, sf_dir, "ivf")
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
@@ -372,7 +353,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
 
 
 def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
-    """(vec_id, embedding, cell) — nearest-centroid assignment as one
+    """(vec_id, cell, embedding) — nearest-centroid assignment as one
     Arrow-vectorized matmul per batch (the KMeans prediction rule):
     zero shuffle, zero row blow-up, linear in corpus size."""
     # an empty corpus trains no centroids: the batch loop never runs
@@ -385,23 +366,10 @@ def assign_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
             V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             cell = _nearest(V, C)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "cell": cell.astype(np.int32),
-                }
+                {"vec_id": pdf["vec_id"], "cell": cell.astype(np.int32), "embedding": pdf["embedding"]}
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        assign,
-        T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("embedding", T.ArrayType(T.FloatType())),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        ),
-    )
+    return _keyed(emb, assign, "cell int")
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,10 +591,11 @@ def train_pq(emb: DataFrame, method: str) -> tuple[list[list[float]], np.ndarray
 
 
 def pq_encode(emb: DataFrame, centers: list[list[float]], books: np.ndarray) -> DataFrame:
-    """(vec_id, cell, code): each vector's nearest center (the
-    assign_cells rule) and the PQ code of its residual, packed 4 bits
-    per subspace, in one Arrow-vectorized pass — per subspace, the
-    nearest codebook entry by one matmul per batch."""
+    """(vec_id, cell, code, embedding): each vector's nearest center
+    (the assign_cells rule) and the PQ code of its residual, packed 4
+    bits per subspace, the vector passed through, in one
+    Arrow-vectorized pass — per subspace, the nearest codebook entry
+    by one matmul per batch."""
     C = np.array(centers, dtype=np.float64)
     d_sub = books.shape[2]
 
@@ -640,11 +609,11 @@ def pq_encode(emb: DataFrame, centers: list[list[float]], books: np.ndarray) -> 
             code = np.zeros(len(V), dtype=np.int64)
             for m in range(PQ_M):
                 code |= _nearest(R[:, m * d_sub : (m + 1) * d_sub], books[m]) << (4 * m)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cell.astype(np.int32), "code": code})
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "cell": cell.astype(np.int32), "code": code, "embedding": pdf["embedding"]}
+            )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id long, cell int, code long"
-    )
+    return _keyed(emb, encode, "cell int, code long")
 
 
 def adc_shortlist(
@@ -712,14 +681,16 @@ def adc_shortlist(
 
 
 def pq_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
-    """The corpus PQ index: (vec_id, code) lists plus codebooks."""
-    return _spread_index(spark, sf_dir, "pq")
+    """The corpus PQ index: (vec_id, cell, code, embedding, norm) lists,
+    cell always 0, plus codebooks."""
+    return _corpus_index(spark, sf_dir, "pq")
 
 
 def ivf_pq_index(spark: SparkSession, sf_dir: str) -> pipeline.VectorIndex:
-    """The corpus IVF-PQ index: (vec_id, cell, code) lists plus its
-    own centers and residual codebooks (it reads no IVF index)."""
-    return _spread_index(spark, sf_dir, "ivf_pq")
+    """The corpus IVF-PQ index: (vec_id, cell, code, embedding, norm)
+    lists plus its own centers and residual codebooks (it reads no IVF
+    index)."""
+    return _corpus_index(spark, sf_dir, "ivf_pq")
 
 
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
@@ -753,7 +724,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound the per-candidate cost, and an exact cosine re-rank of the
     shortlist restores accuracy (the reference's own
     overshoot-then-verify shape, skills_for_jobs.py:363,371-379).
-    Only the shortlist's few vectors are fetched from the corpus."""
+    Only the shortlist's few vectors are read back, from the index's
+    own table."""
     return _cos_sim_rows(spark, sf_dir, ivf_pq_index(spark, sf_dir))
 
 

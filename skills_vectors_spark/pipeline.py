@@ -24,6 +24,11 @@ likewise the one count of top-k matches against a gold set:
 eval_recall, recall_lsh_per_query and the ANN gate rows project or
 aggregate its output (ann.backend_compare_report, keyed by backend,
 keeps its own semi-join).
+
+Every index is one per-vector table that carries each vector and its
+norm beside the method's key, as pgvector's IVFFlat lists do
+(load_skill_vectors_pg.py:51): search reads that table and the
+queries, never the corpus.
 """
 
 from __future__ import annotations
@@ -50,22 +55,16 @@ def embed(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Data
 
 @dataclass
 class VectorIndex:
-    """A built ANN index: the bucketed corpus plus what search needs.
+    """A built ANN index: one per-vector table plus what search needs.
     The Spark analogue of the reference's server-side index build
     (load_skill_vectors_pg.py:48-59, load_skill_vectors_milvus.py:
-    53-68): a pre-materialized table keyed for candidate lookups.
-    Every method computes `buckets` over the spread corpus
-    (sources.spread), so the persisted table is the wide stream side
-    of the search. IVF buckets are IVFFlat lists
-    (load_skill_vectors_pg.py:51): each row holds its vector and norm.
-    PQ and IVF-PQ buckets hold each vector's packed 4-bit-per-subspace
-    code; flat PQ is IVF-PQ with one cell centered at the origin, so
-    its lists leave the constant cell out."""
+    53-68). The method's key is LSH's N_TABLES bucket ids as one array
+    (`buckets`), IVF's `cell`, or PQ's and IVF-PQ's `cell` and packed
+    4-bit-per-subspace `code`; flat PQ is IVF-PQ with one cell
+    centered at the origin, so its cell is 0."""
 
     method: str  # "hyperplane_lsh" | "ivf" | "pq" | "ivf_pq"
-    corpus: DataFrame  # (id, embedding)
-    # (id, table, bucket) | (id, cell, embedding, norm) | (id, code) | (id, cell, code)
-    buckets: DataFrame
+    buckets: DataFrame  # (id, <method key>, embedding, norm)
     id_col: str
     centers: list[list[float]] | None = None  # ivf, ivf_pq: trained centroids; pq: the origin
     codebooks: np.ndarray | None = None  # pq, ivf_pq: (PQ_M, PQ_K, dim / PQ_M)
@@ -74,13 +73,18 @@ class VectorIndex:
 def build_index(
     corpus: DataFrame, id_col: str = "doc_id", method: str = "hyperplane_lsh"
 ) -> VectorIndex:
-    """Index build = one vectorized pass over the corpus: LSH
-    signatures, IVF cell assignment plus a once-per-row L2 norm, or
-    PQ / IVF-PQ cell assignment plus the packed residual code. IVF,
-    PQ and IVF-PQ first train their quantizers on one driver-side
-    sample of `corpus` (an eager job).
+    """Index build = one vectorized pass over the spread corpus
+    (sources.spread), so the table is the wide stream side of the
+    search: the method's Arrow kernel (ann.hyperplane_buckets,
+    ann.assign_cells or ann.pq_encode) keys each vector and passes it
+    through, and one projection adds its L2 norm. IVF, PQ and IVF-PQ
+    first train their quantizers on one driver-side sample of `corpus`
+    (an eager job) — the un-spread frame: its limit(MAX_TRAIN) sample
+    follows partition order and seeds k-means (see sources).
     Persist `index.buckets` to reuse it across many search batches —
-    the reference's load-once / search-many split."""
+    the reference's load-once / search-many split. A search reads the
+    table twice (candidates, then their vectors), so an unpersisted
+    index runs the build's pass twice per search."""
     from skills_vectors_spark.operators.ann import (
         assign_cells,
         hyperplane_buckets,
@@ -90,31 +94,23 @@ def build_index(
     )
 
     emb = corpus.select(F.col(id_col).alias("vec_id"), "embedding")
+    spread = sources.spread(corpus.sparkSession, emb)
     centers = codebooks = None
     if method == "hyperplane_lsh":
-        buckets = hyperplane_buckets(sources.spread(corpus.sparkSession, emb))
+        lists = hyperplane_buckets(spread)
     elif method == "ivf":
         # pgvector IVFFlat analogue (load_skill_vectors_pg.py:48-59):
         # train a coarse quantizer, assign every corpus vector to its
-        # nearest cell — the cell id IS the index, and each list holds
-        # its vectors. Trained on the un-spread frame: its
-        # limit(MAX_TRAIN) sample follows partition order and seeds
-        # k-means (see sources)
+        # nearest cell — the cell id IS the index
         centers = train_ivf_centroids(emb)
-        buckets = assign_cells(sources.spread(corpus.sparkSession, emb), centers).select(
-            "vec_id", "cell", "embedding", l2_norm("embedding").alias("norm")
-        )
+        lists = assign_cells(spread, centers)
     elif method in ("pq", "ivf_pq"):
-        # trained on the un-spread frame, as IVF; flat PQ's one cell is
-        # a constant the search's scan projection supplies
         centers, codebooks = train_pq(emb, method)
-        buckets = pq_encode(sources.spread(corpus.sparkSession, emb), centers, codebooks)
-        if method == "pq":
-            buckets = buckets.drop("cell")
+        lists = pq_encode(spread, centers, codebooks)
     else:
         raise ValueError(f"unknown index method: {method}")
-    emb, buckets = (df.withColumnRenamed("vec_id", id_col) for df in (emb, buckets))
-    return VectorIndex(method, emb, buckets, id_col, centers, codebooks)
+    lists = lists.withColumnRenamed("vec_id", id_col).withColumn("norm", l2_norm("embedding"))
+    return VectorIndex(method, lists, id_col, centers, codebooks)
 
 
 def search_exact(
@@ -159,21 +155,26 @@ def search_exact(
 
 def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = "q_id") -> DataFrame:
     """ANN search against a built index, fetch-then-verify
-    (skills_for_jobs.py:363,371-379). IVF joins each query's broadcast
-    probe cells to the lists, which carry vectors and norms: one join,
-    no corpus read. The other methods pick candidate ids, then re-rank
-    them against the corpus: LSH equi-joins the queries' buckets; PQ
-    and IVF-PQ keep each query's k * PQ_OVERSHOOT best codes by
-    asymmetric distance (ann.adc_shortlist). That kernel needs the
-    query batch in its closure, so a PQ or IVF-PQ search collects the
+    (skills_for_jobs.py:363,371-379), reading only the index's table
+    and the queries. IVF joins each query's broadcast probe cells to
+    the lists, which carry vectors and norms: one join. The other
+    methods pick candidate ids, then join them to the table's
+    (id, embedding, norm) columns for the exact re-rank: LSH
+    posexplodes both sides' bucket arrays into (table, bucket) rows and
+    equi-joins them; PQ and IVF-PQ keep each query's k * PQ_OVERSHOOT
+    best codes by asymmetric distance (ann.adc_shortlist), which reads
+    (id, cell, code) of the same table. That kernel needs the query
+    batch in its closure, so a PQ or IVF-PQ search collects the
     queries once when the plan is built: a bounded eager job, and the
     one break in the pipeline's "one lazy plan"."""
     # norms once per row, below the joins (as in search_exact)
     qv = queries.select(
         F.col(q_id_col).alias("q_id"), F.col("embedding").alias("q_emb")
     ).withColumn("q_norm", l2_norm("q_emb"))
+    c_id = F.col(index.id_col).alias("c_id")
+    vectors = (c_id, F.col("embedding").alias("c_emb"), F.col("norm").alias("c_norm"))
     if index.method == "ivf":
-        lists = index.buckets.toDF("c_id", "cell", "c_emb", "c_norm")
+        lists = index.buckets.select("cell", *vectors)
         pairs = lists.join(F.broadcast(_probes(qv, index.centers)), "cell").filter(
             F.col("q_id") != F.col("c_id")
         )
@@ -181,12 +182,12 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
         if index.method == "hyperplane_lsh":
             from skills_vectors_spark.operators.ann import hyperplane_buckets
 
+            table = F.posexplode("buckets").alias("table", "bucket")
             # the query batch is bucketed at its own width, never spread
-            bq = hyperplane_buckets(
-                queries.select(F.col(q_id_col).alias("vec_id"), "embedding")
-            ).withColumnRenamed("vec_id", "q_id")
+            bq = hyperplane_buckets(queries.select(F.col(q_id_col).alias("vec_id"), "embedding"))
             cand = (
-                bq.join(index.buckets.withColumnRenamed(index.id_col, "c_id"), ["table", "bucket"])
+                bq.select(F.col("vec_id").alias("q_id"), table)
+                .join(index.buckets.select(c_id, table), ["table", "bucket"])
                 .filter(F.col("q_id") != F.col("c_id"))
                 .select("q_id", "c_id")
                 # one hash exchange on q_id serves the dedup, the re-rank
@@ -200,14 +201,10 @@ def search(index: VectorIndex, queries: DataFrame, k: int = 10, q_id_col: str = 
             from skills_vectors_spark.operators.ann import PQ_OVERSHOOT, adc_shortlist
 
             batch = queries.select(F.col(q_id_col).alias("q_id"), "embedding").toPandas()
-            cell = "cell" if index.method == "ivf_pq" else F.lit(0).alias("cell")
-            lists = index.buckets.select(F.col(index.id_col).alias("c_id"), cell, "code")
+            lists = index.buckets.select(c_id, "cell", "code")
             n_cand = k * PQ_OVERSHOOT
             cand = adc_shortlist(lists, batch.sort_values("q_id"), index.centers, index.codebooks, n_cand)
-        cv = index.corpus.select(
-            F.col(index.id_col).alias("c_id"), F.col("embedding").alias("c_emb")
-        ).withColumn("c_norm", l2_norm("c_emb"))
-        pairs = cand.join(F.broadcast(qv), "q_id").join(cv, "c_id")
+        pairs = cand.join(F.broadcast(qv), "q_id").join(index.buckets.select(*vectors), "c_id")
     scored = pairs.withColumn("score", cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm"))
     return _top_k(scored, k)
 

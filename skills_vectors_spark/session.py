@@ -55,6 +55,17 @@ def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -
         .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
+    report_codegen_cache(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    from skills_vectors_spark.deploy import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    return spark
+
+
+def report_codegen_cache(spark: SparkSession) -> None:
+    """Log a WARNING when ``spark``'s SparkContext was created without
+    CODEGEN_CACHE_ENTRIES, as a context a host built is."""
     if spark.sparkContext.getConf().get(CODEGEN_CACHE_CONF) != str(CODEGEN_CACHE_ENTRIES):
         logging.getLogger(__name__).warning(
             "SparkContext was created without %s=%d: generated classes are "
@@ -62,11 +73,6 @@ def get_spark(app_name: str = "skills_vectors_spark", cpus: str | None = None) -
             CODEGEN_CACHE_CONF,
             CODEGEN_CACHE_ENTRIES,
         )
-    spark.sparkContext.setLogLevel("WARN")
-    from skills_vectors_spark.deploy import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    return spark
 
 
 def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:

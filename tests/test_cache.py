@@ -129,12 +129,8 @@ def _arrays(v):
 
 
 def _bucket_rows(index):
-    # sorted on the key columns: pandas cannot order the IVF lists'
-    # embedding arrays
-    keys = {"hyperplane_lsh": ["table", "bucket"], "ivf": ["cell"], "ivf_pq": ["cell"], "pq": []}
-    return index.buckets.toPandas().sort_values([index.id_col, *keys[index.method]]).reset_index(
-        drop=True
-    )
+    # one row per id: pandas cannot order the array columns
+    return index.buckets.toPandas().sort_values(index.id_col).reset_index(drop=True)
 
 
 def test_quantizers_retrain_after_clear_and_per_session(spark, sf_dir):

@@ -259,6 +259,44 @@ def test_ivf_search_is_one_probe_join(spark, one_file):
         index.buckets.unpersist()
 
 
+METHODS = ["hyperplane_lsh", "ivf", "pq", "ivf_pq"]
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_index_is_one_row_per_vector_with_its_norm(one_file, method):
+    """Every index is one per-vector table: each corpus id once, with
+    its vector passed through and the norm l2_norm computes, bit for
+    bit."""
+    import numpy as np
+
+    from skills_vectors_spark.functions.vector import l2_norm
+
+    corpus, _ = one_file
+    index = pipeline.build_index(corpus, method=method)
+    src = corpus.select("doc_id", F.col("embedding").alias("src"), l2_norm("embedding").alias("want"))
+    rows = index.buckets.join(src, "doc_id", "full_outer").toPandas()
+    assert len(rows) == corpus.count() == rows["doc_id"].nunique()
+    assert all(np.array_equal(a, b) for a, b in zip(rows["embedding"], rows["src"]))
+    assert np.array_equal(rows["norm"].to_numpy().view(np.int64), rows["want"].to_numpy().view(np.int64))
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_search_reads_only_the_index_and_the_queries(spark, one_file, method):
+    """Over a persisted index and local-relation queries, a search plans
+    no file scan: every vector it re-ranks comes from the index's own
+    table, never from the corpus."""
+    corpus, queries = one_file
+    index = pipeline.build_index(corpus, method=method)
+    index.buckets = index.buckets.persist()
+    try:
+        local = spark.createDataFrame(queries.toPandas(), queries.schema)
+        names = [n.nodeName() for n in _nodes(_input_plan(pipeline.search(index, local)))]
+        assert "InMemoryTableScan" in names
+        assert not any(name.startswith("Scan ") for name in names), names
+    finally:
+        index.buckets.unpersist()
+
+
 def test_ivf_probes_rank_nulls_last_and_ties_by_cell(spark):
     """Each query probes its N_PROBE best cells by cosine, equal scores
     to the lower cell and NULL scores (a zero-norm center or query)
@@ -277,7 +315,7 @@ def test_ivf_probes_rank_nulls_last_and_ties_by_cell(spark):
         [(100 + c, c, [1.0, 0.0], 1.0) for c in range(len(centers))],
         "doc_id long, cell int, embedding array<float>, norm double",
     )
-    index = pipeline.VectorIndex("ivf", lists.select("doc_id", "embedding"), lists, "doc_id", centers)
+    index = pipeline.VectorIndex("ivf", lists, "doc_id", centers)
     queries = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [-1.0, 0.5])], "q_id long, embedding array<float>"
     )
@@ -329,11 +367,13 @@ def test_searches_equal_the_per_pair_reference(spark, one_file):
     ids = corpus.select(F.col("doc_id").alias("c_id"))
     exact = queries.select("q_id").crossJoin(ids).filter(F.col("q_id") != F.col("c_id"))
 
-    index = pipeline.build_index(corpus, method="hyperplane_lsh")
-    bq = hyperplane_buckets(queries.select(F.col("q_id").alias("vec_id"), "embedding"))
+    def tables(df, id_col, alias):
+        rows = hyperplane_buckets(df.select(F.col(id_col).alias("vec_id"), "embedding"))
+        return rows.select(F.col("vec_id").alias(alias), F.posexplode("buckets").alias("table", "bucket"))
+
     lsh = (
-        bq.withColumnRenamed("vec_id", "q_id")
-        .join(index.buckets.withColumnRenamed("doc_id", "c_id"), ["table", "bucket"])
+        tables(queries, "q_id", "q_id")
+        .join(tables(corpus, "doc_id", "c_id"), ["table", "bucket"])
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id")
         .distinct()

@@ -96,17 +96,30 @@ def test_second_pass_compiles_no_class(spark, sf_dir, run_pass, make_data):
 @pytest.mark.parametrize("context_has_setting", [True, False])
 def test_get_spark_warns_when_context_lacks_codegen_cache_size(spark, monkeypatch, caplog, context_has_setting):
     """The cache size is a static conf: a SparkContext created outside
-    get_spark (a host's session) keeps its own, and get_spark says so
-    once, naming the setting."""
+    get_spark (a host's session) keeps its own. get_spark says so once
+    per call, and the host path's entry() once per session however
+    often it runs, naming the setting."""
     from pyspark import SparkConf, SparkContext
+    from test_entry import _load_entry
 
+    entry = _load_entry().entry
+    host = spark.newSession()  # a session entry() has not checked yet
+    callers = {
+        "get_spark": lambda: session.get_spark("tests", cpus="8"),
+        "entry": lambda: (entry(host), entry(host)),
+    }
     assert spark.sparkContext.getConf().get(session.CODEGEN_CACHE_CONF) == str(session.CODEGEN_CACHE_ENTRIES)
     if not context_has_setting:
         monkeypatch.setattr(SparkContext, "getConf", lambda self: SparkConf(loadDefaults=False))
-    with caplog.at_level(logging.WARNING, logger=session.__name__):
-        session.get_spark("tests", cpus="8")
-    warnings = [r.getMessage() for r in caplog.records if r.name == session.__name__]
-    if context_has_setting:
-        assert warnings == []
-    else:
-        assert len(warnings) == 1 and session.CODEGEN_CACHE_CONF in warnings[0]
+    try:
+        for name, call in callers.items():
+            caplog.clear()
+            with caplog.at_level(logging.WARNING, logger=session.__name__):
+                call()
+            warnings = [r.getMessage() for r in caplog.records if r.name == session.__name__]
+            if context_has_setting:
+                assert warnings == [], name
+            else:
+                assert len(warnings) == 1 and session.CODEGEN_CACHE_CONF in warnings[0], name
+    finally:
+        cache.clear(host)
