@@ -36,8 +36,8 @@ it, with a key tuple it drops that one entry.
 ``tests/test_cache.py`` fails on any module-level empty
 container elsewhere in the package, except a short allowlist of
 state that is not a driver-side memo: the static query registries,
-the per-SparkContext ``addPyFile`` guards, and the executor-side
-corpus cache of the BLAS worker.
+the per-SparkContext ``addPyFile`` guard of ``deploy``, and the
+executor-side corpus cache of the BLAS worker.
 """
 
 from __future__ import annotations

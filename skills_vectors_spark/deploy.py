@@ -11,6 +11,13 @@ once per session and `SparkContext.addPyFile` it, which distributes
 the archive to every worker and puts it on their import path. This is
 exactly how the engine ships to a 1000-executor cluster (spark-submit
 --py-files), made automatic.
+
+The same archive carries the vendored protobuf runtime
+(``_vendor/google``) at its root when the driver has no real
+``google.protobuf`` wheel (``protocompat.real_protobuf``), so the
+transformWithState rows' workers import it from the one archive an
+application ships. With a real wheel the root copy is left out and
+never shadows it.
 """
 
 from __future__ import annotations
@@ -28,16 +35,25 @@ _SHIPPED: set[str] = set()
 def _build_archive(pkg_dir: str, zip_path: str) -> None:
     """Zip the package source, excluding __pycache__/bytecode — the
     workers compile their own, and stale .pyc from another interpreter
-    would be dead weight in every executor's download."""
-    parent = os.path.dirname(pkg_dir)
+    would be dead weight in every executor's download. Without a real
+    protobuf wheel, ``_vendor/google`` goes in a second time at the
+    archive root, where the workers' import of ``google.protobuf``
+    finds it."""
+    from skills_vectors_spark import protocompat
+
+    trees = [(pkg_dir, os.path.dirname(pkg_dir))]
+    if not protocompat.real_protobuf():
+        vendor = os.path.join(pkg_dir, "_vendor")
+        trees.append((os.path.join(vendor, "google"), vendor))
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, dirs, files in os.walk(pkg_dir):
-            dirs[:] = [d for d in dirs if d != "__pycache__"]
-            for f in files:
-                if f.endswith((".pyc", ".pyo")):
-                    continue
-                full = os.path.join(root, f)
-                zf.write(full, os.path.relpath(full, parent))
+        for top, base in trees:
+            for root, dirs, files in os.walk(top):
+                dirs[:] = [d for d in dirs if d != "__pycache__"]
+                for f in files:
+                    if f.endswith((".pyc", ".pyo")):
+                        continue
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, base))
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:

@@ -53,16 +53,6 @@ def bpe_ish_token_count(c: Column | str) -> Column:
     return F.regexp_count(c, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]")).cast("long")
 
 
-def char_ngrams_expr(col_sql: str, n: int = 5) -> Column:
-    """Character n-gram shingles -> array<string> via sequence+transform
-    (SQL-expr form: F.substring requires literal positions, the SQL
-    substring accepts a lambda-bound one)."""
-    return F.expr(
-        f"transform(sequence(1, greatest(length({col_sql}) - {n - 1}, 1)),"
-        f" i -> substring({col_sql}, i, {n}))"
-    )
-
-
 def word_shingles(c: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles -> array<string> (for MinHash/Jaccard).
     Scale note: arrays stay inside the row; no explode until the

@@ -48,7 +48,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from skills_vectors_spark import cache, pipeline, sources
 from skills_vectors_spark.functions.vector import cosine_from_norms, l2_norm
@@ -698,11 +697,6 @@ def pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     return pq_index(spark, sf_dir).codebooks
 
 
-def pq_residual_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    """(M, K, DIM/M) residual codebooks of ivf_pq_index."""
-    return ivf_pq_index(spark, sf_dir).codebooks
-
-
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (the memory-bound scale tier: 8-byte
     codes instead of 256-byte vectors — at 100 TB the codes for the
@@ -802,15 +796,8 @@ def stream_ann_assign_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch assignment, asserted in tests and in the registered
     summary's matches_batch gate."""
     cents = ivf_centroids(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(sources.SCHEMAS["embeddings"])
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )

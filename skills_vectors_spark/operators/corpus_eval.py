@@ -36,7 +36,7 @@ from skills_vectors_spark.operators.relevance import (
     N_Q_DOCS,
     TOPK,
     _term_freqs,
-    tfidf_weights,
+    tfidf_pairs,
 )
 from skills_vectors_spark.registry import register
 
@@ -121,8 +121,8 @@ def eval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (r7 fusion, the r6 verdict's squeeze): both arms pair
     documents through the SAME token equi-join, so one fused join
     computes the weighted dot product (gold) AND the shared-token
-    count (candidate) in a single aggregate over the persisted
-    `tfidf_weights` frame (shared with text_tfidf_sim in-session) —
+    count (candidate) in a single aggregate (`relevance.tfidf_pairs`,
+    shared with text_tfidf_sim, over the persisted `tfidf_weights`) —
     the second token join and the gold broadcast join of the r6 plan
     are gone. The two rankings are two window sorts over the same
     q_doc partitioning (one exchange); the query side is filtered to
@@ -132,31 +132,7 @@ def eval_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     K graded gold entries — a compile-time constant, identical
     literal in both engines.
     """
-    w = tfidf_weights(spark, sf_dir)
-    nrm = w.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-    )
-    q = w.filter(F.col("doc_id") < N_Q_DOCS).select(
-        F.col("doc_id").alias("q_doc"), "tok", F.col("w").alias("wq")
-    )
-    c = w.select(F.col("doc_id").alias("c_doc"), "tok", F.col("w").alias("wc"))
-    pairs = (
-        F.broadcast(q)
-        .join(c, "tok")
-        .filter(F.col("q_doc") != F.col("c_doc"))
-        .groupBy("q_doc", "c_doc")
-        .agg(
-            F.sum(F.col("wq") * F.col("wc")).alias("dot"),
-            F.count("*").alias("n_shared"),
-        )
-    )
-    nq = nrm.select(F.col("doc_id").alias("q_doc"), F.col("nrm").alias("nq"))
-    nc = nrm.select(F.col("doc_id").alias("c_doc"), F.col("nrm").alias("nc"))
-    scored = (
-        pairs.join(F.broadcast(nq), "q_doc")
-        .join(F.broadcast(nc), "c_doc")
-        .withColumn("sim", F.col("dot") / (F.col("nq") * F.col("nc")))
-    )
+    scored = tfidf_pairs(spark, sf_dir)
     # gold ranks at the 1e-6 grain (see text_tfidf_sim: raw-float tie
     # order is engine-dependent); the candidate key n_shared is an
     # exact integer and needs no rounding
@@ -398,11 +374,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOCS_STREAM_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
 @register(
     "stream_drift_psi",
     # same oracle as quality_drift_psi: the streaming monitor's final
@@ -459,7 +430,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from skills_vectors_spark.streaming.windows import run_to_completion
 
     docs = (
-        spark.readStream.schema(_DOCS_STREAM_SCHEMA)
+        spark.readStream.schema(sources.SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -152,22 +152,35 @@ def _pair_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     on can hold one extra spilled copy of its own join output."""
     from skills_vectors_spark.cache import cached_df
 
-    def build() -> DataFrame:
-        sh = shingle_df(spark, sf_dir)
-        sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-        inter = (
-            a.join(b, "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-        sza = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-        szb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-        return inter.join(F.broadcast(sza), "doc_a").join(F.broadcast(szb), "doc_b")
+    return cached_df(
+        "pair_intersections", spark, sf_dir, lambda: _intersections(shingle_df(spark, sf_dir))
+    )
 
-    return cached_df("pair_intersections", spark, sf_dir, build)
+
+def _intersections(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, i, na, nb) over a (doc_id, s) shingle frame: the
+    inverted-index self-join, with both set sizes broadcast in."""
+    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
+    inter = (
+        a.join(b, "s")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("i"))
+    )
+    sza = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    szb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(F.broadcast(sza), "doc_a").join(F.broadcast(szb), "doc_b")
+
+
+def _jaccard_pairs(inter: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the intersection pairs at or above
+    JACCARD_THRESHOLD, jaccard rounded to 1e-6."""
+    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
+    return inter.filter(jac >= JACCARD_THRESHOLD).select(
+        "doc_a", "doc_b", (F.round(jac * 1e6) / 1e6).alias("jaccard")
+    )
 
 
 @register("dedup_ngram_jaccard", _JACCARD_PAIRS_SQL)
@@ -182,15 +195,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_containment (`_pair_intersections`)."""
     from skills_vectors_spark.cache import cached_df
 
-    def build() -> DataFrame:
-        jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-        return (
-            _pair_intersections(spark, sf_dir)
-            .filter(jac >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", (F.round(jac * 1e6) / 1e6).alias("jaccard"))
-        )
-
-    return cached_df("ngram_jaccard_pairs", spark, sf_dir, build)
+    return cached_df(
+        "ngram_jaccard_pairs",
+        spark,
+        sf_dir,
+        lambda: _jaccard_pairs(_pair_intersections(spark, sf_dir)),
+    )
 
 
 # production max_df (document-frequency cap): shingles shared by more
@@ -211,25 +221,7 @@ def dedup_ngram_jaccard_production(spark: SparkSession, sf_dir: str) -> DataFram
     the CAPPED shingle sets — pair membership is what the cap
     preserves (verified by the SCALING.md recall measurement), not
     the exact jaccard value of dropped-shingle pairs."""
-    sh = shingle_df(spark, sf_dir, max_df=NGRAM_PROD_MAX_DF)
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
-    sza = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    szb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        inter.join(F.broadcast(sza), "doc_a")
-        .join(F.broadcast(szb), "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", (F.round(jac * 1e6) / 1e6).alias("jaccard"))
-    )
+    return _jaccard_pairs(_intersections(shingle_df(spark, sf_dir, max_df=NGRAM_PROD_MAX_DF)))
 
 
 # ------------------------------------------------------------ MinHash + LSH

@@ -328,7 +328,10 @@ def y4m_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     are real YUV4MPEG2 streams planted from the documents table
     (_plant_y4m) — the video mirror of ppm_media_table and
     wav_media_table."""
-    d = sources.load(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
+    # NULL text plants no video: the oracle's length(text) >= 64 drops it
+    d = sources.load(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") % 3 == 2) & F.col("text").isNotNull()
+    )
     spread = sources.spread(spark, d.select("doc_id", "text"))
 
     def plant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -466,14 +469,17 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
     return sr, samples.astype(np.float64) / 32768.0
 
 
-def _plant_wav(text: str) -> bytes:
+def _plant_wav(text: str | None) -> bytes | None:
     """Fixture planting for the audio queries: a REAL RIFF/WAVE PCM
     file whose waveform is a square wave with md5-derived length n,
     amplitude A, and half-period p — so every emitted feature is
     closed-form for the oracle: rms == peak == A/32768 (all samples
     are ±A; exact in IEEE doubles since A < 2^15 and the divisor is a
     power of two), and the zero-crossing count over n samples is
-    floor((n-1)/p) exactly."""
+    floor((n-1)/p) exactly. NULL text plants a NULL payload, as the
+    oracle's md5(NULL) yields NULL n, amp and p."""
+    if text is None:
+        return None
     digest = hashlib.md5((text + "audio").encode("utf-8")).hexdigest()
     n = 8000 + int(digest[0:4], 16) % 24000
     amp = 1000 + int(digest[4:8], 16) % 15000
@@ -549,6 +555,9 @@ def audio_features_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                if payload is None:  # NULL text: every feature NULL
+                    rows.append((int(mid), None, None, None, None, None))
+                    continue
                 sr, w = decode_wav(bytes(payload))
                 zc = float(np.mean(np.abs(np.diff(np.signbit(w)))))
                 rms = float(np.sqrt(np.mean(w**2)))

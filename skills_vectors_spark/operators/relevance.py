@@ -164,6 +164,42 @@ def tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached("tfidf_w", spark, sf_dir, build)
 
 
+def tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_doc, c_doc, sim, n_shared) for every query doc (doc_id <
+    N_Q_DOCS) and every other doc sharing a token with it: TF-IDF
+    cosine over `tfidf_weights` and the shared distinct-token count.
+    One token join serves both text_tfidf_sim (sim) and eval_ndcg_mrr
+    (sim as gold, n_shared as the cheap candidate ranking). The
+    weights are referenced 3x (query side, corpus side, norms), which
+    is why tfidf_weights is persisted. The query side is filtered
+    before the join and broadcast, so the corpus side streams."""
+    w = tfidf_weights(spark, sf_dir)
+    nrm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
+    q = w.filter(F.col("doc_id") < N_Q_DOCS).select(
+        F.col("doc_id").alias("q_doc"), "tok", F.col("w").alias("wq")
+    )
+    c = w.select(F.col("doc_id").alias("c_doc"), "tok", F.col("w").alias("wc"))
+    pairs = (
+        F.broadcast(q)
+        .join(c, "tok")
+        .filter(F.col("q_doc") != F.col("c_doc"))
+        .groupBy("q_doc", "c_doc")
+        .agg(
+            F.sum(F.col("wq") * F.col("wc")).alias("dot"),
+            F.count("*").alias("n_shared"),
+        )
+    )
+    nq = nrm.select(F.col("doc_id").alias("q_doc"), F.col("nrm").alias("nq"))
+    nc = nrm.select(F.col("doc_id").alias("c_doc"), F.col("nrm").alias("nc"))
+    return (
+        pairs.join(F.broadcast(nq), "q_doc")
+        .join(F.broadcast(nc), "c_doc")
+        .select(
+            "q_doc", "c_doc", (F.col("dot") / (F.col("nq") * F.col("nc"))).alias("sim"), "n_shared"
+        )
+    )
+
+
 @register(
     "text_tfidf_sim",
     f"""
@@ -206,29 +242,7 @@ def text_tfidf_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever paired, and the per-pair work is a sum of products — the
     lexical mirror of knn_exact's dense cosine. The query side is
     filtered before the join (broadcast), the corpus side streams."""
-    # referenced 3x below (query side, corpus side, norms) — persisted
-    # (tfidf_weights) so the tf+idf join computes once, not per
-    # reference, and is shared with eval_ndcg_mrr's warm subtree
-    w = tfidf_weights(spark, sf_dir)
-    nrm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    q = w.filter(F.col("doc_id") < N_Q_DOCS).select(
-        F.col("doc_id").alias("q_doc"), "tok", F.col("w").alias("wq")
-    )
-    c = w.select(F.col("doc_id").alias("c_doc"), "tok", F.col("w").alias("wc"))
-    pairs = (
-        F.broadcast(q)
-        .join(c, "tok")
-        .filter(F.col("q_doc") != F.col("c_doc"))
-        .groupBy("q_doc", "c_doc")
-        .agg(F.sum(F.col("wq") * F.col("wc")).alias("dot"))
-    )
-    nq = nrm.select(F.col("doc_id").alias("q_doc"), F.col("nrm").alias("nq"))
-    nc = nrm.select(F.col("doc_id").alias("c_doc"), F.col("nrm").alias("nc"))
-    scored = (
-        pairs.join(F.broadcast(nq), "q_doc")
-        .join(F.broadcast(nc), "c_doc")
-        .withColumn("sim", F.col("dot") / (F.col("nq") * F.col("nc")))
-    )
+    scored = tfidf_pairs(spark, sf_dir)
     # rank at the 1e-6 output grain (the displayed sim IS the rank
     # key): raw-float ranking makes tie order engine-dependent when
     # per-pair summation orders differ at the last ulp — the r13

@@ -29,7 +29,7 @@ GEMM instead of one SQL query per job vector.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -89,6 +89,37 @@ def _load_corpus(path: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return hit
 
 
+def _gemm_pass(
+    spark: SparkSession,
+    sf_dir: str,
+    emit: Callable[[np.ndarray, np.ndarray, dict[int, int], np.ndarray], pd.DataFrame],
+    schema: T.StructType,
+) -> DataFrame:
+    """Score every corpus vector against the whole corpus, one GEMM
+    per Arrow batch: ``emit(qid, ids, pos, S)`` turns a batch's cosine
+    matrix ``S`` (batch rows x corpus, corpus sorted by ``ids``;
+    ``pos`` maps a vec_id to its column) into output rows.
+
+    The corpus is spread conditionally, not repartitioned: locally the
+    one-row-group scan would feed the GEMM a single task; on a
+    multi-split cluster read this adds no shuffle (an unconditional
+    repartition would reshuffle the full corpus at 100 TB)."""
+    corpus_path = f"{sf_dir}/embeddings.parquet"
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, V, norms = _load_corpus(corpus_path)
+        pos = {int(v): i for i, v in enumerate(ids)}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            qn = np.sqrt((Q * Q).sum(axis=1))
+            yield emit(pdf["vec_id"].to_numpy(), ids, pos, (Q @ V.T) / np.outer(qn, norms))
+
+    emb = sources.load_spread(spark, sf_dir, "embeddings")
+    return emb.select("vec_id", "embedding").mapInPandas(run, schema)
+
+
 _PAIR_SCHEMA = T.StructType(
     [
         T.StructField("id_a", T.LongType()),
@@ -115,34 +146,19 @@ def dedup_embed_cosine_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-pairs regime. Each partition scores its rows against the
     broadcast corpus and emits only above-threshold upper-triangle
     pairs, so the shuffle carries hits, not pairs."""
-    corpus_path = f"{sf_dir}/embeddings.parquet"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, V, norms = _load_corpus(corpus_path)
-        pos = {int(v): i for i, v in enumerate(ids)}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            qid = pdf["vec_id"].to_numpy()
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            S = (Q @ V.T) / np.outer(qn, norms)
-            out_a, out_b, out_s = [], [], []
-            for r in range(len(pdf)):
-                qi = pos[int(qid[r])]
-                cols = np.where((S[r] >= COSINE_DUP_THRESHOLD) & (np.arange(len(ids)) > qi))[0]
-                for c in cols:
-                    out_a.append(int(qid[r]))
-                    out_b.append(int(ids[c]))
-                    out_s.append(np.round(S[r, c] * 1e6) / 1e6)
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cos_sim": out_s})
+    def pairs(qid, ids, pos, S) -> pd.DataFrame:
+        out_a, out_b, out_s = [], [], []
+        for r in range(len(qid)):
+            qi = pos[int(qid[r])]
+            cols = np.where((S[r] >= COSINE_DUP_THRESHOLD) & (np.arange(len(ids)) > qi))[0]
+            for c in cols:
+                out_a.append(int(qid[r]))
+                out_b.append(int(ids[c]))
+                out_s.append(np.round(S[r, c] * 1e6) / 1e6)
+        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "cos_sim": out_s})
 
-    # conditional spread, not an unconditional repartition: locally
-    # the one-row-group scan would feed the GEMM a single task; on a
-    # multi-split cluster read this adds no shuffle (the unconditional
-    # form would reshuffle the full corpus at 100 TB)
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", "embedding").mapInPandas(run, _PAIR_SCHEMA)
+    return _gemm_pass(spark, sf_dir, pairs, _PAIR_SCHEMA)
 
 
 _TOPK_SCHEMA = T.StructType(
@@ -178,55 +194,42 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-query slice knn_exact uses). One GEMM per Arrow batch +
     argpartition top-k; ties broken by c_id ascending to match the
     oracle's deterministic ordering."""
-    corpus_path = f"{sf_dir}/embeddings.parquet"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, V, norms = _load_corpus(corpus_path)
-        pos = {int(v): i for i, v in enumerate(ids)}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            qid = pdf["vec_id"].to_numpy()
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            S = (Q @ V.T) / np.outer(qn, norms)
-            frames = []
-            for r in range(len(pdf)):
-                s = S[r].copy()
-                s[pos[int(qid[r])]] = -np.inf  # exclude self
-                # rank at the 1e-6 OUTPUT grain, ties by id — two
-                # r13-differential findings pinned here: (a) a fixed
-                # argpartition pool (top k+8) cannot recover the
-                # id-ordered top-k when ties span the pool boundary,
-                # so the pool is tie-complete (every index >= the
-                # k-th value); (b) blocked-BLAS GEMM yields last-ulp
-                # score differences BY COLUMN POSITION even for
-                # identical vectors, so ranking raw floats makes tie
-                # order engine-dependent — the rank key must be the
-                # displayed (rounded) score itself.
-                sr = np.round(s * 1e6)
-                if len(sr) <= TOPK_K:
-                    cand = np.arange(len(sr))
-                else:
-                    thr = -np.partition(-sr, TOPK_K - 1)[TOPK_K - 1]
-                    cand = np.where(sr >= thr)[0]
-                order = cand[np.lexsort((ids[cand], -sr[cand]))][:TOPK_K]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "q_id": int(qid[r]),
-                            "rnk": np.arange(1, TOPK_K + 1, dtype=np.int64),
-                            "c_id": ids[order].astype(np.int64),
-                            "cos_sim": sr[order] / 1e6,
-                        }
-                    )
+    def topk(qid, ids, pos, S) -> pd.DataFrame:
+        frames = []
+        for r in range(len(qid)):
+            s = S[r].copy()
+            s[pos[int(qid[r])]] = -np.inf  # exclude self
+            # rank at the 1e-6 OUTPUT grain, ties by id — two
+            # r13-differential findings pinned here: (a) a fixed
+            # argpartition pool (top k+8) cannot recover the
+            # id-ordered top-k when ties span the pool boundary,
+            # so the pool is tie-complete (every index >= the
+            # k-th value); (b) blocked-BLAS GEMM yields last-ulp
+            # score differences BY COLUMN POSITION even for
+            # identical vectors, so ranking raw floats makes tie
+            # order engine-dependent — the rank key must be the
+            # displayed (rounded) score itself.
+            sr = np.round(s * 1e6)
+            if len(sr) <= TOPK_K:
+                cand = np.arange(len(sr))
+            else:
+                thr = -np.partition(-sr, TOPK_K - 1)[TOPK_K - 1]
+                cand = np.where(sr >= thr)[0]
+            order = cand[np.lexsort((ids[cand], -sr[cand]))][:TOPK_K]
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "q_id": int(qid[r]),
+                        "rnk": np.arange(1, TOPK_K + 1, dtype=np.int64),
+                        "c_id": ids[order].astype(np.int64),
+                        "cos_sim": sr[order] / 1e6,
+                    }
                 )
-            yield pd.concat(frames, ignore_index=True)
+            )
+        return pd.concat(frames, ignore_index=True)
 
-    # conditional spread (see dedup_embed_cosine_blas): parallelize
-    # the GEMM locally, no-op on a multi-split cluster read
-    emb = sources.load_spread(spark, sf_dir, "embeddings")
-    return emb.select("vec_id", "embedding").mapInPandas(run, _TOPK_SCHEMA)
+    return _gemm_pass(spark, sf_dir, topk, _TOPK_SCHEMA)
 
 
 PCA_DIM = 16  # target dimensionality (from 64)

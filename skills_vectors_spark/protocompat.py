@@ -2,36 +2,47 @@
 (_vendor/google/protobuf) so Spark 4's transformWithStateInPandas
 works in runtimes without the google.protobuf wheel.
 
-Two sides need the import to resolve:
+Three kinds of process need the import to resolve:
 
-* the DRIVER process — pyspark's state clients are imported lazily,
-  but the availability probe and any driver-side use must see
-  ``google.protobuf``: ``ensure_local()`` appends the vendor dir to
+* the DRIVER process: ``ensure_local()`` appends the vendor dir to
   sys.path only when the real package is absent (a real install
-  always wins — the shim is a fallback, never a shadow);
-* the WORKER processes — ``handleInputRows`` runs in separate Python
-  workers spawned by the JVM, whose sys.path comes from the Spark
-  context's pyFiles: ``ensure_workers(spark)`` zips the vendored
-  ``google`` package and registers it via ``addPyFile`` once per
-  application.
+  always wins: the shim is a fallback, never a shadow);
+* the task WORKERS: ``handleInputRows`` runs in Python workers whose
+  sys.path comes from the Spark context's pyFiles. The package
+  archive ``deploy`` ships once per application carries the vendored
+  ``google`` package at its root whenever ``real_protobuf()`` is
+  False;
+* the driver-side worker of StreamingPythonRunner, which gets its
+  PYTHONPATH from ``sc.environment``: ``ensure_workers(spark)`` adds
+  the vendor dir there.
 """
 
 from __future__ import annotations
 
+import importlib.metadata
 import os
 import sys
-import zipfile
 
 _VENDOR_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_vendor")
 
-_shipped_app_ids: set[str] = set()
+
+def real_protobuf() -> bool:
+    """True when the real protobuf wheel is installed. Reads the
+    installed distributions' metadata, which the vendored copies (the
+    vendor dir and the root of the package archive, which addPyFile
+    also puts on the driver's sys.path) do not have. Never imports
+    the shim, so a broken shim cannot fail the caller."""
+    try:
+        importlib.metadata.version("protobuf")
+    except importlib.metadata.PackageNotFoundError:
+        return False
+    return True
 
 
 def ensure_local() -> bool:
     """Make ``google.protobuf`` importable in THIS process; True on
     success. Prefers a real installation; falls back to the vendored
-    runtime; False only if even the shim cannot load (in which case
-    transformWithStateInPandas stays unregistered)."""
+    runtime; False only if even the shim cannot load."""
     try:
         import google.protobuf  # noqa: F401
 
@@ -48,66 +59,20 @@ def ensure_local() -> bool:
         return False
 
 
-def vendor_zip_path(scratch_dir: str) -> str:
-    """Build (once) a zip of the vendored google package with the
-    package at the zip root, the layout addPyFile/worker sys.path
-    expects."""
-    zpath = os.path.join(scratch_dir, "minirt_protobuf.zip")
-    src_root = os.path.join(_VENDOR_DIR, "google")
-    sources = []
-    for dirpath, _dirs, files in os.walk(src_root):
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, _VENDOR_DIR)
-                sources.append((full, rel))
-    stale = (
-        not os.path.exists(zpath)
-        or os.path.getmtime(zpath) < max(os.path.getmtime(f) for f, _ in sources)
-    )
-    if stale:
-        # pid-unique temp + atomic rename: two processes (e.g. pytest
-        # and a driver sim) may build concurrently without corrupting
-        # each other's archive
-        tmp = f"{zpath}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for full, rel in sources:
-                zf.write(full, rel)
-        os.replace(tmp, zpath)
-    return zpath
-
-
 def ensure_workers(spark) -> None:
-    """Ship the vendored runtime to this application's Python workers
-    (no-op when the workers' interpreter already has the real wheel —
-    i.e. when the driver import resolved outside the vendor dir)."""
+    """Ready this application for a transformWithStateInPandas query.
+    Raises ImportError when no protobuf runtime loads, so the row fails
+    loudly. Without a real wheel, points the PYTHONPATH of
+    StreamingPythonRunner's driver-side worker (schema validation and
+    pre-init), which is built from ``sc.environment``, not from pyFiles,
+    at the vendor dir. That worker always runs on the driver host, so
+    the local path is correct on a cluster too; the task workers import
+    the shim from the package archive."""
     if not ensure_local():
         raise ImportError("protobuf shim failed to load (see protocompat)")
-    import google.protobuf
-
-    if not google.protobuf.__file__.startswith(_VENDOR_DIR):
+    if real_protobuf():
         return  # real package installed; workers share the same env
-    sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id in _shipped_app_ids:
-        return
-    from skills_vectors_spark.scratch import scratch
-
-    zdir = scratch("shared", "protocompat")
-    os.makedirs(zdir, exist_ok=True)
-    zpath = vendor_zip_path(zdir)
-    sc.addPyFile(zpath)
-    # transformWithStateInPandas also launches a DRIVER-side python
-    # worker (schema validation / pre-init) through
-    # StreamingPythonRunner, whose PYTHONPATH is built from the
-    # function's envVars (sc.environment), not from pyFiles. That
-    # worker always runs on the driver host, so pointing it at the
-    # vendor dir directly is correct on a real cluster too; the
-    # addPyFile zip above covers the task workers on executors.
-    env = sc.environment
+    env = spark.sparkContext.environment
     existing = env.get("PYTHONPATH", "")
     if _VENDOR_DIR not in existing.split(os.pathsep):
-        env["PYTHONPATH"] = (
-            existing + os.pathsep + _VENDOR_DIR if existing else _VENDOR_DIR
-        )
-    _shipped_app_ids.add(app_id)
+        env["PYTHONPATH"] = existing + os.pathsep + _VENDOR_DIR if existing else _VENDOR_DIR

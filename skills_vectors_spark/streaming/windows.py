@@ -20,6 +20,13 @@ when it starts, so ``drain`` sets these on a clone of the caller's
 session; the caller's session, shared by every other query planned on
 it, is never written.
 
+The three transformWithState rows (ValueState, ListState and
+MapState) register like every other row and run through one per-user
+runner, ``_per_user_state``. Their state calls speak protobuf; where
+the runtime has no protobuf wheel the vendored one serves
+(protocompat), and a runtime where neither loads fails the row with
+an ImportError rather than dropping it.
+
 Scale: state lives in the state store keyed by (window, key);
 watermarks bound state size — without them an unbounded stream grows
 state forever. On a cluster the same code shards state by key hash
@@ -37,33 +44,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming.stateful_processor import StatefulProcessor, StatefulProcessorHandle
+from pyspark.sql.window import Window as W
 
-from skills_vectors_spark import cache, session
+from skills_vectors_spark import cache, protocompat, session, sources
 from skills_vectors_spark.registry import register
-
-# streaming file source needs an explicit schema; events.ts ships as
-# parquet timestamp[us] (isAdjustedToUTC=false) -> TIMESTAMP_NTZ,
-# matching the batch loader in sources.load.
-_EVENTS_RAW = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the file source requires a directory: scan sf_dir with a glob
-    # filter so only the events table streams in. Watermarks demand a
-    # TIMESTAMP (with-local-tz) event-time column, so cast the NTZ
-    # wall clock; with a UTC session tz the instant is unchanged and
-    # the batch oracles (naive arithmetic) agree exactly.
+    # the file source requires a directory and an explicit schema:
+    # scan sf_dir with a glob filter so only the events table streams
+    # in. events.ts ships as parquet timestamp[us]
+    # (isAdjustedToUTC=false) -> TIMESTAMP_NTZ, as in sources.load.
+    # Watermarks demand a TIMESTAMP (with-local-tz) event-time column,
+    # so cast the NTZ wall clock; with a UTC session tz the instant is
+    # unchanged and the batch oracles (naive arithmetic) agree exactly.
     raw = (
-        spark.readStream.schema(_EVENTS_RAW)
+        spark.readStream.schema(sources.SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -129,6 +126,37 @@ def run_to_completion(
             cache.tally(spark, "stream", "retries")
     clone = SparkSession(spark.sparkContext, q._jsq.sparkSession())
     return session.rebind(clone.table(name), spark)
+
+
+def _last_emission(out: DataFrame, n_col: str) -> DataFrame:
+    """An update-mode sink holds one emission per user per micro-batch;
+    keep each user's final one: the rows whose running count ``n_col``
+    is the user's largest."""
+    final = out.withColumn("_maxn", F.max(n_col).over(W.partitionBy("user_id")))
+    return final.filter(F.col(n_col) == F.col("_maxn")).drop("_maxn")
+
+
+def _per_user_state(
+    spark: SparkSession,
+    sf_dir: str,
+    processor: StatefulProcessor,
+    out_schema: T.StructType,
+    n_col: str,
+    *cols,
+) -> DataFrame:
+    """Run ``processor`` over the event stream's ``cols``, grouped by
+    user, through transformWithStateInPandas (RocksDB state store,
+    update mode, no timers), and return each user's final emission.
+    The processor's state calls speak protobuf to the JVM state server
+    (protocompat)."""
+    protocompat.ensure_workers(spark)
+    profiled = (
+        stream_events(spark, sf_dir)
+        .select(*cols)
+        .groupBy("user_id")
+        .transformWithStateInPandas(processor, out_schema, "Update", "None")
+    )
+    return _last_emission(run_to_completion(profiled, mode="update", conf=ROCKSDB), n_col)
 
 
 @register(
@@ -289,17 +317,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .applyInPandasWithState(update, out_schema, state_schema, "update", "NoTimeout")
     )
-    out = run_to_completion(profiled, mode="update")
-    # update-mode sink may emit several versions per key (one per
-    # micro-batch); the final per-user row is the one with max n_events
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_events", "total_value", "n_types")
-    )
+    return _last_emission(run_to_completion(profiled, mode="update"), "n_events")
 
 
 @register(
@@ -337,8 +355,6 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark re-plans the static side each batch, so a broadcast hash
     join with no stream-side shuffle). Oracle is the equivalent batch
     join + GROUP BY."""
-    from skills_vectors_spark import sources
-
     ev = stream_events(spark, sf_dir)
     dim = sources.load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = ev.join(F.broadcast(dim), ev.user_id == dim.c_custkey)
@@ -477,25 +493,42 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas speaks protobuf to its state server.
-    This runtime has no google.protobuf wheel, so activation goes
-    through the vendored minimal runtime (protocompat/_vendor) — the
-    probe loads the generated StateMessage module end-to-end, which
-    exercises descriptor parsing and class building, not just an
-    import of the shim package."""
-    from skills_vectors_spark import protocompat
-
-    if not protocompat.ensure_local():
-        return False
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-
-        return True
-    except Exception:
-        return False
+def _ranked_values() -> list:
+    """The columns the value-ranking processors read. ``v_nan`` is
+    computed Spark-side, where NULL and NaN are still distinct
+    (isnan(NULL) is false; the flag is true only for a genuine NaN):
+    worker-side both arrive as NaN in float64."""
+    return [
+        "user_id",
+        "event_id",
+        "value",
+        (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
+    ]
 
 
+# max_value goes NULL whenever isnan(max(value)) — Spark's Arrow
+# pandas serializer cannot transport an emitted NaN — and the
+# max_is_nan companion column disambiguates that NULL from an
+# all-NULL group's genuine NULL maximum (isnan(NULL) is NULL in both
+# engines). Hash-exact even on NaN/NULL-bearing corpora.
+@register(
+    "stream_transform_state",
+    """
+    WITH ranked AS (
+      SELECT user_id, value, event_id,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY value DESC, event_id ASC) AS r
+      FROM events
+    )
+    SELECT user_id,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CASE WHEN isnan(max(value)) THEN NULL
+                ELSE round(max(value) * 100) / 100 END AS max_value,
+           isnan(max(value)) AS max_is_nan,
+           max(CASE WHEN r = 1 THEN event_id END) AS argmax_event
+    FROM ranked GROUP BY user_id
+    """,
+)
 def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user high-water-mark profile via transformWithStateInPandas —
     the Spark 4 arbitrary-state API (typed ValueState in the RocksDB
@@ -521,18 +554,6 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's genuine NULL maximum, making the contract hash-exact even
     on NaN/NULL-bearing corpora."""
     import pandas as pd
-
-    from skills_vectors_spark import protocompat
-
-    # the StatefulProcessor's state calls run in the WORKER python
-    # processes; ship the vendored protobuf runtime to them (no-op
-    # when a real wheel exists)
-    protocompat.ensure_workers(spark)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     out_schema = T.StructType(
         [
@@ -627,35 +648,28 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        def close(self) -> None:
-            pass
-
-    # v_nan computed SPARK-side, where NULL and NaN are still
-    # distinct (isnan(NULL) is false; the flag is true only for a
-    # genuine NaN) — worker-side both arrive as NaN in float64
-    ev = stream_events(spark, sf_dir).select(
-        "user_id",
-        "event_id",
-        "value",
-        (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
-    )
-    profiled = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=HighWaterProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_events", "max_value", "max_is_nan", "argmax_event")
+    return _per_user_state(
+        spark, sf_dir, HighWaterProcessor(), out_schema, "n_events", *_ranked_values()
     )
 
 
+@register(
+    "stream_transform_topk",
+    """
+    WITH ranked AS (
+      SELECT user_id, value, event_id,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY value DESC, event_id ASC) AS rnk
+      FROM events
+    )
+    SELECT user_id, CAST(rnk AS BIGINT) AS rnk,
+           CASE WHEN isnan(value) THEN NULL
+                ELSE round(value * 100) / 100 END AS value,
+           isnan(value) AS value_is_nan,
+           event_id
+    FROM ranked WHERE rnk <= 3
+    """,
+)
 def stream_transform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user top-3 (value, event_id) via the Spark 4 arbitrary-state
     ListState — the second transformWithStateInPandas seat, exercising
@@ -675,15 +689,6 @@ def stream_transform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row; the ``value_is_nan`` companion — oracle: ``isnan(value)`` —
     tells them apart."""
     import pandas as pd
-
-    from skills_vectors_spark import protocompat
-
-    protocompat.ensure_workers(spark)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     out_schema = T.StructType(
         [
@@ -768,39 +773,25 @@ def stream_transform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        def close(self) -> None:
-            pass
-
-    ev = stream_events(spark, sf_dir).select(
+    final = _per_user_state(
+        spark, sf_dir, TopKProcessor(), out_schema, "n_seen", *_ranked_values()
+    )
+    return final.select(
         "user_id",
+        "rnk",
+        (F.round(F.col("value") * 100) / 100).alias("value"),
+        "value_is_nan",
         "event_id",
-        "value",
-        (F.col("value").isNotNull() & F.isnan("value")).alias("v_nan"),
-    )
-    profiled = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TopKProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
-    from pyspark.sql.window import Window as W
-
-    # keep only each user's FINAL emission (highest n_seen) — earlier
-    # micro-batches emitted interim top-3 snapshots in Update mode
-    final = out.withColumn("_maxn", F.max("n_seen").over(W.partitionBy("user_id")))
-    return (
-        final.filter(F.col("n_seen") == F.col("_maxn"))
-        .select(
-            "user_id",
-            "rnk",
-            (F.round(F.col("value") * 100) / 100).alias("value"),
-            "value_is_nan",
-            "event_id",
-        )
     )
 
 
+@register(
+    "stream_transform_typecounts",
+    """
+    SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
+    FROM events GROUP BY user_id, event_type
+    """,
+)
 def stream_transform_typecounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event-type histogram via the Spark 4 arbitrary-state
     MapState — the third and final state-variable kind (typed
@@ -811,15 +802,6 @@ def stream_transform_typecounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     not stream length; for fully-arrived bounded input the final map
     equals the batch (user, type) GROUP BY, which is the oracle."""
     import pandas as pd
-
-    from skills_vectors_spark import protocompat
-
-    protocompat.ensure_workers(spark)
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
     out_schema = T.StructType(
         [
@@ -889,76 +871,11 @@ def stream_transform_typecounts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        def close(self) -> None:
-            pass
-
-    ev = stream_events(spark, sf_dir).select("user_id", "event_type")
-    profiled = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCountProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
+    # each user's final emission carries the complete map snapshot
+    final = _per_user_state(
+        spark, sf_dir, TypeCountProcessor(), out_schema, "n_seen", "user_id", "event_type"
     )
-    out = run_to_completion(profiled, mode="update", conf=ROCKSDB)
-    from pyspark.sql.window import Window as W
-
-    # each user's FINAL emission carries the complete map snapshot
-    final = out.withColumn("_maxn", F.max("n_seen").over(W.partitionBy("user_id")))
-    return (
-        final.filter(F.col("n_seen") == F.col("_maxn"))
-        .select("user_id", "event_type", "n")
-        .distinct()
-    )
-
-
-if transform_with_state_available():  # pragma: no cover - env-dependent
-    # max_value goes NULL whenever isnan(max(value)) — Spark's Arrow
-    # pandas serializer cannot transport an emitted NaN — and the
-    # max_is_nan companion column disambiguates that NULL from an
-    # all-NULL group's genuine NULL maximum (isnan(NULL) is NULL in
-    # both engines). Hash-exact even on NaN/NULL-bearing corpora.
-    register(
-        "stream_transform_state",
-        """
-        WITH ranked AS (
-          SELECT user_id, value, event_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY value DESC, event_id ASC) AS r
-          FROM events
-        )
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CASE WHEN isnan(max(value)) THEN NULL
-                    ELSE round(max(value) * 100) / 100 END AS max_value,
-               isnan(max(value)) AS max_is_nan,
-               max(CASE WHEN r = 1 THEN event_id END) AS argmax_event
-        FROM ranked GROUP BY user_id
-        """,
-    )(stream_transform_state)
-    register(
-        "stream_transform_topk",
-        """
-        WITH ranked AS (
-          SELECT user_id, value, event_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY value DESC, event_id ASC) AS rnk
-          FROM events
-        )
-        SELECT user_id, CAST(rnk AS BIGINT) AS rnk,
-               CASE WHEN isnan(value) THEN NULL
-                    ELSE round(value * 100) / 100 END AS value,
-               isnan(value) AS value_is_nan,
-               event_id
-        FROM ranked WHERE rnk <= 3
-        """,
-    )(stream_transform_topk)
-    register(
-        "stream_transform_typecounts",
-        """
-        SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY user_id, event_type
-        """,
-    )(stream_transform_typecounts)
+    return final.select("user_id", "event_type", "n").distinct()
 
 
 @register(
@@ -1105,7 +1022,7 @@ def stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.utime(a, (1_000_000, 1_000_000))  # older mtime -> first batch
     os.utime(b, (2_000_000, 2_000_000))
     raw = (
-        spark.readStream.schema(_EVENTS_RAW)
+        spark.readStream.schema(sources.SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .withColumn("ts", F.col("ts").cast("timestamp"))

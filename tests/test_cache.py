@@ -190,7 +190,6 @@ _STATE_ALLOWLIST = {
     ("registry.py", "QUERIES"): "static query registry, filled at import",
     ("registry.py", "ORACLES"): "static oracle registry, filled at import",
     ("deploy.py", "_SHIPPED"): "per-SparkContext addPyFile guard",
-    ("protocompat.py", "_shipped_app_ids"): "per-SparkContext addPyFile guard",
     ("operators/vector_blas.py", "_CORPUS_CACHE"): "executor-side worker cache",
 }
 

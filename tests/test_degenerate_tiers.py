@@ -37,7 +37,7 @@ TABLES = (
 ).split()
 
 
-def _build_null_tier(src: str, dst: Path) -> str:
+def _build_null_tier(src: str, dst: Path, text_mod: int = 3) -> str:
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -45,7 +45,7 @@ def _build_null_tier(src: str, dst: Path) -> str:
     for f in sorted(Path(src).glob("*.parquet")):
         t = pq.read_table(str(f))
         if f.stem == "documents":
-            mask = pa.array((np.asarray(t["doc_id"].combine_chunks()) % 3) == 0)
+            mask = pa.array((np.asarray(t["doc_id"].combine_chunks()) % text_mod) == 0)
             text = pc.if_else(mask, pa.nulls(len(t), pa.string()),
                               t["text"].combine_chunks())
             t = t.set_column(t.schema.get_field_index("text"), "text", text)
@@ -93,6 +93,14 @@ def _build_const_tier(src: str, dst: Path) -> str:
 @pytest.fixture(scope="module")
 def null_sf(tmp_path_factory, sf_dir) -> str:
     return _build_null_tier(sf_dir, tmp_path_factory.mktemp("svs_null_tier"))
+
+
+@pytest.fixture(scope="module")
+def media_null_sf(tmp_path_factory, sf_dir) -> str:
+    # text NULL for doc_id % 2 == 0 reaches all three media residues
+    # (doc_id % 3: image 0, audio 1, video 2); the default tier's
+    # doc_id % 3 == 0 nulls only the image residue
+    return _build_null_tier(sf_dir, tmp_path_factory.mktemp("svs_media_null_tier"), text_mod=2)
 
 
 @pytest.fixture(scope="module")
@@ -179,6 +187,14 @@ CONST_TIER_QUERIES = [
 @pytest.mark.parametrize("name", NULL_TIER_QUERIES)
 def test_null_tier_oracle_parity(spark, null_sf, name):
     _oracle_compare(spark, null_sf, name)
+
+
+@pytest.mark.parametrize("name", ["mm_image_features", "mm_frame_sample", "mm_audio_features"])
+def test_media_null_tier_oracle_parity(spark, media_null_sf, name):
+    """Each media planter follows its oracle on NULL text: image and
+    video drop the document, audio emits the all-NULL feature row
+    DuckDB computes from md5(NULL)."""
+    _oracle_compare(spark, media_null_sf, name)
 
 
 @pytest.mark.parametrize("name", CONST_TIER_QUERIES)

@@ -33,25 +33,10 @@ def test_sweep_window_prioritizes_least_attested():
     caches, the shared-ANN family, the TWS retry path, the
     cost-shift family heads), and the r13 re-plans keeping slots."""
     from skills_vectors_spark import registry
-    from skills_vectors_spark.streaming.windows import (
-        transform_with_state_available,
-    )
 
     registry.load_all()
     window = list(registry.QUERIES)[:50]
-    # the stream_transform trio registers only where the TWS runtime
-    # is available; elsewhere the window legitimately back-fills from
-    # the queue, so only assert set-equality modulo those three
-    tws = transform_with_state_available()
-    promoted = set(registry._PROMOTED)
-    if not tws:
-        promoted -= {
-            "stream_transform_state",
-            "stream_transform_topk",
-            "stream_transform_typecounts",
-        }
-        window = list(registry.QUERIES)[: len(promoted)]
-    assert promoted == set(window)
+    assert window == registry._PROMOTED
     for must in (
         # r13 optimizer-touched rows the r13 window never graded
         # (the r13 verdict's item 3 names them)
@@ -70,8 +55,8 @@ def test_sweep_window_prioritizes_least_attested():
            "dedup_ngram_jaccard", "dedup_containment",
            "text_tfidf_sim", "eval_ndcg_mrr", "embed_knn_pipeline"]
         # TWS trio (run_to_completion retry path this round)
-        + (["stream_transform_state", "stream_transform_topk",
-            "stream_transform_typecounts"] if tws else [])
+        + ["stream_transform_state", "stream_transform_topk",
+           "stream_transform_typecounts"]
         # r13 re-plans keeping their slots
         + ["join_bloom_prefilter", "dedup_substring", "agg_percentile",
            "sim_topk_bruteforce"]

@@ -202,3 +202,74 @@ def test_no_match_count_outside_pipeline():
             ):
                 offenders.append(f"{py.relative_to(pkg)}:{node.lineno}")
     assert not offenders, f"match count outside pipeline.evaluate: {offenders}"
+
+
+def _package_trees():
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "skills_vectors_spark"
+    for py in sorted(pkg.rglob("*.py")):
+        yield py.relative_to(pkg).as_posix(), ast.parse(py.read_text())
+
+
+def test_every_register_decorates_a_module_level_function():
+    """A row registers where it is defined, as a decorator on a
+    module-level function: a register(...) call anywhere else (under
+    an `if`, applied to a function later) can add or drop a row at
+    import time."""
+    import ast
+
+    offenders = []
+    for rel, tree in _package_trees():
+        decorating = {
+            id(d)
+            for node in tree.body
+            if isinstance(node, ast.FunctionDef)
+            for d in node.decorator_list
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and (
+                    (isinstance(node.func, ast.Name) and node.func.id == "register")
+                    or (
+                        isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "register"
+                        and isinstance(node.func.value, ast.Name)
+                        and node.func.value.id == "registry"
+                    )
+                )
+                and id(node) not in decorating
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"register() outside a module-level decorator: {offenders}"
+
+
+def test_stream_readers_take_the_table_schema():
+    """A streaming file source needs an explicit schema; it is the
+    table's one declared schema, `sources.SCHEMAS[...]`, never a
+    second copy that can drift from the batch reader's."""
+    import ast
+
+    offenders = []
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            func = node.func if isinstance(node, ast.Call) else None
+            if not (
+                isinstance(func, ast.Attribute)
+                and func.attr == "schema"
+                and isinstance(func.value, ast.Attribute)
+                and func.value.attr == "readStream"
+            ):
+                continue
+            arg = node.args[0] if node.args else None
+            if not (
+                isinstance(arg, ast.Subscript)
+                and isinstance(arg.value, ast.Attribute)
+                and arg.value.attr == "SCHEMAS"
+                and isinstance(arg.value.value, ast.Name)
+                and arg.value.value.id == "sources"
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"readStream.schema without sources.SCHEMAS: {offenders}"

@@ -155,22 +155,50 @@ def test_descriptor_parse_covers_all_state_messages():
 
 
 def test_vendor_zip_importable_standalone(tmp_path):
+    """The package archive alone on PYTHONPATH imports google.protobuf:
+    from the archive's own root copy when no real wheel exists, which
+    is how a task worker gets it."""
+    import os
     import subprocess
     import sys
 
-    zpath = protocompat.vendor_zip_path(str(tmp_path))
+    import skills_vectors_spark
+    from skills_vectors_spark import deploy
+
+    zpath = str(tmp_path / "pkg.zip")
+    deploy._build_archive(os.path.dirname(skills_vectors_spark.__file__), zpath)
     r = subprocess.run(
         [
             sys.executable,
             "-c",
+            "import google.protobuf as p; "
             "from google.protobuf import descriptor, descriptor_pool; "
-            "from google.protobuf.internal import builder; print('ok')",
+            "from google.protobuf.internal import builder; "
+            "from skills_vectors_spark import protocompat; "
+            "print(p.__file__, protocompat.real_protobuf())",
         ],
         capture_output=True,
         text=True,
         env={"PYTHONPATH": zpath, "PATH": "/usr/bin:/bin"},
     )
-    assert r.stdout.strip() == "ok", r.stderr
+    assert r.returncode == 0, r.stderr
+    origin, real = r.stdout.split()
+    wheel = protocompat.real_protobuf()
+    assert origin.startswith(zpath) != wheel, r.stdout
+    # a google.protobuf served from the archive is not a real wheel: the
+    # driver imports it from there once addPyFile put the archive on
+    # its sys.path, and must still point StreamingPythonRunner's
+    # driver-side worker at the vendor dir
+    assert real == str(wheel), r.stdout
+
+
+def test_tws_row_ships_one_archive(spark, sf_dir):
+    """A session that ran a transformWithState row holds exactly one
+    addPyFile archive: the package's, carrying the protobuf runtime."""
+    from skills_vectors_spark.streaming.windows import stream_transform_typecounts
+
+    assert stream_transform_typecounts(spark, sf_dir).count() > 0
+    assert len(spark.sparkContext._python_includes) == 1
 
 
 # ---------------------------------------------------- property tests

@@ -103,15 +103,7 @@ def test_text_bm25_search_hits_contain_terms(spark, sf_dir):
 
 
 def test_stream_transform_state_matches_batch(spark, sf_dir):
-    import pytest
-
-    from skills_vectors_spark.streaming.windows import (
-        stream_transform_state,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("google.protobuf not available in this runtime")
+    from skills_vectors_spark.streaming.windows import stream_transform_state
 
     got = {
         r.user_id: (r.n_events, r.max_value, r.argmax_event)
@@ -135,15 +127,7 @@ def test_stream_transform_state_matches_batch(spark, sf_dir):
 
 
 def test_stream_transform_topk_matches_batch(spark, sf_dir):
-    import pytest
-
-    from skills_vectors_spark.streaming.windows import (
-        stream_transform_topk,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("google.protobuf not available in this runtime")
+    from skills_vectors_spark.streaming.windows import stream_transform_topk
 
     got = {
         (r.user_id, r.rnk): (r.value, r.event_id)
@@ -168,15 +152,7 @@ def test_stream_transform_topk_matches_batch(spark, sf_dir):
 
 
 def test_stream_transform_typecounts_matches_batch(spark, sf_dir):
-    import pytest
-
-    from skills_vectors_spark.streaming.windows import (
-        stream_transform_typecounts,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("google.protobuf not available in this runtime")
+    from skills_vectors_spark.streaming.windows import stream_transform_typecounts
 
     got = {
         (r.user_id, r.event_type): r.n
@@ -333,13 +309,7 @@ def test_stream_transform_nan_and_null_type_semantics(spark, tmp_path):
         stream_transform_state,
         stream_transform_topk,
         stream_transform_typecounts,
-        transform_with_state_available,
     )
-
-    if not transform_with_state_available():
-        import pytest
-
-        pytest.skip("transformWithStateInPandas runtime unavailable")
 
     d = str(tmp_path)
     base = 1_700_000_000_000_000  # us

@@ -24,8 +24,6 @@ def _temp_views(spark):
     "row", ["stream_tumbling", "stream_sink_files", "stream_transform_state"]
 )
 def test_stream_rows_leave_session_conf_and_catalog_alone(spark, sf_dir, row):
-    if row == "stream_transform_state" and not windows.transform_with_state_available():
-        pytest.skip("transformWithState needs a protobuf runtime")
     own = (spark.conf.get(PARTITIONS), spark.conf.get(PROVIDER, None))
     views = _temp_views(spark)
     seen = set()
