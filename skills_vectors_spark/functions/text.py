@@ -7,24 +7,54 @@ embedding / multimodal stubs.
 Generalizes the reference's text handling (newline scrub before
 embedding, /root/reference/create_skill_embeddings.py:12,16) into
 the LLM-training-data operator family (BASELINE.json north star).
+
+This module is the one statement of the tokenization rule every text
+row shares with its DuckDB oracle (lower-case, collapse each whitespace
+run to ' ', trim ' ', split on ' '): as Column macros, as ``DUCK_*``
+oracle fragments, and as :func:`py_tokens` for Arrow passes. Whitespace
+is RE2's ``\\s``, ``[ \\t\\n\\r\\f]``; Java's and Python's ``\\s`` also
+match ``\\x0B``, so the Spark and Python sides spell the class out.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+_WS = r" \t\n\r\f"  # RE2's \s, in Java and Python regex syntax
+_PY_WS_RUN = re.compile(f"[{_WS}]+")
+
+# DuckDB twins of the macros below, over a `text` column (DuckDB's
+# regexp_replace needs the 'g' flag; Spark's is global by default)
+DUCK_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+DUCK_TOKENS = f"string_split({DUCK_NORM}, ' ')"
+DUCK_BPE_COUNT = "CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT)"
+DUCK_PUNCT_RATIO = "len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE / greatest(length(text), 1)"
 
 
 def normalize_text(c: Column | str) -> Column:
     """Lowercase, collapse whitespace, strip — canonical form for
     dedup/fingerprinting."""
     c = F.col(c) if isinstance(c, str) else c
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(c), f"[{_WS}]+", " "))
 
 
 def tokens(c: Column | str) -> Column:
     """Whitespace tokenization of normalized text -> array<string>."""
     return F.split(normalize_text(c), " ")
+
+
+def py_tokens(text: str) -> list[str]:
+    """:func:`tokens` of one non-NULL string. strip(' '), as str.strip()
+    also eats Unicode whitespace that trim() keeps."""
+    return _PY_WS_RUN.sub(" ", text.lower()).strip(" ").split(" ")
+
+
+def content_md5(c: Column | str) -> Column:
+    """The exact-dedup content key; DuckDB's is ``md5(DUCK_NORM)``."""
+    return F.md5(normalize_text(c).cast("binary"))
 
 
 def token_count(c: Column | str) -> Column:
@@ -40,7 +70,7 @@ def token_count(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return (
         F.when(c.isNull(), F.lit(None))
-        .otherwise(F.greatest(F.regexp_count(c, F.lit(r"\S+")), F.lit(1)))
+        .otherwise(F.greatest(F.regexp_count(c, F.lit(f"[^{_WS}]+")), F.lit(1)))
         .cast("long")
     )
 
@@ -50,7 +80,7 @@ def bpe_ish_token_count(c: Column | str) -> Column:
     punctuation as separate tokens (a common ~GPT-2 regex heuristic).
     Pure regexp_count — no tokenizer library needed."""
     c = F.col(c) if isinstance(c, str) else c
-    return F.regexp_count(c, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]")).cast("long")
+    return F.regexp_count(c, F.lit(f"[A-Za-z]+|[0-9]|[^A-Za-z0-9{_WS}]")).cast("long")
 
 
 def word_shingles(c: Column | str, n: int = 3) -> Column:
@@ -91,7 +121,7 @@ def stopword_hits(c: Column | str, lang: str) -> Column:
 
 def punct_ratio(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
-    return F.regexp_count(c, F.lit(r"[^\w\s]")).cast("double") / F.greatest(
+    return F.regexp_count(c, F.lit(f"[^\\w{_WS}]")).cast("double") / F.greatest(
         F.length(c).cast("double"), F.lit(1.0)
     )
 

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.functions.text import DUCK_TOKENS, tokens
 from skills_vectors_spark.operators.relevance import (
-    D_TOKS,
     N_Q_DOCS,
     TOPK,
     _term_freqs,
@@ -56,7 +56,7 @@ PMI_TOPN = 50
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
     idf AS (
@@ -273,7 +273,7 @@ def _psi_report(spark: SparkSession, cnt: DataFrame) -> DataFrame:
 @register(
     "text_pmi_bigrams",
     f"""
-    WITH toks AS (SELECT {D_TOKS} AS l FROM documents),
+    WITH toks AS (SELECT {DUCK_TOKENS} AS l FROM documents),
     bi AS (
       SELECT unnest(l[1:len(l) - 1]) AS w1, unnest(l[2:len(l)]) AS w2 FROM toks
     ), ab AS (
@@ -281,7 +281,7 @@ def _psi_report(spark: SparkSession, cnt: DataFrame) -> DataFrame:
       HAVING count(*) >= {PMI_MIN_COUNT}
     ), uni AS (
       SELECT tok, count(*) AS cnt
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY tok
     ), tot AS (
       SELECT (SELECT count(*) FROM bi) AS n_bi,
@@ -322,11 +322,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine order is exact.
     """
     docs = sources.load(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.split(
-            F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-        ).alias("l")
-    )
+    toks = docs.select(tokens("text").alias("l"))
     bi = toks.select(
         F.explode(
             F.arrays_zip(
@@ -446,7 +442,7 @@ ZIPF_TOPN = 1000  # rank-frequency fit over the top-N tokens
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), freq AS (
       SELECT tok, CAST(sum(tf) AS BIGINT) AS freq FROM tf GROUP BY tok

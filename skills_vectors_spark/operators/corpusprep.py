@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.functions.text import tokens
 from skills_vectors_spark.registry import register
 
 # fractional epoch targets per language (the data-recipe knob);
@@ -115,13 +116,8 @@ def _gram_expr(col: str) -> F.Column:
     """Word NGRAM_N-grams of a whitespace-normalized lowercase text
     column as an array of space-joined strings — a single whole-stage
     codegen higher-order expression (split -> transform over start
-    indices -> array_join slices); no Python worker.
-
-    The whitespace class is spelled explicitly (advisor r7): Java's \\s
-    includes vertical tab \\x0B while DuckDB's RE2 \\s does not, so both
-    engines normalize on the same literal [ \\t\\n\\r\\f] set and the
-    tokenization is engine-independent even on control-char input."""
-    toks = F.split(F.trim(F.regexp_replace(F.lower(col), r"[ \t\n\r\f]+", " ")), " ")
+    indices -> array_join slices); no Python worker."""
+    toks = tokens(col)
     # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0] (it
     # infers step -1), so short documents must short-circuit to an
     # empty gram list instead (DuckDB's generate_series(1, 0) is

@@ -31,20 +31,19 @@ from pyspark.sql import types as T
 
 from skills_vectors_spark import sources
 from skills_vectors_spark.functions.text import (
-    normalize_text,
+    DUCK_NORM,
+    DUCK_TOKENS,
+    content_md5,
     tokens as tokens_col,
     word_shingles,
 )
 from skills_vectors_spark.functions.vector import cosine_sim
 from skills_vectors_spark.registry import register
 
-# shared DuckDB fragments (tokenization contract, see textstats.py)
-D_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-D_TOKENS = f"string_split({D_NORM}, ' ')"
 # word 3-shingles in DuckDB: list slicing is inclusive, t[i:i+2] = 3 tokens
 D_SHINGLES = (
-    f"list_transform(range(1, greatest(len({D_TOKENS}) - 2, 1) + 1),"
-    f" i -> array_to_string({D_TOKENS}[i:i+2], ' '))"
+    f"list_transform(range(1, greatest(len({DUCK_TOKENS}) - 2, 1) + 1),"
+    f" i -> array_to_string({DUCK_TOKENS}[i:i+2], ' '))"
 )
 
 JACCARD_THRESHOLD = 0.3
@@ -53,11 +52,11 @@ JACCARD_THRESHOLD = 0.3
 @register(
     "dedup_exact",
     f"""
-    SELECT md5({D_NORM}) AS text_md5,
+    SELECT md5({DUCK_NORM}) AS text_md5,
            CAST(min(doc_id) AS BIGINT) AS keep_id,
            CAST(count(*) AS BIGINT) AS n_copies
     FROM documents
-    GROUP BY md5({D_NORM})
+    GROUP BY md5({DUCK_NORM})
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,7 +66,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     of document size — the 100 TB exact-dedup idiom."""
     d = sources.load(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.md5(F.encode(normalize_text("text"), "UTF-8")).alias("text_md5"))
+        d.select("doc_id", content_md5("text").alias("text_md5"))
         .groupBy("text_md5")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
@@ -253,7 +252,7 @@ _PERMS_SQL = ", ".join(f"({k}, {a}, {b})" for k, (a, b) in enumerate(_perms()))
 _MINHASH_CTES = f"""
     docs AS (
       SELECT doc_id,
-             list_transform({D_TOKENS},
+             list_transform({DUCK_TOKENS},
                t -> ('0x' || substr(md5(t), 1, 8))::BIGINT % {_MERSENNE}) AS th
       FROM documents
     ),
@@ -336,7 +335,7 @@ def shingle_sigs(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     # also scans its cached partitions once per stage, so near-empty
     # ones cost twice
     d = sources.load_spread(spark, sf_dir, "documents", sized=True)
-    toks = F.split(normalize_text("text"), " ")
+    toks = tokens_col("text")
     # hash tokens JVM-side: the transform runs in codegen, and the
     # Arrow batch then carries int64s, not strings. Cross-engine
     # contract: conv(substr(md5(t),1,8),16,10) here equals DuckDB's
@@ -636,7 +635,7 @@ _SIM_HAMMING = 3  # pigeonhole: hamming<=3 => one of 4 chunks identical
 _SIMHASH_CTES = f"""
     sdocs AS (
       SELECT doc_id,
-             list_transform({D_TOKENS},
+             list_transform({DUCK_TOKENS},
                t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS th
       FROM documents
     ),
@@ -708,7 +707,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = d.select(
         "doc_id",
         F.transform(
-            F.split(normalize_text("text"), " "),
+            tokens_col("text"),
             lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 15), 16, 10).cast(
                 "long"
             ),
@@ -1257,7 +1256,7 @@ def _incr_bucket(col):
       SELECT doc_id,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
                % {INCR_BUCKETS} AS b,
-             md5({D_NORM}) AS h
+             md5({DUCK_NORM}) AS h
       FROM documents
     ), sh AS (
       SELECT DISTINCT doc_id, unnest({D_SHINGLES}) AS s FROM documents
@@ -1313,7 +1312,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = d.select(
         "doc_id",
         _incr_bucket(F.col("doc_id")).alias("b"),
-        F.md5(normalize_text("text").cast("binary")).alias("h"),
+        content_md5("text").alias("h"),
     )
     delta_h = hashed.filter(F.col("b") >= boundary)
     base_h = hashed.filter(F.col("b") < boundary)
@@ -1377,7 +1376,7 @@ SUBSTR_S = 15  # stride (50% overlap)
     "dedup_substring",
     f"""
     WITH t AS (
-      SELECT doc_id, {D_TOKENS} AS toks, len({D_TOKENS}) AS n FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS toks, len({DUCK_TOKENS}) AS n FROM documents
     ), w AS (
       SELECT doc_id,
              unnest(list_transform(

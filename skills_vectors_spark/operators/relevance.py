@@ -30,10 +30,8 @@ from pyspark.sql import types as T
 
 from skills_vectors_spark import sources
 from skills_vectors_spark.cache import cached_df as _cached
+from skills_vectors_spark.functions.text import DUCK_TOKENS, py_tokens
 from skills_vectors_spark.registry import register
-
-D_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-D_TOKS = f"string_split({D_NORM}, ' ')"
 
 # vocab-sized dimension frames (idf weights, unigram probabilities)
 # are broadcast-hinted only while the corpus is LOCALLY small: at
@@ -75,12 +73,8 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave the partition that read it, so the exchange the groupBy
     needed disappears entirely — the same fusion that bought the
     MinHash signature pass its 8x. Shuffles only happen downstream,
-    on the already-collapsed (doc, tok, tf) rows. Tokenization
-    contract matches the DuckDB oracles exactly: lower -> collapse
-    the explicit [ \\t\\n\\r\\f]+ class (== RE2's \\s; Python re.ASCII
-    \\s and Java \\s additionally match \\x0B, so the class is spelled
-    out — advisor r7's corpusprep finding applied here too) -> trim
-    -> split on ' '."""
+    on the already-collapsed (doc, tok, tf) rows. Tokens come from
+    functions.text.py_tokens, the oracles' DUCK_TOKENS in Python."""
 
     def build() -> DataFrame:
         # sized spread: the tokenize pass is the measured case behind
@@ -88,10 +82,8 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = sources.load_spread(spark, sf_dir, "documents", sized=True)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import re
             from collections import Counter
 
-            ws = re.compile(r"[ \t\n\r\f]+")
             for pdf in batches:
                 ids: list[int] = []
                 toks: list[str] = []
@@ -99,14 +91,10 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dls: list[int] = []
                 for did, text in zip(pdf["doc_id"], pdf["text"]):
                     if text is None:
-                        # D_TOKS (string_split of NULL) unnests to no
-                        # rows in the oracle; mirror that, don't raise.
+                        # DUCK_TOKENS (string_split of NULL) unnests to
+                        # no rows in the oracle; mirror that, don't raise.
                         continue
-                    # strip(' ') not strip(): Python str.strip() eats
-                    # Unicode whitespace that Java/DuckDB trim() keep —
-                    # the whitespace collapse above already handled
-                    # ASCII space, so only leading/trailing ' ' remain.
-                    counts = Counter(ws.sub(" ", text.lower()).strip(" ").split(" "))
+                    counts = Counter(py_tokens(text))
                     dl = sum(counts.values())
                     for t, n in counts.items():
                         ids.append(did)
@@ -205,7 +193,7 @@ def tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf),
     idf AS (
@@ -319,7 +307,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), dl AS (
       SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
@@ -367,7 +355,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), tot AS (SELECT sum(tf) AS n FROM tf),
     p AS (
@@ -428,7 +416,7 @@ HYBRID_ARM_C = 100
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ), dl AS (
       SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
@@ -546,7 +534,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH tf AS (
       SELECT doc_id, tok, count(*) AS tf
-      FROM (SELECT doc_id, unnest({D_TOKS}) AS tok FROM documents)
+      FROM (SELECT doc_id, unnest({DUCK_TOKENS}) AS tok FROM documents)
       GROUP BY doc_id, tok
     ),
     nd AS (

@@ -32,8 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.functions.text import DUCK_PUNCT_RATIO, DUCK_TOKENS, tokens
 from skills_vectors_spark.scratch import scratch as _scratch
-from skills_vectors_spark.operators.textstats import D_TOKENS, _d_stop_hits, quality_score
+from skills_vectors_spark.operators.textstats import _d_stop_hits, quality_score
 from skills_vectors_spark.registry import register
 
 BAND = 100  # acctbal band half-width; also the bin width
@@ -276,10 +277,9 @@ _CHARS_LO, _CHARS_HI = 120, 20000
     WITH feats AS (
       SELECT doc_id,
              least(n_chars / 500.0, 1.0) AS len_score,
-             len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE
-               / greatest(length(text), 1) AS punct_ratio,
+             {DUCK_PUNCT_RATIO} AS punct_ratio,
              {_d_stop_hits("en")}::DOUBLE
-               / greatest(len({D_TOKENS}), 1) AS stop_ratio
+               / greatest(len({DUCK_TOKENS}), 1) AS stop_ratio
       FROM documents
     ), scored AS (
       SELECT doc_id,
@@ -424,7 +424,7 @@ PACK_BUDGET = 256  # tokens per training sequence
     f"""
     WITH counted AS (
       SELECT doc_id, source,
-             len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_tok
+             len({DUCK_TOKENS}) AS n_tok
       FROM documents
     ), packed AS (
       SELECT source, doc_id, n_tok,
@@ -451,8 +451,6 @@ def text_pack_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-fit would serialize the corpus). One window + one agg,
     both on the same source partitioning: a single shuffle."""
     d = sources.load(spark, sf_dir, "documents")
-    from skills_vectors_spark.functions.text import tokens
-
     counted = d.select("doc_id", "source", F.size(tokens("text")).alias("n_tok"))
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     packed = counted.withColumn(

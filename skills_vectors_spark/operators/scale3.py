@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import cache, sources
-from skills_vectors_spark.operators.textstats import D_TOKENS
+from skills_vectors_spark.functions.text import DUCK_NORM, DUCK_TOKENS, normalize_text, tokens
 from skills_vectors_spark.registry import register
 
 # ------------------------------------------------ text_normalize
@@ -33,7 +33,7 @@ from skills_vectors_spark.registry import register
 # NFC step is exercised with known-answer inputs in BOTH engines.
 # Single spaces only — the registry collapses oracle whitespace, so
 # multi-space literals would not survive inside the SQL string (the
-# corpus rows still exercise the \s+ collapse).
+# corpus rows still exercise the whitespace collapse).
 _PLANTED: list[tuple[int, str]] = [
     (-1, "Cafe\u0301 LATTE"),  # decomposed e + U+0301 -> caf\u00e9
     (-2, "CAF\u00c9 latte"),  # composed \u00c9 -> caf\u00e9 (same norm as -1)
@@ -57,10 +57,8 @@ _PLANTED_SQL = " UNION ALL ".join(
       {_PLANTED_SQL}
     )
     SELECT doc_id,
-           nfc_normalize(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-             AS norm_text,
-           nfc_normalize(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-             <> text AS changed
+           nfc_normalize({DUCK_NORM}) AS norm_text,
+           nfc_normalize({DUCK_NORM}) <> text AS changed
     FROM all_docs
     """,
 )
@@ -71,7 +69,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     string hash identically. Generalizes the reference's pre-embedding
     scrub (create_skill_embeddings.py:12,16).
 
-    Scale shape: lowercase + \\s+ collapse stay in whole-stage codegen;
+    Scale shape: lowercase + whitespace collapse stay in whole-stage codegen;
     only the NFC step (no Catalyst builtin exists) runs as one
     Arrow-vectorized pass (pandas ``str.normalize`` = unicodedata NFC,
     the same UAX#15 algorithm utf8proc implements for the DuckDB
@@ -104,7 +102,7 @@ def _docs_with_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(planted).select(
         "doc_id",
         "text",
-        F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")).alias("pre_norm"),
+        normalize_text("text").alias("pre_norm"),
     )
 
 
@@ -118,8 +116,7 @@ def _docs_with_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     norm AS (
       SELECT doc_id,
-             nfc_normalize(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-               AS norm_text
+             nfc_normalize({DUCK_NORM}) AS norm_text
       FROM all_docs
     )
     SELECT md5(norm_text) AS norm_key,
@@ -547,7 +544,7 @@ def _cms_bucket(seed_col, val_col):
 @register(
     "agg_heavy_hitters",
     f"""
-    WITH toks AS (SELECT unnest({D_TOKENS}) AS tok FROM documents),
+    WITH toks AS (SELECT unnest({DUCK_TOKENS}) AS tok FROM documents),
     cnts AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY tok),
     total AS (SELECT sum(cnt) AS tot FROM cnts),
     seeds AS (SELECT unnest({CMS_SEEDS}) AS seed),
@@ -592,8 +589,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     def build_counts() -> DataFrame:
         d = sources.load(spark, sf_dir, "documents")
-        norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
-        toks = d.select(F.explode(F.split(norm, " ")).alias("tok"))
+        toks = d.select(F.explode(tokens("text")).alias("tok"))
         return toks.groupBy("tok").agg(F.count("*").cast("long").alias("cnt"))
 
     # session cache module, not a bare .cache(): the returned plan

@@ -8,9 +8,8 @@ Generalizes the reference's text handling (A5 newline scrub,
 is Catalyst built-ins — at 100 TB these run inside whole-stage
 codegen with zero Python; the only shuffle is the final group-by.
 
-Tokenization contract (must match the DuckDB oracles exactly):
-norm = trim(regexp_replace(lower(text), '\\s+', ' ')); tokens =
-split(norm, ' ').
+Tokenization is the one rule of functions/text.py, which states it
+for Spark, for the DuckDB oracles and for the Arrow passes alike.
 """
 
 from __future__ import annotations
@@ -20,24 +19,26 @@ from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
 from skills_vectors_spark.functions.text import (
+    DUCK_BPE_COUNT,
+    DUCK_NORM,
+    DUCK_PUNCT_RATIO,
+    DUCK_TOKENS,
     STOPWORDS,
     bpe_ish_token_count,
-    normalize_text,
+    content_md5,
+    digit_ratio,
+    punct_ratio,
+    py_tokens,
     stopword_hits,
     token_count,
     tokens,
 )
 from skills_vectors_spark.registry import register
 
-# DuckDB fragments mirroring functions/text.py (regexp_replace needs
-# the 'g' flag in DuckDB; Spark's is global by default).
-D_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-D_TOKENS = f"string_split({D_NORM}, ' ')"
-
 
 def _d_stop_hits(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-    return f"len(list_filter({D_TOKENS}, x -> list_contains([{words}], x)))"
+    return f"len(list_filter({DUCK_TOKENS}, x -> list_contains([{words}], x)))"
 
 
 @register(
@@ -45,7 +46,7 @@ def _d_stop_hits(lang: str) -> str:
     f"""
     SELECT lang, source,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len({D_TOKENS})) AS BIGINT) AS total_tokens,
+           CAST(sum(len({DUCK_TOKENS})) AS BIGINT) AS total_tokens,
            round(avg(n_chars) * 100) / 100 AS avg_chars,
            CAST(max(n_chars) AS BIGINT) AS max_chars
     FROM documents
@@ -68,9 +69,8 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_count",
     f"""
     SELECT doc_id,
-           CAST(len({D_TOKENS}) AS BIGINT) AS n_tokens_ws,
-           CAST(len(regexp_extract_all(text,
-             '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens_bpe
+           CAST(len({DUCK_TOKENS}) AS BIGINT) AS n_tokens_ws,
+           {DUCK_BPE_COUNT} AS n_tokens_bpe
     FROM documents
     """,
 )
@@ -154,12 +154,11 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH feats AS (
       SELECT doc_id,
              least(n_chars / 500.0, 1.0) AS len_score,
-             len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE
-               / greatest(length(text), 1) AS punct_ratio,
+             {DUCK_PUNCT_RATIO} AS punct_ratio,
              len(regexp_extract_all(text, '[0-9]'))::DOUBLE
                / greatest(length(text), 1) AS digit_ratio,
              {_d_stop_hits("en")}::DOUBLE
-               / greatest(len({D_TOKENS}), 1) AS stop_ratio
+               / greatest(len({DUCK_TOKENS}), 1) AS stop_ratio
       FROM documents
     )
     SELECT doc_id,
@@ -178,12 +177,11 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     family (north-star text analysis)."""
     d = sources.load_spread(spark, sf_dir, "documents")
     n_tok = F.greatest(F.size(tokens("text")), F.lit(1)).cast("double")
-    length = F.greatest(F.length("text"), F.lit(1)).cast("double")
     feats = d.select(
         "doc_id",
         F.least(F.col("n_chars") / 500.0, F.lit(1.0)).alias("len_score"),
-        (F.regexp_count("text", F.lit(r"[^\w\s]")).cast("double") / length).alias("punct_ratio"),
-        (F.regexp_count("text", F.lit(r"[0-9]")).cast("double") / length).alias("digit_ratio"),
+        punct_ratio("text").alias("punct_ratio"),
+        digit_ratio("text").alias("digit_ratio"),
         (stopword_hits("text", "en").cast("double") / n_tok).alias("stop_ratio"),
     )
     r6 = lambda c: F.round(c * 1e6) / 1e6  # noqa: E731
@@ -203,8 +201,8 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fingerprint",
     f"""
-    SELECT doc_id, md5({D_NORM}) AS fp,
-           substr(md5({D_NORM}), 1, 8) AS fp_bucket
+    SELECT doc_id, md5({DUCK_NORM}) AS fp,
+           substr(md5({DUCK_NORM}), 1, 8) AS fp_bucket
     FROM documents
     """,
 )
@@ -214,7 +212,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard-local grouping. Content-defined, order-independent —
     partitioning by fp_bucket co-locates duplicates at any scale."""
     d = sources.load_spread(spark, sf_dir, "documents")
-    fp = F.md5(F.encode(normalize_text("text"), "UTF-8"))
+    fp = content_md5("text")
     return d.select("doc_id", fp.alias("fp"), F.substring(fp, 1, 8).alias("fp_bucket"))
 
 
@@ -237,7 +235,7 @@ def _rolling_hash(c: Column) -> Column:
     # identical ((0*31 + v1) = v1 starts the same chain).
     f"""
     WITH t AS (
-      SELECT doc_id, {D_TOKENS} AS toks FROM documents
+      SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents
     )
     SELECT doc_id,
            CASE WHEN toks IS NULL THEN NULL ELSE
@@ -264,8 +262,7 @@ CHUNK_STRIDE = 40  # overlap = size - stride
     "text_chunk",
     f"""
     WITH t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+      SELECT doc_id, {DUCK_TOKENS} AS toks
       FROM documents
       WHERE text IS NOT NULL
     ), s AS (
@@ -288,9 +285,9 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only row expansion and the input is pre-spread. Chunk ids are
     deterministic (ordinal of the window start)."""
     d = sources.load_spread(spark, sf_dir, "documents")
-    toks = F.split(normalize_text("text"), " ")
+    toks = tokens("text")
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(CHUNK_STRIDE))
-    # NULL text chunks to NOTHING (the D_TOKS unnest convention): the
+    # NULL text chunks to NOTHING (the DUCK_TOKENS unnest convention): the
     # oracle's unnest(range(..NULL..)) emits no rows, while Spark's
     # greatest(size(NULL), 1) would fabricate one phantom empty chunk
     chunked = d.filter(F.col("text").isNotNull()).select(
@@ -395,7 +392,7 @@ def diag_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "quality_repetition",
     f"""
-    WITH t AS (SELECT doc_id, {D_TOKENS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents),
     tok AS (SELECT doc_id, unnest(toks) AS tok FROM t),
     tokc AS (
       SELECT doc_id, max(c) AS max_tok, count(*) AS n_uniq
@@ -437,19 +434,17 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pays exchanges for a per-row metric), per-row Catalyst
     higher-order functions 5.6 s (HOF lambda evaluation is
     per-element interpreted), fused Arrow pass 0.79 s — 0.28x DuckDB
-    on the same query. Tokenization matches the D_TOKS oracle
-    contract exactly (lower -> \\s+ collapse with re.ASCII -> ASCII
-    strip -> split on ' '); null text drops, as unnest(NULL) does."""
+    on the same query. Tokens come from functions.text.py_tokens,
+    the oracle's DUCK_TOKENS in Python; null text drops, as
+    unnest(NULL) does."""
     import pandas as pd
 
     d = sources.load_spread(spark, sf_dir, "documents")
 
     def run(batches):
         import math
-        import re
         from collections import Counter
 
-        ws = re.compile(r"\s+", re.ASCII)
         for pdf in batches:
             out: dict[str, list] = {
                 "doc_id": [],
@@ -461,7 +456,7 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
-                toks = ws.sub(" ", text.lower()).strip(" ").split(" ")
+                toks = py_tokens(text)
                 n = len(toks)
                 c = Counter(toks)
                 bc = Counter(zip(toks, toks[1:]))

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.functions.text import content_md5, normalize_text, punct_ratio, tokens
 from skills_vectors_spark.functions.vector import cosine_from_norms, l2_dist, l2_norm
 
 
@@ -314,21 +315,17 @@ def prepare_corpus(
     in the SAME scan projection, the only shuffles are the dedup
     group-by and the packing window, and nothing materializes until
     the caller acts."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    toks = F.split(norm, " ")
-    n_tok = F.greatest(F.size(toks), F.lit(1)).cast("double")
     length = F.greatest(F.length(text_col), F.lit(1)).cast("double")
-    punct = F.regexp_count(text_col, F.lit(r"[^\w\s]")).cast("double") / length
     quality = 0.5 * F.least(length / 500.0, F.lit(1.0)) + 0.5 * (
-        1 - F.least(5 * punct, F.lit(1.0))
+        1 - F.least(5 * punct_ratio(text_col), F.lit(1.0))
     )
     scored = docs.select(
         F.col(id_col).alias("id"),
-        norm.alias("text_norm"),
-        F.size(toks).cast("long").alias("n_tok"),
+        normalize_text(text_col).alias("text_norm"),
+        F.size(tokens(text_col)).cast("long").alias("n_tok"),
         quality.alias("quality"),
         F.length(text_col).alias("n_chars"),
-        F.md5(F.encode(norm, "UTF-8")).alias("fp"),
+        content_md5(text_col).alias("fp"),
     ).filter(
         (F.col("quality") >= quality_min) & F.col("n_chars").between(*chars)
     )

@@ -21,6 +21,12 @@ zero-row tier (tests/test_empty_corpus.py):
   last ulp (blocked-BLAS GEMM scores differ BY COLUMN POSITION even
   for identical vectors).
 
+A control-whitespace tier (the first two spaces of documents.text
+turned into vertical tabs for doc_id%3==1) pins the tokenization
+rule: RE2's \\s, which the oracles use, does not match \\x0B, while
+Java's and Python's do, so a row that tokenizes with its own \\s
+splits words the oracle keeps whole.
+
 These tests pin representative members of every fixed class with a
 full cross-engine value compare on freshly-built tiers.
 """
@@ -90,6 +96,22 @@ def _build_const_tier(src: str, dst: Path) -> str:
     return str(dst)
 
 
+def _build_ws_tier(src: str, dst: Path) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in sorted(Path(src).glob("*.parquet")):
+        t = pq.read_table(str(f))
+        if f.stem == "documents":
+            text = [
+                s.replace(" ", "\x0b", 2) if s is not None and i % 3 == 1 else s
+                for i, s in zip(t["doc_id"].to_pylist(), t["text"].to_pylist())
+            ]
+            t = t.set_column(t.schema.get_field_index("text"), "text", pa.array(text, pa.string()))
+        pq.write_table(t, str(dst / f.name))
+    return str(dst)
+
+
 @pytest.fixture(scope="module")
 def null_sf(tmp_path_factory, sf_dir) -> str:
     return _build_null_tier(sf_dir, tmp_path_factory.mktemp("svs_null_tier"))
@@ -106,6 +128,11 @@ def media_null_sf(tmp_path_factory, sf_dir) -> str:
 @pytest.fixture(scope="module")
 def const_sf(tmp_path_factory, sf_dir) -> str:
     return _build_const_tier(sf_dir, tmp_path_factory.mktemp("svs_const_tier"))
+
+
+@pytest.fixture(scope="module")
+def ws_sf(tmp_path_factory, sf_dir) -> str:
+    return _build_ws_tier(sf_dir, tmp_path_factory.mktemp("svs_ws_tier"))
 
 
 def _oracle_compare(spark, tier_dir: str, name: str) -> None:
@@ -184,6 +211,33 @@ CONST_TIER_QUERIES = [
 ]
 
 
+# the rows that diverged from their oracles while the Spark and Python
+# sides tokenized with their regex engines' \s
+WS_TIER_QUERIES = [
+    "text_stats",
+    "token_count",
+    "lang_id",
+    "quality_score",
+    "fingerprint",
+    "fingerprint_rolling",
+    "text_chunk",
+    "quality_repetition",
+    "quality_filter_apply",
+    "text_pack_tokens",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_production",
+    "dedup_minhash",
+    "dedup_simhash",
+    "eval_dedup_compare",
+    "dedup_containment",
+    "dedup_substring",
+    "text_normalize",
+    "agg_heavy_hitters",
+    "text_pmi_bigrams",
+]
+
+
 @pytest.mark.parametrize("name", NULL_TIER_QUERIES)
 def test_null_tier_oracle_parity(spark, null_sf, name):
     _oracle_compare(spark, null_sf, name)
@@ -200,6 +254,11 @@ def test_media_null_tier_oracle_parity(spark, media_null_sf, name):
 @pytest.mark.parametrize("name", CONST_TIER_QUERIES)
 def test_const_tier_oracle_parity(spark, const_sf, name):
     _oracle_compare(spark, const_sf, name)
+
+
+@pytest.mark.parametrize("name", WS_TIER_QUERIES)
+def test_ws_tier_oracle_parity(spark, ws_sf, name):
+    _oracle_compare(spark, ws_sf, name)
 
 
 def test_word_shingles_null_text_yields_null_array(spark):

@@ -273,3 +273,56 @@ def test_stream_readers_take_the_table_schema():
             ):
                 offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"readStream.schema without sources.SCHEMAS: {offenders}"
+
+
+# String constants outside functions/text.py that may still spell the
+# tokenization rule, each with its count: an oracle literal that would
+# change bytes if it interpolated the shared fragments.
+TOKENIZATION_ALLOWED = {
+    # text_ngram_novelty's oracle spells [ \t\n\r\f] where DUCK_NORM
+    # says \s; the two match the same characters in RE2
+    "operators/corpusprep.py": 1,
+}
+
+
+def _code_strings(tree):
+    """The tree's string constants, docstrings excluded."""
+    import ast
+
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and id(node) not in docs:
+            yield node
+
+
+def test_tokenization_rule_only_in_functions_text():
+    """functions/text.py states the tokenization rule once for Spark,
+    DuckDB and Python. Java's and Python's regex \\s match \\x0B and
+    RE2's does not, so a module that spells its own \\s, its own
+    lower-and-collapse, or its own whitespace class drifts from the
+    oracles on control-character text."""
+    import re
+    from collections import Counter
+
+    spelled = re.compile(
+        r"\\[sS]"  # a regex whitespace class: \s or \S
+        r"|regexp_replace\(lower\("  # a private normalization
+        r"|\[\^?[^\]]*(\\t|\t)[^\]]*(\\f|\f)"  # a spelled-out whitespace class
+    )
+    found = Counter()
+    for rel, tree in _package_trees():
+        if rel == "functions/text.py" or rel.startswith("_vendor/"):
+            continue
+        for node in _code_strings(tree):
+            if spelled.search(node.value):
+                found[rel] += 1
+    assert found == Counter(TOKENIZATION_ALLOWED), (
+        f"tokenization spelled outside functions/text.py: {dict(found)}"
+    )
