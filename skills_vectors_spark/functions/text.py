@@ -14,6 +14,13 @@ run to ' ', trim ' ', split on ' '): as Column macros, as ``DUCK_*``
 oracle fragments, and as :func:`py_tokens` for Arrow passes. Whitespace
 is RE2's ``\\s``, ``[ \\t\\n\\r\\f]``; Java's and Python's ``\\s`` also
 match ``\\x0B``, so the Spark and Python sides spell the class out.
+
+Non-ASCII case mapping is a cross-engine boundary, documented rather
+than hidden. Spark (Java) and Python lower ``İ`` to ``i̇`` (i + U+0307)
+and a word-final ``Σ`` to ``ς``; DuckDB lowers them to ``i`` and ``σ``.
+Tokens, fingerprints and dedup keys of text holding such letters differ
+between a row and its oracle, so that text is outside the oracle
+parity contract. No corpus tier holds such letters.
 """
 
 from __future__ import annotations

@@ -1,20 +1,37 @@
-"""Vector-distance column macros built from Catalyst higher-order
-functions — pure JVM-side expressions, no UDFs.
+"""The vector distance rule, stated once for Spark and for DuckDB.
 
 Re-expresses the reference's distance math:
-  cosine  = dot(a,b)/(norm(a)*norm(b))   (/root/reference/skills_for_jobs.py:175-176)
-  L2      = Milvus metric_type "L2"       (/root/reference/load_skill_vectors_milvus.py:55-59)
+  cosine  = dot(a,b)/(norm(a)*norm(b))   (skills_for_jobs.py:175-176)
+  L2      = Milvus metric_type "L2"       (load_skill_vectors_milvus.py:55-59)
 
-All arithmetic is forced to double (testdata embeddings are float32)
-so results are bit-identical with a DuckDB oracle computing over
-DOUBLE[] — verified: `list_cosine_similarity(a::DOUBLE[], b::DOUBLE[])`
-matches this fold with maxdiff == 0.0 on the test corpus.
+The rule is one left fold over the element pairs in double precision:
+each pair maps to ``CAST(x AS DOUBLE) * CAST(y AS DOUBLE)`` (L2:
+``pow(x - y, 2)`` of the cast pair), the fold starts at ``0D`` and adds
+``acc + v`` in array order. A norm is ``sqrt`` of a vector's dot with
+itself and cosine divides the dot by ``nullif(norm * norm, 0D)``. The
+testdata embeddings are float32, so the casts are what make DuckDB's
+kernels over ``DOUBLE[]`` (``DUCK_COSINE``, ``DUCK_L2``, ``DUCK_NORM``)
+agree with these folds bit for bit on the test corpus.
 
-The fold is interpreted, not compiled: ArrayAggregate is
-CodegenFallback, so the Project holding it drops out of whole-stage
-codegen (no `*(n)` marker in an executed plan). There is still no
-Python boundary; all-pairs bulk work belongs to the BLAS kernels of
-operators/vector_blas.py.
+Every Spark macro is one SQL-text template under one ``F.expr``: the
+parser builds the whole expression tree in the JVM, so a macro costs
+about three py4j round trips. Built from pyspark Column lambdas, the
+same tree cost one round trip per node, 120-400 per macro. Macros take
+column names, backtick-quoted into the text; a caller that needs the
+rule inside its own SQL (a lambda over a literal array) takes the text
+from :func:`cosine_sql`. The fold is still interpreted, not compiled:
+ArrayAggregate is CodegenFallback, so the Project holding it drops out
+of whole-stage codegen. There is no Python boundary; all-pairs bulk
+work belongs to the BLAS kernels of operators/vector_blas.py.
+
+Zero norm is a cross-engine boundary, documented rather than hidden.
+Cosine is undefined for a zero vector, and under ANSI mode a bare
+division raises DIVIDE_BY_ZERO: one zero-norm row (a padding vector, a
+dead feature) would kill a whole similarity job. The nullif guard makes
+it one NULL score instead. DuckDB's ``list_cosine_similarity`` returns
+-1.0 there, so zero-norm rows are outside the oracle parity contract;
+the test corpus embeddings are non-zero by construction, and the NULL
+is pinned by a unit test.
 """
 
 from __future__ import annotations
@@ -22,71 +39,59 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# the fold over the element pairs of SQL operands {a} and {b}
+_FOLD = "aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0D, (acc, v) -> acc + v)"
+_PRODUCT = "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)"
+_SQUARED_DIFF = "pow(CAST(x AS DOUBLE) - CAST(y AS DOUBLE), 2)"
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+# DuckDB twins for oracle SQL, over operands {a} and {b}
+DUCK_COSINE = "list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])"
+DUCK_L2 = "list_distance({a}::DOUBLE[], {b}::DOUBLE[])"
+DUCK_NORM = "sqrt(list_inner_product({a}::DOUBLE[], {a}::DOUBLE[]))"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def _name(c: str) -> str:
+    return f"`{c}`"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return _FOLD.format(a=_name(a), b=_name(b), term=_PRODUCT)
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def cosine_sql(a: str, b: str, a_norm: str | None = None, b_norm: str | None = None) -> str:
+    """:func:`cosine_from_norms` as Spark SQL text. A name may also be
+    a lambda variable of the caller's own SQL."""
+    a_norm = _name(a_norm) if a_norm else _norm_sql(a)
+    b_norm = _name(b_norm) if b_norm else _norm_sql(b)
+    return f"{_dot_sql(a, b)} / nullif({a_norm} * {b_norm}, 0D)"
+
+
+def dot(a: str, b: str) -> Column:
     """Sequential left-fold dot product in double precision."""
-    a, b = _col(a), _col(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_dot_sql(a, b))
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(dot(a, a))
+def l2_norm(a: str) -> Column:
+    return F.expr(_norm_sql(a))
 
 
-def cosine_from_norms(
-    a: Column | str,
-    b: Column | str,
-    a_norm: Column | str | None = None,
-    b_norm: Column | str | None = None,
-) -> Column:
+def cosine_from_norms(a: str, b: str, a_norm: str | None = None, b_norm: str | None = None) -> Column:
     """Cosine similarity over supplied norms: one fold per pair. A
     pair-scoring join computes `l2_norm` once per row on each side,
     below the join, and passes the columns here; the result equals
     `cosine_sim` bit for bit (same folds, same operand order). A norm
-    left as None is folded here, per pair, after the dot product, so
-    `cosine_sim`'s plan keeps its lambda names too."""
-    ab = dot(a, b)
-    a_norm = l2_norm(a) if a_norm is None else _col(a_norm)
-    b_norm = l2_norm(b) if b_norm is None else _col(b_norm)
-    return ab / F.nullif(a_norm * b_norm, F.lit(0.0))
+    left as None is folded here, per pair, after the dot product."""
+    return F.expr(cosine_sql(a, b, a_norm, b_norm))
 
 
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; NULL when either vector has zero norm.
-
-    The nullif guard is load-bearing at scale: cosine is undefined
-    for a zero vector, and under ANSI mode the bare division RAISES
-    DIVIDE_BY_ZERO — one zero-norm embedding row (a padding vector, a
-    dead feature) would kill an entire 100 TB similarity job instead
-    of yielding one NULL score. Cross-engine boundary, documented
-    rather than hidden: DuckDB's list_cosine_similarity kernel clamps
-    the zero-vector case to -1.0, so zero-norm rows are outside the
-    oracle parity contract (the test corpus embeddings are non-zero
-    by construction; the kernel's NULL is pinned by a unit test)."""
+def cosine_sim(a: str, b: str) -> Column:
+    """Cosine similarity; NULL when either vector has zero norm."""
     return cosine_from_norms(a, b)
 
 
-def l2_dist(a: Column | str, b: Column | str) -> Column:
-    a, b = _col(a), _col(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: F.pow(x.cast("double") - y.cast("double"), F.lit(2))),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-# DuckDB-side equivalents for oracle SQL strings. DuckDB's list_*
-# kernels over DOUBLE[] reproduce the Spark folds exactly (verified
-# empirically, maxdiff 0.0), so oracles can stay terse.
-DUCK_COSINE = "list_cosine_similarity({a}::DOUBLE[], {b}::DOUBLE[])"
-DUCK_L2 = "list_distance({a}::DOUBLE[], {b}::DOUBLE[])"
+def l2_dist(a: str, b: str) -> Column:
+    return F.expr(f"sqrt({_FOLD.format(a=_name(a), b=_name(b), term=_SQUARED_DIFF)})")

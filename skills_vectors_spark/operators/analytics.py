@@ -542,7 +542,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE exchange on user_id feeds the ordered window;
     collect_list over the K-row frame is constant state per row; the
-    weighted fold is a JVM higher-order function (zip_with/aggregate,
+    weighted fold is a JVM higher-order function (transform/aggregate,
     no Python). The oracle expresses the same frame as a bounded
     row_number self-join — identical weights, identical closed-form
     denominator."""
@@ -564,8 +564,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vals = ev.withColumn("vals", F.collect_list("value").over(w))
     num = F.expr(
-        f"aggregate(zip_with(vals, sequence(size(vals) - 1, 0, -1),"
-        f" (v, e) -> v * power({EWMA_DECAY!r}, e)),"
+        f"aggregate(transform(vals, (v, i) -> v * power({EWMA_DECAY!r}, size(vals) - 1 - i)),"
         f" cast(0 as double), (acc, x) -> acc + x)"
     )
     den = (1 - F.pow(F.lit(EWMA_DECAY), F.size("vals"))) / (1 - EWMA_DECAY)

@@ -37,7 +37,7 @@ from skills_vectors_spark.functions.text import (
     tokens as tokens_col,
     word_shingles,
 )
-from skills_vectors_spark.functions.vector import cosine_sim
+from skills_vectors_spark.functions.vector import DUCK_COSINE, dot, l2_norm
 from skills_vectors_spark.registry import register
 
 # word 3-shingles in DuckDB: list slicing is inclusive, t[i:i+2] = 3 tokens
@@ -1026,19 +1026,19 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- embedding-cosine near-dup
 
 COSINE_DUP_THRESHOLD = 0.4
-
-
-@register(
-    "dedup_embed_cosine",
-    f"""
+_COS_AB = DUCK_COSINE.format(a="a.embedding", b="b.embedding")
+# the all-pairs oracle, shared by the BLAS twin (vector_blas.py)
+COSINE_DUP_SQL = f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) * 1e6)
+           round({_COS_AB} * 1e6)
              / 1e6 AS cos_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
+    WHERE {_COS_AB}
           >= {COSINE_DUP_THRESHOLD}
-    """,
-)
+    """
+
+
+@register("dedup_embed_cosine", COSINE_DUP_SQL)
 def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact all-pairs formulation
     (the oracle tier; ann_lsh in operators/ann.py is the bucketed
@@ -1051,8 +1051,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is an INTERPRETED expression (ArrayAggregate is
     CodegenFallback), which is why the BLAS twin exists for bulk
     workloads — this form's value is being oracle-identical."""
-    from skills_vectors_spark.functions.vector import l2_norm
-
     # load_spread matters doubly here: the theta-join plans as a
     # BroadcastNestedLoopJoin, and a one-row-group scan would leave
     # the STREAMED side a single partition — the entire O(n^2) pair
@@ -1072,8 +1070,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     a, b = unit("id_a", "ua"), unit("id_b", "ub")
-    from skills_vectors_spark.functions.vector import dot
-
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos_raw", dot("ua", "ub"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import sources
+from skills_vectors_spark.functions.vector import DUCK_COSINE, l2_norm
 from skills_vectors_spark.pipeline import search_exact
 from skills_vectors_spark.registry import register
 
@@ -188,16 +189,11 @@ def embed_mock(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves flow through `embed_documents`, which downstream
     pipelines (embed_knn_pipeline) consume directly."""
     e = embed_documents(sources.load(spark, sf_dir, "documents"))
-    norm = F.sqrt(
-        F.aggregate(
-            "embedding", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-        )
-    )
     return e.select(
         "doc_id",
         "provider",
         F.size("embedding").alias("dim"),
-        (F.abs(norm - 1.0) < 1e-3).alias("unit_norm_ok"),
+        (F.abs(l2_norm("embedding") - 1.0) < 1e-3).alias("unit_norm_ok"),
     )
 
 
@@ -225,7 +221,7 @@ _SQLHASH_COORD = (
     ),
     scored AS (
       SELECT q.doc_id AS q_id, c.doc_id AS c_id,
-             list_cosine_similarity(q.v::DOUBLE[], c.v::DOUBLE[]) AS score
+             {DUCK_COSINE.format(a="q.v", b="c.v")} AS score
       FROM emb q JOIN emb c ON q.doc_id <> c.doc_id
       WHERE q.doc_id < 10
     ),

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
-from skills_vectors_spark.functions.vector import cosine_sim, l2_dist
+from skills_vectors_spark.functions.vector import DUCK_COSINE, DUCK_L2, cosine_sim, l2_dist
 from skills_vectors_spark.registry import register
 
 
@@ -179,9 +179,9 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_cosine",
-    """
+    f"""
     SELECT a.vec_id,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
+           round({DUCK_COSINE.format(a="a.embedding", b="b.embedding")}, 6)
              AS cos_next
     FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
     """,
@@ -199,9 +199,9 @@ def fn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_l2",
-    """
+    f"""
     SELECT a.vec_id,
-           round(list_distance(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS l2_next
+           round({DUCK_L2.format(a="a.embedding", b="b.embedding")}, 6) AS l2_next
     FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
     """,
 )

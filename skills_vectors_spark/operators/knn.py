@@ -11,10 +11,11 @@ Scale design (100 TB): every top-K here is pipeline.search_exact —
 the query set is the SMALL side, broadcast against the spread corpus;
 the per-query top-K is a row_number window that Spark >=3.5 rewrites
 into WindowGroupLimit, so shuffle volume is O(n_queries * K *
-n_partitions), independent of corpus size. Distance math is the
-functions/vector.py folds, JVM-side but interpreted (ArrayAggregate
-is CodegenFallback) — no Python boundary. Recall counting is
-pipeline.evaluate.
+n_partitions), independent of corpus size. Distance math is
+functions/vector.py on both sides: its SQL-text folds score the pairs
+(JVM-side, no Python boundary, interpreted because ArrayAggregate is
+CodegenFallback) and its DUCK_COSINE / DUCK_L2 twins score the
+oracles. Recall counting is pipeline.evaluate.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skills_vectors_spark import cache, sources
+from skills_vectors_spark.functions.vector import DUCK_COSINE, DUCK_L2
 from skills_vectors_spark.pipeline import evaluate, search_exact
 from skills_vectors_spark.registry import register
 
@@ -66,10 +68,10 @@ WITH scored AS (
 
 def _ranked_sql(metric: str, with_label: bool = False, n_queries: int = N_QUERIES) -> str:
     if metric == "cosine":
-        expr = "list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[])"
+        expr = DUCK_COSINE.format(a="q.embedding", b="c.embedding")
         direction = "DESC"
     else:
-        expr = "list_distance(q.embedding::DOUBLE[], c.embedding::DOUBLE[])"
+        expr = DUCK_L2.format(a="q.embedding", b="c.embedding")
         direction = "ASC"
     return _RANKED_SQL.format(
         metric_expr=expr,
@@ -201,7 +203,7 @@ FILTER_LABEL = 1  # metadata predicate for the filtered search
     f"""
     WITH scored AS (
       SELECT q.vec_id AS q_id, c.vec_id AS c_id, c.label,
-             list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS score
+             {DUCK_COSINE.format(a="q.embedding", b="c.embedding")} AS score
       FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
       WHERE q.vec_id < {N_QUERIES} AND c.label = {FILTER_LABEL}
     ), ranked AS (

@@ -33,8 +33,9 @@ from pyspark.sql.window import Window
 
 from skills_vectors_spark import sources
 from skills_vectors_spark.functions.text import DUCK_PUNCT_RATIO, DUCK_TOKENS, tokens
+from skills_vectors_spark.functions.vector import DUCK_NORM, l2_norm
 from skills_vectors_spark.scratch import scratch as _scratch
-from skills_vectors_spark.operators.textstats import _d_stop_hits, quality_score
+from skills_vectors_spark.operators.textstats import _d_stop_hits, quality_features
 from skills_vectors_spark.registry import register
 
 BAND = 100  # acctbal band half-width; also the bin width
@@ -300,20 +301,15 @@ def quality_filter_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     clears a threshold, whose language is identified, and whose length
     sits inside the training band — the standard pretraining-corpus
     filter (quality_score made actionable, like dedup_apply is for the
-    dedup family). The score is recomputed inline from the same
-    expressions as quality_score, so the whole filter is one
-    codegen'd scan — no join against a materialized score table."""
-    scored = quality_score(spark, sf_dir).select("doc_id", "quality")
-    docs = sources.load(spark, sf_dir, "documents")
-    return (
-        docs.join(scored, "doc_id")
-        .filter(
-            (F.col("quality") >= _QUALITY_MIN)
-            & (F.col("lang") != "und")
-            & F.col("n_chars").between(_CHARS_LO, _CHARS_HI)
-        )
-        .select("doc_id", "lang", "source", "quality")
+    dedup family). The score is quality_score's feature projection
+    over the same documents rows that carry lang, source and n_chars,
+    so the whole filter is one scan with no join, and only the rows
+    inside the language and length band are scored."""
+    docs = sources.load_spread(spark, sf_dir, "documents").filter(
+        (F.col("lang") != "und") & F.col("n_chars").between(_CHARS_LO, _CHARS_HI)
     )
+    feats = quality_features(docs, "lang", "source")
+    return feats.select("doc_id", "lang", "source", "quality").filter(F.col("quality") >= _QUALITY_MIN)
 
 
 @register(
@@ -592,9 +588,9 @@ NPY_SEED_MAX_ROWS = 1_000_000
 
 @register(
     "scan_npy",
-    """
+    f"""
     SELECT vec_id, CAST(len(embedding) AS INT) AS dim,
-           round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) * 1e6)
+           round({DUCK_NORM.format(a="embedding")} * 1e6)
              / 1e6 AS norm
     FROM embeddings
     """,
@@ -640,8 +636,6 @@ def scan_npy(spark: SparkSession, sf_dir: str) -> DataFrame:
             else np.zeros((0, 0), dtype=np.float32)  # empty-corpus fixture
         )
         np.save(path, arr)
-    from skills_vectors_spark.functions.vector import l2_norm
-
     # project to scalars for the value compare (the harness hashes
     # scalar columns): id + dimension + norm pin the round trip
     return (

@@ -175,27 +175,35 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring from length / punctuation / digit /
     stopword ratios — the standard pretraining-data quality heuristic
     family (north-star text analysis)."""
-    d = sources.load_spread(spark, sf_dir, "documents")
+    feats = quality_features(sources.load_spread(spark, sf_dir, "documents"))
+    r6 = [_r6(F.col(c)).alias(c) for c in ("len_score", "punct_ratio", "digit_ratio")]
+    return feats.select("doc_id", *r6, "quality")
+
+
+def quality_features(d: DataFrame, *keep: str) -> DataFrame:
+    """doc_id, the `keep` columns, quality_score's four features of the
+    documents frame `d` and its rounded `quality`."""
     n_tok = F.greatest(F.size(tokens("text")), F.lit(1)).cast("double")
     feats = d.select(
         "doc_id",
+        *keep,
         F.least(F.col("n_chars") / 500.0, F.lit(1.0)).alias("len_score"),
         punct_ratio("text").alias("punct_ratio"),
         digit_ratio("text").alias("digit_ratio"),
         (stopword_hits("text", "en").cast("double") / n_tok).alias("stop_ratio"),
     )
-    r6 = lambda c: F.round(c * 1e6) / 1e6  # noqa: E731
-    return feats.select(
-        "doc_id",
-        r6(F.col("len_score")).alias("len_score"),
-        r6(F.col("punct_ratio")).alias("punct_ratio"),
-        r6(F.col("digit_ratio")).alias("digit_ratio"),
-        r6(
+    return feats.withColumn(
+        "quality",
+        _r6(
             0.4 * F.col("len_score")
             + 0.3 * (1 - F.least(5 * F.col("punct_ratio"), F.lit(1.0)))
             + 0.3 * F.least(10 * F.col("stop_ratio"), F.lit(1.0))
-        ).alias("quality"),
+        ),
     )
+
+
+def _r6(c: Column) -> Column:
+    return F.round(c * 1e6) / 1e6
 
 
 @register(

@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from skills_vectors_spark import cache, sources
-from skills_vectors_spark.operators.dedup import COSINE_DUP_THRESHOLD
+from skills_vectors_spark.functions.vector import DUCK_COSINE
+from skills_vectors_spark.operators.dedup import COSINE_DUP_SQL, COSINE_DUP_THRESHOLD
 from skills_vectors_spark.registry import register
 
 TOPK_K = 5
@@ -129,17 +130,7 @@ _PAIR_SCHEMA = T.StructType(
 )
 
 
-@register(
-    "dedup_embed_cosine_blas",
-    f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) * 1e6)
-             / 1e6 AS cos_sim
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-          >= {COSINE_DUP_THRESHOLD}
-    """,
-)
+@register("dedup_embed_cosine_blas", COSINE_DUP_SQL)
 def dedup_embed_cosine_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs embedding-cosine near-dup pairs via broadcast GEMM —
     same semantics and oracle as dedup_embed_cosine, ~30x faster on
@@ -176,7 +167,7 @@ _TOPK_SCHEMA = T.StructType(
     f"""
     WITH scored AS (
       SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-             list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS score
+             {DUCK_COSINE.format(a="q.embedding", b="c.embedding")} AS score
       FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
     ), ranked AS (
       SELECT q_id, c_id, score,

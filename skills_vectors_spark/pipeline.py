@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from skills_vectors_spark import sources
 from skills_vectors_spark.functions.text import content_md5, normalize_text, punct_ratio, tokens
-from skills_vectors_spark.functions.vector import cosine_from_norms, l2_dist, l2_norm
+from skills_vectors_spark.functions.vector import cosine_from_norms, cosine_sql, l2_dist, l2_norm
 
 
 def embed(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -217,17 +217,13 @@ def _probes(qv: DataFrame, centers: list[list[float]]) -> DataFrame:
     cell and NULL scores (zero norm) last, as a NULL field sorts low."""
     from skills_vectors_spark.operators.ann import N_PROBE
 
-    # one JSON string the optimizer folds to an array literal: 7 py4j calls, not
-    # ~130 per center; shortest-repr floats parse back to the same doubles
-    ranked = F.sort_array(
-        F.transform(
-            F.from_json(F.lit(json.dumps(centers)), "array<array<double>>"),
-            lambda c, i: F.struct(
-                cosine_from_norms("q_emb", c, "q_norm").alias("score"), (-i).alias("neg_cell")
-            ),
-        ),
-        asc=False,
+    # one JSON string the optimizer folds to an array literal, not ~130 py4j
+    # calls per center; shortest-repr floats parse back to the same doubles
+    scores = F.expr(
+        f"transform(from_json('{json.dumps(centers)}', 'array<array<double>>'),"
+        f" (c, i) -> named_struct('score', {cosine_sql('q_emb', 'c', 'q_norm')}, 'neg_cell', -i))"
     )
+    ranked = F.sort_array(scores, asc=False)
     probes = qv.select("*", F.explode(F.slice(ranked, 1, N_PROBE)).alias("p"))
     return probes.select(*qv.columns, (-F.col("p.neg_cell")).alias("cell"))
 

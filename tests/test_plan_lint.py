@@ -326,3 +326,44 @@ def test_tokenization_rule_only_in_functions_text():
     assert found == Counter(TOKENIZATION_ALLOWED), (
         f"tokenization spelled outside functions/text.py: {dict(found)}"
     )
+
+
+# Oracle literals outside functions/vector.py that spell the distance
+# rule themselves, each because interpolating DUCK_COSINE would change
+# their bytes.
+DISTANCE_ALLOWED = {
+    # eval_recall_lsh's LSH replica re-ranks its vecs CTE, already DOUBLE[]
+    ("operators/ann.py", "list_cosine_similarity(qv.emb, cv.emb)"),
+    # the same replica's gold ranking, over the same pre-cast vecs
+    ("operators/ann.py", "list_cosine_similarity(q.emb, c.emb)"),
+    # search_hybrid_rrf's oracle wraps the call across two lines
+    (
+        "operators/relevance.py",
+        "list_cosine_similarity(e.embedding::DOUBLE[],\n"
+        "                                                 qv.embedding::DOUBLE[])",
+    ),
+}
+
+
+def test_distance_rule_only_in_functions_vector():
+    """functions/vector.py states the distance rule once, as the Spark
+    folds and as their DuckDB twins (DUCK_COSINE, DUCK_L2, DUCK_NORM).
+    A module that spells its own list_* kernel call or zip_with fold can
+    drift from the other engine's casts or fold order."""
+    import ast
+    import re
+
+    call = re.compile(r"(list_cosine_similarity|list_distance|list_inner_product|zip_with)\([^)]*\)?")
+    found = set()
+    for rel, tree in _package_trees():
+        if rel == "functions/vector.py" or rel.startswith("_vendor/"):
+            continue
+        for node in _code_strings(tree):
+            found.update((rel, m.group(0)) for m in call.finditer(node.value))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "zip_with":
+                found.add((rel, f"F.zip_with at line {node.lineno}"))
+    assert found == DISTANCE_ALLOWED, (
+        "distance rule spelled outside functions/vector.py: "
+        f"{sorted(found - DISTANCE_ALLOWED)}; allowlisted but gone: {sorted(DISTANCE_ALLOWED - found)}"
+    )

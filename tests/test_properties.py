@@ -147,6 +147,35 @@ def test_cosine_from_norms_equals_cosine_sim_bitwise(spark):
     assert [r.per_pair for r in got[-3:]] == [None, None, None]
 
 
+def test_vector_macros_build_in_constant_jvm_calls(spark, monkeypatch):
+    """Each vector macro is one SQL text the JVM parses in one call, so
+    building it costs a few py4j round trips, not one per node of the
+    fold (120-400 when the fold was built from Column lambdas)."""
+    from skills_vectors_spark.functions import vector
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    builders = {
+        "dot": lambda: vector.dot("a", "b"),
+        "l2_norm": lambda: vector.l2_norm("a"),
+        "l2_dist": lambda: vector.l2_dist("a", "b"),
+        "cosine_from_norms": lambda: vector.cosine_from_norms("a", "b", "na", "nb"),
+        "cosine_sim": lambda: vector.cosine_sim("a", "b"),
+    }
+    counts = {}
+    for name, build in builders.items():
+        calls.clear()
+        build()
+        counts[name] = len(calls)
+    assert all(0 < n <= 5 for n in counts.values()), counts
+
+
 def test_fn_cosine_plan_is_the_per_pair_expression(spark, sf_dir):
     """cosine_sim keeps its expression tree: fn_cosine plans exactly as
     the inline dot / nullif(norm * norm) form. Expression ids, plan ids

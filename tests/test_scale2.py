@@ -96,6 +96,16 @@ def test_quality_filter_apply_subset_and_thresholds(spark, sf_dir):
     assert kept.count() < n_docs, "filter must drop something"
 
 
+def test_quality_filter_apply_is_one_scan_without_a_join(spark, sf_dir):
+    """The score is projected over the same documents rows the filter
+    keeps: one scan, no join back to a score table."""
+    from skills_vectors_spark.plans import physical_plan
+
+    plan = physical_plan(scale2.quality_filter_apply(spark, sf_dir))
+    assert plan.count("Scan parquet") == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_fn_url_roundtrip(spark, sf_dir):
     rows = scale2.fn_url(spark, sf_dir).collect()
     for r in rows[:20]:
