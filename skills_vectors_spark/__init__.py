@@ -18,3 +18,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from skills_vectors_spark import deploy as _deploy
+
+_deploy.reread_changed_zips_only()

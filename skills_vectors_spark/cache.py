@@ -12,9 +12,9 @@ bindings. The kind fixes the entry's lifetime, so the call site that
 picks a kind also picks how long the entry lives:
 
 - **Plan entries** (``PLAN_KINDS``: lazy ``sources.load`` plans, temp
-  view bindings, spread decisions, checks of the SparkContext's conf)
-  hold what Spark would answer the same way at any time. They live as
-  long as the session.
+  view bindings, spread decisions, checks of the SparkContext's conf,
+  ``session.scoped`` clones) hold what Spark would answer the same way
+  at any time. They live as long as the session.
 - **Result entries** (every other kind) hold anything that ran a job:
   persisted frames (``cached_df``, kind ``"df"``), the ANN indexes
   (with their trained IVF centroids and PQ codebooks), the PCA basis
@@ -51,7 +51,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-PLAN_KINDS = frozenset({"load", "view", "spread", "conf"})
+PLAN_KINDS = frozenset({"load", "view", "spread", "conf", "clone"})
 
 _ATTR = "_svs_state"
 _LOCK = threading.Lock()

@@ -24,6 +24,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from skills_vectors_spark import cache
+
 # Entries of Spark's codegen class cache. Distinct classes one pass
 # compiles, counted by CodegenMetrics on a 4-core host: perfbench's 14
 # query_mix rows at sf0.01 126 and all 189 registered rows at sf0.01
@@ -80,11 +82,26 @@ def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     SparkContext and cache manager shared) with ``conf`` set on the
     clone only. A session is shared by every query planned on it, so
     an operator that needs other settings plans on a clone; this is
-    the package's one conf write."""
-    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    for key, value in conf.items():
-        clone.conf.set(key, value)
-    return clone
+    the package's one conf write.
+
+    There is one clone per (session, session conf, conf), a plan entry
+    of ``cache``: every clone registers a streaming listener on the
+    SparkContext's listener bus for as long as the context lives, so a
+    clone per call would grow the bus with every stream drained. A
+    clone copies the session's conf when it is made, so the key holds
+    that conf too, and a caller that changes it gets a new clone. The
+    temp views are those of the first call; callers hand the clone
+    analyzed plans (``rebind``) or file reads, never view names of
+    ``spark``."""
+
+    def clone() -> SparkSession:
+        s = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        for key, value in conf.items():
+            s.conf.set(key, value)
+        return s
+
+    own = tuple(sorted(spark.conf.getAll.items()))
+    return cache.memo(spark, ("clone", tuple(sorted(conf.items())), own), clone)
 
 
 def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -87,7 +87,9 @@ def drain(
     conf when it starts, so it starts on a ``session.scoped`` clone of
     ``df``'s session carrying ``STATE_PARTITIONS`` (few state stores
     for a small stream) plus ``conf``; the caller's session is never
-    written."""
+    written. The clone is reused by every drain with the same conf;
+    each query still leaves one listener on the SparkContext's bus,
+    from the session ``StreamExecution`` clones for its run."""
     clone = session.scoped(df.sparkSession, {**STATE_PARTITIONS, **(conf or {})})
     q = sink(session.rebind(df, clone).writeStream).start()
     try:
@@ -102,8 +104,9 @@ def run_to_completion(
 ) -> DataFrame:
     """``drain`` a streaming aggregation into a memory sink; return the
     final result as a batch DataFrame of ``agg``'s session. The sink's
-    table is a temp view of ``drain``'s clone, rebound here, so the
-    caller's catalog never holds it.
+    table is a temp view of ``drain``'s clone, rebound here and then
+    dropped, so neither the caller's catalog nor the reused clone's
+    holds it.
 
     One retry covers one TRANSIENT failure: Spark gives a freshly
     spawned Python worker a hardcoded 10 s to connect back, which the
@@ -125,7 +128,9 @@ def run_to_completion(
             logging.getLogger(__name__).warning("retrying a transient stream failure: %s", exc)
             cache.tally(spark, "stream", "retries")
     clone = SparkSession(spark.sparkContext, q._jsq.sparkSession())
-    return session.rebind(clone.table(name), spark)
+    out = session.rebind(clone.table(name), spark)
+    clone.catalog.dropTempView(name)
+    return out
 
 
 def _last_emission(out: DataFrame, n_col: str) -> DataFrame:
